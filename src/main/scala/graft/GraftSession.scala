@@ -29,6 +29,18 @@ object GraftSession {
       // Measured on the 12 join-heavy tail queries at sf0.1: −4.5% total,
       // no per-query regression outside noise (OPTIMIZATION_r15.md).
       .config("spark.sql.join.preferSortMergeJoin", "false")
+      // Spark keeps generated classes in ONE per-JVM cache of 100 entries
+      // (4 LRU segments of ~25); a curate pass (dedup, quality gate, KN
+      // perplexity, export) needs ~70, so they evicted each other and every
+      // pass recompiled ~55 classes and re-JITted them. Static: it must be
+      // set before the first compile, i.e. here.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // The cache is keyed by source text, and a whole-stage class's name
+      // carries its stage id, which AQE assigns in the order concurrent
+      // stages finish; with the id in the name, repeats of the KN queries
+      // still recompiled 2-8 classes a round. Stack traces then name
+      // `GeneratedIterator`.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // the synthetic events table stores ns timestamps; read as long and
       // convert in sources.Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -2051,50 +2051,33 @@ object TextAnalysis {
     * w₁ backs off to P_cont alone; a document's first token scores
     * P_cont.
     *
-    * Scale shape: bigrams come from slice+zip of the per-doc token ARRAY
-    * — a pure map-side projection, no per-doc window, no shuffle before
-    * the model aggregates; the three model tables (bigram, context,
-    * continuation) broadcast into the scoring stream; per-token log
-    * terms quantize to 1e6 longs (the shared perplexity discipline), so
-    * the whole readout replays in SQL. */
+    * Scale shape: both sides tokenize once into [[bigramTerms]], one
+    * codegen'd posexplode of the per-doc token ARRAY — a pure map-side
+    * projection, no per-doc window, no union, no shuffle before the model
+    * aggregates; the three model tables (bigram, context, continuation)
+    * broadcast into the scoring stream; per-token log terms quantize to
+    * 1e6 longs (the shared perplexity discipline), so the whole readout
+    * replays in SQL. */
   def knBigramPerplexity(
       df: DataFrame,
       idCol: String,
       textCol: String,
       ref: DataFrame,
       discount: Double = 0.75,
-      minLen: Int = 1,
-      broadcastModel: Boolean = true): DataFrame = {
+      minLen: Int = 1): DataFrame = {
     require(discount > 0 && discount < 1, s"discount must be in (0,1), got $discount")
     require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    def withToks(d: DataFrame, cols: Seq[Column]): DataFrame =
-      d.select(cols :+ regexp_extract_all(lower(col(textCol)),
-        lit(s"[a-z0-9]{$minLen,}"), lit(0)).as("__toks"): _*)
-    def bigramRows(d: DataFrame, cols: Seq[Column]): DataFrame =
-      withToks(d, cols)
-        .filter(size(col("__toks")) >= 2)
-        .select(cols :+ explode(zip_with(
-          slice(col("__toks"), lit(1), size(col("__toks")) - 1),
-          slice(col("__toks"), lit(2), size(col("__toks")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"): _*)
-        .select(cols :+ col("__bg.w1").as("__w1") :+ col("__bg.w2").as("__w2"): _*)
-    val big = bigramRows(ref.select(col(textCol)), Nil)
+    val big = bigramTerms(ref.select(col(textCol)), Nil, textCol, minLen)
+      .filter(col("__w1").isNotNull)
       .groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12"))
     val ctx = big.groupBy(col("__w1"))
       .agg(sum(col("__c12")).as("__c1"), count(lit(1)).as("__n1l"))
     val cont = big.groupBy(col("__w2")).agg(count(lit(1)).as("__n1r"))
     val btot = big.agg(count(lit(1)).as("__b"))
-    val t = withToks(df.select(col(idCol), col(textCol)), Seq(col(idCol)))
-    val firsts = t.filter(size(col("__toks")) >= 1)
-      .select(col(idCol), lit(null).cast("string").as("__w1"),
-        element_at(col("__toks"), 1).as("__w2"))
-    val terms = firsts.unionByName(
-      bigramRows(df.select(col(idCol), col(textCol)), Seq(col(idCol))))
-    def bc(m: DataFrame) = if (broadcastModel) broadcast(m) else m
-    val joined = terms
-      .join(bc(big), Seq("__w1", "__w2"), "left")
-      .join(bc(ctx), Seq("__w1"), "left")
-      .join(bc(cont), Seq("__w2"), "left")
+    val joined = bigramTerms(df.select(col(idCol), col(textCol)), Seq(col(idCol)), textCol, minLen)
+      .join(broadcast(big), Seq("__w1", "__w2"), "left")
+      .join(broadcast(ctx), Seq("__w1"), "left")
+      .join(broadcast(cont), Seq("__w2"), "left")
       .crossJoin(broadcast(btot))
     val pcont = coalesce(col("__n1r"), lit(1L)).cast("double") /
       (col("__b") + 1).cast("double")
@@ -2104,15 +2087,36 @@ object TextAnalysis {
         greatest(coalesce(col("__c12"), lit(0L)).cast("double") - lit(discount),
           lit(0.0)) / c1d +
           lit(discount) * col("__n1l").cast("double") / c1d * pcont)
-    val ce = round(-col("__sq").cast("double") / lit(1e6) /
-      col("n_tokens").cast("double"), 6)
-    joined.select(col(idCol), floor(log(p) * 1e6 + 0.5).cast("long").as("__q"))
+    meanNegLog(joined, idCol, p)
+      .select(col(idCol), col("n_tokens"),
+        col("__ce").as("cross_entropy"),
+        round(exp(col("__ce")), 6).as("perplexity"))
+  }
+
+  /** The bigram scorers' term stream: one row per `[a-z0-9]{minLen,}` token
+    * of lower-cased `textCol`, carrying `cols`, with `__w2` the token and
+    * `__w1` the token before it (NULL for a document's first token). One
+    * posexplode of the token array, so the whole stream is one codegen'd
+    * map-side pass; the reference's bigrams are its rows with `__w1` set.
+    * Docs with no token (empty, whitespace-only, NULL text) yield no rows. */
+  private def bigramTerms(d: DataFrame, cols: Seq[Column], textCol: String,
+      minLen: Int): DataFrame =
+    d.select(cols :+ regexp_extract_all(lower(col(textCol)),
+        lit(s"[a-z0-9]{$minLen,}"), lit(0)).as("__toks"): _*)
+      .select(cols :+ col("__toks") :+ posexplode(col("__toks")).as(Seq("__p", "__w2")): _*)
+      .select(cols :+ when(col("__p") > 0, element_at(col("__toks"), col("__p"))).as("__w1")
+        :+ col("__w2"): _*)
+
+  /** Per-doc (idCol, n_tokens, __ce): `__ce` is the mean negative log of
+    * the per-term probability `p`, each log term quantized to a 1e6 long
+    * first, so the sum is exact and partition-independent. */
+  private def meanNegLog(terms: DataFrame, idCol: String, p: Column): DataFrame =
+    terms.select(col(idCol), floor(log(p) * 1e6 + 0.5).cast("long").as("__q"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"), sum(col("__q")).as("__sq"))
       .select(col(idCol), col("n_tokens"),
-        ce.as("cross_entropy"),
-        round(exp(ce), 6).as("perplexity"))
-  }
+        round(-col("__sq").cast("double") / lit(1e6) /
+          col("n_tokens").cast("double"), 6).as("__ce"))
 
 
   /** ROUGE-N (Lin 2004) per candidate/reference pair — the recall-oriented
@@ -2404,13 +2408,13 @@ object TextAnalysis {
     * a raw count, so the model builds in ONE partial-agg pass and merges
     * trivially, which is exactly why it beat Kneser–Ney at web scale
     * (quality converges with corpus size while costing a fraction). The
-    * inexpensive sibling of [[knBigramPerplexity]] on the same bigram
-    * machinery: map-side slice+zip bigrams, broadcast count tables,
-    * 1e6-quantized log terms. Scores are NOT probabilities (the paper
-    * uses S, not P) — the readout is the mean negative log score, lower =
-    * more in-model. Out-of-vocabulary w₂ scores α/N (one pseudo-count,
-    * pinned — the paper's web-scale setting never meets an unseen
-    * unigram); first tokens score the unigram path.
+    * inexpensive sibling of [[knBigramPerplexity]] on the same term
+    * stream ([[bigramTerms]]: one codegen'd posexplode per side), with
+    * broadcast count tables and 1e6-quantized log terms. Scores are NOT
+    * probabilities (the paper uses S, not P) — the readout is the mean
+    * negative log score, lower = more in-model. Out-of-vocabulary w₂
+    * scores α/N (one pseudo-count, pinned — the paper's web-scale setting
+    * never meets an unseen unigram); first tokens score the unigram path.
     *
     * Returns one row per doc: (idCol, n_tokens, mean_neg_log_score). */
   def stupidBackoffScore(
@@ -2421,32 +2425,14 @@ object TextAnalysis {
       alpha: Double = 0.4,
       minLen: Int = 1): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    def withToks(d: DataFrame, cols: Seq[Column]): DataFrame =
-      d.select(cols :+ regexp_extract_all(lower(col(textCol)),
-        lit(s"[a-z0-9]{$minLen,}"), lit(0)).as("__toks"): _*)
-    def bigramRows(d: DataFrame, cols: Seq[Column]): DataFrame =
-      withToks(d, cols)
-        .filter(size(col("__toks")) >= 2)
-        .select(cols :+ explode(zip_with(
-          slice(col("__toks"), lit(1), size(col("__toks")) - 1),
-          slice(col("__toks"), lit(2), size(col("__toks")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"): _*)
-        .select(cols :+ col("__bg.w1").as("__w1") :+ col("__bg.w2").as("__w2"): _*)
-    val uni = withToks(ref.select(col(textCol)), Nil)
-      .select(explode(col("__toks")).as("__w2"))
-      .groupBy(col("__w2")).agg(count(lit(1)).as("__c2"))
-    val big = bigramRows(ref.select(col(textCol)), Nil)
+    val refTerms = bigramTerms(ref.select(col(textCol)), Nil, textCol, minLen)
+    val uni = refTerms.groupBy(col("__w2")).agg(count(lit(1)).as("__c2"))
+    val big = refTerms.filter(col("__w1").isNotNull)
       .groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12"))
     val ntot = uni.agg(sum(col("__c2")).as("__nt"))
-    val t = withToks(df.select(col(idCol), col(textCol)), Seq(col(idCol)))
-    val firsts = t.filter(size(col("__toks")) >= 1)
-      .select(col(idCol), lit(null).cast("string").as("__w1"),
-        element_at(col("__toks"), 1).as("__w2"))
-    val terms = firsts.unionByName(
-      bigramRows(df.select(col(idCol), col(textCol)), Seq(col(idCol))))
-    val joined = terms
+    val joined = bigramTerms(df.select(col(idCol), col(textCol)), Seq(col(idCol)), textCol, minLen)
       .join(broadcast(big), Seq("__w1", "__w2"), "left")
-      .join(broadcast(uni.withColumnRenamed("__w2", "__w2")), Seq("__w2"), "left")
+      .join(broadcast(uni), Seq("__w2"), "left")
       .join(broadcast(uni.select(col("__w2").as("__w1"), col("__c2").as("__c1"))),
         Seq("__w1"), "left")
       .crossJoin(broadcast(ntot))
@@ -2455,12 +2441,7 @@ object TextAnalysis {
     val sc = when(col("__w1").isNotNull && col("__c12").isNotNull,
         col("__c12").cast("double") / col("__c1").cast("double"))
       .otherwise(sUni)
-    joined.select(col(idCol), floor(log(sc) * 1e6 + 0.5).cast("long").as("__q"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("__q")).as("__sq"))
-      .select(col(idCol), col("n_tokens"),
-        round(-col("__sq").cast("double") / lit(1e6) /
-          col("n_tokens").cast("double"), 6).as("mean_neg_log_score"))
+    meanNegLog(joined, idCol, sc).withColumnRenamed("__ce", "mean_neg_log_score")
   }
 
   /** Per-term BURSTINESS (Church & Gale 1995) — "does this word arrive in

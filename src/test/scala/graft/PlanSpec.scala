@@ -239,6 +239,16 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  test("KN scoring builds its term stream in one codegen'd pass — no zip_with, no Union") {
+    Seq("q_llm_pipeline5", "q_kn_perplexity").foreach { q =>
+      val p = plan(SparkEntry.queries(q)(spark, sf))
+      // zip_with and its lambda variables run interpreted (CodegenFallback)
+      assert(!p.contains("zip_with"), s"$q pairs tokens through zip_with:\n$p")
+      assert(!p.contains("Union"), s"$q unions first-token and bigram streams:\n$p")
+      assert(p.contains("posexplode"), s"$q expected the posexplode term stream:\n$p")
+    }
+  }
+
   test("boilerplate removal broadcasts the boilerplate-line set back onto the corpus") {
     val p = plan(SparkEntry.queries("q_boilerplate")(spark, sf))
     assert(p.contains("BroadcastHashJoin"), s"boilerplate set must broadcast:\n$p")

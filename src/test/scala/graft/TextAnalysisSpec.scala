@@ -477,6 +477,43 @@ class TextAnalysisSpec extends SparkSpec {
       out.map(_.getAs[Double]("cross_entropy")).toSeq)
   }
 
+  test("bigram scorers on degenerate input: one token, no token, bigram-free reference") {
+    def lq(p: Double) = math.floor(math.log(p) * 1e6 + 0.5)
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // ref "a b a c b c": five distinct bigrams (B = 5), left contexts
+    // N1+(•a) = 1, N1+(•b) = N1+(•c) = 2; unigrams a = b = c = 2, N = 6
+    val ref = Seq((10L, "a b a c b c")).toDF("id", "text")
+    // doc 1 is one token; docs 2..5 (empty, whitespace, NULL, no
+    // [a-z0-9] token) carry no term and are absent from the output
+    val df = Seq[(Long, Option[String])]((1L, Some("B!")), (2L, Some("")),
+      (3L, Some(" \t\n ")), (4L, None), (5L, Some("?! -- ..."))).toDF("id", "text")
+      .repartition(3)
+    val kn = TextAnalysis.knBigramPerplexity(df, "id", "text", ref).collect()
+    // the lone first token scores only its continuation P_cont(b) = 2/(B+1)
+    val ceKn = r6(-lq(2.0 / 6.0) / 1e6)
+    assert(kn.map(r => (r.getAs[Long]("id"), r.getAs[Long]("n_tokens"),
+      r.getAs[Double]("cross_entropy"))).toSeq == Seq((1L, 1L, ceKn)))
+    val sb = TextAnalysis.stupidBackoffScore(df, "id", "text", ref).collect()
+    // ... and under stupid backoff its unigram score alpha * c(b) / N
+    assert(sb.map(r => (r.getAs[Long]("id"), r.getAs[Long]("n_tokens"),
+      r.getAs[Double]("mean_neg_log_score"))).toSeq ==
+      Seq((1L, 1L, r6(-lq(0.4 * 2.0 / 6.0) / 1e6))))
+
+    // a reference of one-token docs has no bigram (B = 0): KN's P_cont is
+    // 1/(0+1) = 1 for every term, so any doc scores ce 0 and perplexity 1;
+    // stupid backoff scores every term by its unigram, 0.4 * 1/2 here
+    val flat = Seq((10L, "a"), (11L, "b")).toDF("id", "text")
+    val doc = Seq((1L, "a b z")).toDF("id", "text")
+    val k0 = TextAnalysis.knBigramPerplexity(doc, "id", "text", flat).head
+    assert(k0.getAs[Long]("n_tokens") == 3L)
+    assert(k0.getAs[Double]("cross_entropy") == 0.0)
+    assert(k0.getAs[Double]("perplexity") == 1.0)
+    val s0 = TextAnalysis.stupidBackoffScore(doc, "id", "text", flat).head
+    // a, b: 0.4 * 1/2; z is OOV: the pinned pseudo-count 0.4 * 1/2 too
+    assert(s0.getAs[Long]("n_tokens") == 3L)
+    assert(s0.getAs[Double]("mean_neg_log_score") == r6(-3 * lq(0.2) / 1e6 / 3.0))
+  }
+
   test("charEntropy: hand-computed entropy, uniform and single-char extremes") {
     import org.apache.spark.sql.Row
     def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
