@@ -39,11 +39,16 @@ object Bench {
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // None when the query throws: a failure gets no time
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }
     }
     def unloadState(): Unit =
       // Unload streaming state-store providers + maintenance thread between
@@ -58,24 +63,31 @@ object Bench {
     // unadjudicable — the spread column is what lets a reader separate a
     // regression from machine noise).
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    def record(name: String, t: Double): Unit =
-      samples(name) = samples.getOrElse(name, Vector.empty) :+ t
-    val firstPass = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    // One more sample of `name`. A query that throws is never timed: its
+    // earlier samples are dropped, it is not run again, and it is counted in
+    // `failed` instead of `value`, `queries` and `samples`.
+    def sample(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
+      if (failed(name)) None
+      else timeOne(name, fn) match {
+        case Some(t) => samples(name) = samples.getOrElse(name, Vector.empty) :+ t; Some(t)
+        case None => failed += name; samples -= name; None
+      }
+    val firstPass = queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       // best of 2 runs: a single run's number is dominated by whichever GC /
       // JIT pause lands on it; the min measures the plan, not the noise.
       // noop sink forces full evaluation of every column (count() would let
       // Spark prune the projections away).
-      val times = (1 to 2).map(_ => timeOne(name, fn))
+      val times = (1 to 2).flatMap(_ => sample(name, fn))
       // Outlier re-run: when the two runs disagree hard AND the query isn't
       // trivially fast, a GC/contention wave likely hit both measurements
       // differently — one more sample stops a phantom regression from
       // becoming the round's headline (r9: q_scorer_agreement 44.3s driver
       // vs 1.85s quiet).
-      val all = if (times.max / times.min.max(1e-9) > 3.0 && times.min > 1.0)
-        times :+ timeOne(name, fn) else times
-      all.foreach(record(name, _))
+      val all = if (times.size == 2 && times.max / times.min.max(1e-9) > 3.0 && times.min > 1.0)
+        times ++ sample(name, fn) else times
       unloadState()
-      name -> all.min
+      if (failed(name)) None else Some(name -> all.min)
     }
     // SUITE-END RE-MEASURE (r10 verdict task 4): under SUSTAINED machine
     // contention BOTH first-pass samples inflate together, so the >3x
@@ -88,13 +100,12 @@ object Bench {
       v > 1.0 && priors.get(k).exists(p => v > 3.0 * p.max(0.2))
     }.map(_._1).toSet ++
       firstPass.filter(_._2 > 2.0).sortBy(-_._2).take(12).map(_._1)
-    val results = firstPass.map { case (name, v) =>
+    val results = firstPass.flatMap { case (name, v) =>
       if (suspects(name)) {
-        val r = timeOne(name, queries(name))
-        record(name, r)
+        val r = sample(name, queries(name))
         unloadState()
-        name -> math.min(v, r)
-      } else name -> v
+        r.map(t => name -> math.min(v, t))
+      } else Some(name -> v)
     }
     val total = results.map(_._2).sum
     // Full per-query fidelity goes to a FILE: the driver keeps only the last
@@ -115,8 +126,10 @@ object Bench {
     // a reader of any BENCH_rNN never mistakes the step for a plan change.
     val rescoped =
       """{"q_pca":"r13: 8-dim k=3 fixed-schedule replay fit (was 64-dim k=8 pcaFit)","q_pca_ann":"r14: pinned 8-dim rotation + BIGINT recall audit (was 64-dim adaptive fit)","q_ann_ivf":"r13: formula-pinned centroids (was KMeans fit)","q_compression_ratio":"r13: doc_id < 24 zlib pins (was full corpus)"}"""
+    val failedNames = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    val failures = s""""n_failed":${failed.size},"failed":$failedNames"""
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"rescoped":$rescoped,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"rescoped":$rescoped,$failures,"sf":"$sfDir"}"""
     // A FILTERED run (SPARK_GRAFT_BENCH_ONLY) must not clobber the
     // committed full-suite file: its totals would poison the priors and
     // the round record. Write a side file instead.
@@ -130,7 +143,7 @@ object Bench {
     val budget = 1600
     val header =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"full":"$fullPath","queries":"""
-    val footer = s""","sf":"$sfDir"}"""
+    val footer = s""",$failures,"sf":"$sfDir"}"""
     var used = header.length + footer.length + 2 // braces of the dict
     val picked = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     results.sortBy(-_._2).foreach { case (k, v) =>

@@ -76,24 +76,6 @@ object VectorOps {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Same, for DoubleType arrays. */
-  def cosineSimD(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements()
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getDouble(i)
-      val y = b.getDouble(i)
-      dot += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   /** Rank of `v` in a SORTED double boundary array: the count of boundaries
     * strictly below `v`, by binary search — the quantile-bucket assignment
     * behind [[graft.operators.Sink.zOrderValue]]. A higher-order `aggregate`

@@ -132,12 +132,6 @@ package object functions {
     invokeVec("lttb", ArrayType(DoubleType, containsNull = false),
       Seq(points, threshold))
 
-  /** Standard base-32 geohash of (lat, lon) at `precision` characters —
-    * the prefix-bucketing spatial key (shared prefix ⟺ nearby cell). */
-  def geohash_encode(lat: Column, lon: Column, precision: Column): Column =
-    invokeOn(graft.operators.Spatial.getClass, "geohash", StringType,
-      Seq(lat.cast("double"), lon.cast("double"), precision.cast("int")))
-
   /** Header-level WAV introspection: struct(channels, sample_rate,
     * bits_per_sample, data_bytes), all -1 when the payload is not a
     * parseable RIFF/WAVE container. */
@@ -431,10 +425,6 @@ package object functions {
   def cosine_sim_float(a: Column, b: Column): Column =
     invokeVec("cosineSim", DoubleType, Seq(a, b))
 
-  /** Native one-pass cosine similarity for `array<double>` columns. */
-  def cosine_sim_double(a: Column, b: Column): Column =
-    invokeVec("cosineSimD", DoubleType, Seq(a, b))
-
   /** Native cosine between an `array<float>` vector and an `array<double>`
     * centroid — the l2_dist_sq mixed-type discipline (centroid doubles
     * never float-cast, so a SQL twin holding the same doubles agrees). */
@@ -514,10 +504,6 @@ package object functions {
     invokeOn(KllOps.getClass, "kllQuantiles", ArrayType(DoubleType),
       Seq(sketch, lit(probs.toArray)))
 
-  /** Exact stream length a binary KLL sketch has absorbed. */
-  def kll_n(sketch: Column): Column =
-    invokeOn(KllOps.getClass, "kllN", LongType, Seq(sketch))
-
   /** Gram/second-moment aggregate over an `array<float>` embedding column:
     * one `array<double>` of [n, sums, upper-tri products] per group — the
     * one-pass sufficient statistics for covariance/PCA ([[GramAgg]]). */
@@ -544,10 +530,6 @@ package object functions {
     * truth + eps·N w.h.p.). */
   def cms_estimate(sketch: Column, item: Column): Column =
     invokeOn(CmsOps.getClass, "cmsEstimate", LongType, Seq(sketch, item))
-
-  /** Exact number of occurrences a binary CMS has absorbed. */
-  def cms_total(sketch: Column): Column =
-    invokeOn(CmsOps.getClass, "cmsTotal", LongType, Seq(sketch))
 
   /** Join-size estimate from two same-shape CMS: min-row inner product —
     * upper bound on Σ_k f1(k)·f2(k), exact when some row is collision-free

@@ -24,8 +24,6 @@ object Skew {
 
   def sumOf(c: Column, name: String): TwoPhase = TwoPhase(name, sum(c), n => sum(col(n)))
   def countRows(name: String): TwoPhase = TwoPhase(name, count(lit(1)), n => sum(col(n)))
-  def minOf(c: Column, name: String): TwoPhase = TwoPhase(name, min(c), n => min(col(n)))
-  def maxOf(c: Column, name: String): TwoPhase = TwoPhase(name, max(c), n => max(col(n)))
 
   /** Two-phase aggregation: group by (keys + salt) first so a hot key's rows
     * spread over `numSalts` reducers, then merge the partials per key. The
