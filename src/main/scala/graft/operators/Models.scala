@@ -784,9 +784,8 @@ object Models {
     *
     * The (vocab × classes) model is built by crossing the bounded class
     * table with the vocabulary and coalescing absent counts to 0; it
-    * broadcasts into the token stream by default (`broadcastModel =
-    * false` to shuffle-join for n-gram-scale vocabs). One train shuffle,
-    * one per-(doc, class) aggregate; zero-token documents are absent.
+    * broadcasts into the token stream. One train shuffle, one per-(doc,
+    * class) aggregate; zero-token documents are absent.
     *
     * Output: (idCol, predicted). */
   def naiveBayesClassify(
@@ -796,11 +795,10 @@ object Models {
       train: DataFrame,
       classCol: String,
       addK: Double = 1.0,
-      minLen: Int = 1,
-      broadcastModel: Boolean = true): DataFrame = {
+      minLen: Int = 1): DataFrame = {
     val (model, oov, priors, ranked) = naiveBayesFit(train, textCol, classCol, addK, minLen)
     val scores = naiveBayesTokenScores(
-      df.select(col(idCol), col(textCol)), idCol, textCol, model, oov, minLen, broadcastModel)
+      df.select(col(idCol), col(textCol)), idCol, textCol, model, oov, minLen)
       .groupBy(col(idCol), col("__cls")).agg(sum(col("__q")).as("__sq"))
     naiveBayesArgmax(scores, idCol, priors, ranked)
   }
@@ -851,53 +849,28 @@ object Models {
   /** Stateless per-token class scores (idCol, __cls, __q) — the streaming
     * half: OOV tokens fall back to the per-class OOV row.
     *
-    * CONTRACT (r15 ADVICE): with `broadcastModel = true` the `model` must
-    * be a COMPLETE vocab × class grid — one row for every (token, class)
-    * combination, as [[naiveBayesFit]] emits. The fast path substitutes
-    * the per-class OOV score for ANY absent (token, class) pair; a
-    * partial grid (a known token missing some class rows) therefore
-    * scores those classes as OOV instead of failing. Pass
-    * `broadcastModel = false` for externally built partial-grid models —
-    * that path emits only the class rows present for a known token
-    * (pre-r14 split-and-union semantics). */
+    * CONTRACT: the `model` must be a COMPLETE vocab × class grid — one
+    * row for every (token, class) combination, as [[naiveBayesFit]]
+    * emits — and `oov` must hold one row per class. Every token fans out
+    * to every `oov` class and the per-class OOV score stands in for ANY
+    * absent (token, class) pair, so a partial grid (a known token missing
+    * some class rows) scores those classes as OOV instead of failing. */
   def naiveBayesTokenScores(
       df: DataFrame,
       idCol: String,
       textCol: String,
       model: DataFrame,
       oov: DataFrame,
-      minLen: Int = 1,
-      broadcastModel: Boolean = true): DataFrame = {
-    val toks = TextAnalysis.lmTokens(df.select(col(idCol), col(textCol)), textCol, minLen)
-    if (broadcastModel) {
-      // ONE pass over the tokenized corpus (r14; was a vocab-membership
-      // join + a known/unknown SPLIT that scanned+tokenized the corpus
-      // twice and unioned): the model is the COMPLETE vocab × class grid,
-      // so fanning every token out to the |C| classes (oov doubles as the
-      // class table) and left-joining the grid leaves exactly the OOV
-      // (token, class) rows null — coalesce to the per-class OOV score.
-      // Value-identical to the split-and-union by the grid-completeness
-      // invariant; both joins are broadcast, so nothing shuffles.
-      toks
-        .crossJoin(broadcast(oov))
-        .join(broadcast(model), Seq("__tok", "__cls"), "left")
-        .select(col(idCol), col("__cls"), coalesce(col("__lpq"), col("__oq")).as("__q"))
-    } else {
-      // n-gram-scale vocab regime (model too big to broadcast): keep the
-      // token-keyed split — the grid join above would carry |C|× the token
-      // rows into the model exchange, while this shape shuffles each token
-      // once (the vocab-membership join routes OOV tokens to the tiny
-      // broadcast OOV table)
-      val vocab = model.select(col("__tok")).distinct().withColumn("__in", lit(1))
-      val tagged = toks.join(vocab, Seq("__tok"), "left")
-      val known = tagged.filter(col("__in").isNotNull)
-        .join(model, Seq("__tok"))
-        .select(col(idCol), col("__cls"), col("__lpq").as("__q"))
-      val unknown = tagged.filter(col("__in").isNull)
-        .crossJoin(broadcast(oov))
-        .select(col(idCol), col("__cls"), col("__oq").as("__q"))
-      known.unionByName(unknown)
-    }
+      minLen: Int = 1): DataFrame = {
+    // ONE pass over the tokenized corpus: fanning every token out to the
+    // |C| classes (oov doubles as the class table) and left-joining the
+    // complete grid leaves exactly the OOV (token, class) rows null —
+    // coalesce to the per-class OOV score. Both joins are broadcast, so
+    // nothing shuffles.
+    TextAnalysis.lmTokens(df.select(col(idCol), col(textCol)), textCol, minLen)
+      .crossJoin(broadcast(oov))
+      .join(broadcast(model), Seq("__tok", "__cls"), "left")
+      .select(col(idCol), col("__cls"), coalesce(col("__lpq"), col("__oq")).as("__q"))
   }
 
   /** The batch readout over accumulated (idCol, __cls, __sq) partials:
@@ -1438,10 +1411,9 @@ object Models {
     * items on the first half-sweep.
     *
     * Scale shape: per half-sweep ONE ratings-side shuffle (groupBy the
-    * side being solved); the item side broadcasts when `broadcastItems`
-    * (domain-bounded catalogs — the default), users never collect
-    * anywhere. `sweeps` is small and fixed; lineage stays a fixed-depth
-    * plan.
+    * side being solved); the item side broadcasts (a domain-bounded
+    * catalog), users never collect anywhere. `sweeps` is small and fixed;
+    * lineage stays a fixed-depth plan.
     *
     * Returns (entity ∈ {user, item}, id, f1, f2, rmse) — factors 6-dp,
     * rmse the final quantized-residual readout repeated on every row. */
@@ -1452,11 +1424,9 @@ object Models {
       ratingCol: String,
       sweeps: Int = 3,
       lambda: Double = 0.1,
-      broadcastItems: Boolean = true,
       dp: Int = 6): DataFrame = {
     require(sweeps >= 1, s"sweeps must be >= 1, got $sweeps")
     require(lambda > 0, s"lambda must be > 0 (Cramer needs det > 0), got $lambda")
-    def bc(d: DataFrame) = if (broadcastItems) broadcast(d) else d
     val r = ratings.select(
       col(userCol).cast("string").as("__u"),
       col(itemCol).cast("string").as("__i"),
@@ -1471,8 +1441,7 @@ object Models {
         ((col("__rk") % 7 - 3) * 100000L).as("__f2"))
     // one ridge half-sweep: solve `solveKey`'s factors against the fixed
     // `fixedKey` factors joined onto the ratings
-    def halfSweep(factors: DataFrame, solveKey: String, fixedKey: String,
-        doBc: Boolean): DataFrame = {
+    def halfSweep(factors: DataFrame, solveKey: String, fixedKey: String): DataFrame = {
       val f1d = col("__f1").cast("double") / 1e6
       val f2d = col("__f2").cast("double") / 1e6
       val rd = col("__rq").cast("double") / 1e6
@@ -1481,9 +1450,8 @@ object Models {
       // fresh attribute on the factor side: __u/__i descend from the same
       // plan as r, and a shared exprId in the condition trips Spark's
       // ambiguous-self-join check (the running-sum helpers' lesson)
-      val fk = factors.withColumnRenamed(fixedKey, "__fk")
       val joined = r.join(
-        if (doBc) bc(fk) else fk, col(fixedKey) === col("__fk"))
+        factors.withColumnRenamed(fixedKey, "__fk"), col(fixedKey) === col("__fk"))
       val sums = joined.groupBy(col(solveKey)).agg(
         q9(f1d * f1d).as("__s11"), q9(f1d * f2d).as("__s12"),
         q9(f2d * f2d).as("__s22"),
@@ -1501,10 +1469,10 @@ object Models {
     var itemF = items0
     var userF: DataFrame = null
     (1 to sweeps).foreach { _ =>
-      userF = halfSweep(itemF.select(col("__i"), col("__f1"), col("__f2")),
-        solveKey = "__u", fixedKey = "__i", doBc = true)
+      userF = halfSweep(broadcast(itemF.select(col("__i"), col("__f1"), col("__f2"))),
+        solveKey = "__u", fixedKey = "__i")
       itemF = halfSweep(userF.select(col("__u"), col("__f1"), col("__f2")),
-        solveKey = "__i", fixedKey = "__u", doBc = false)
+        solveKey = "__i", fixedKey = "__u")
     }
     val uf = userF.select(col("__u").as("__uu"),
       col("__f1").as("__u1"), col("__f2").as("__u2"))
@@ -1512,7 +1480,7 @@ object Models {
       col("__f1").as("__i1"), col("__f2").as("__i2"))
     val pred = r
       .join(uf, col("__u") === col("__uu"))
-      .join(bc(itf), col("__i") === col("__ii"))
+      .join(broadcast(itf), col("__i") === col("__ii"))
       .select(((col("__rq").cast("double") / 1e6) -
         ((col("__u1").cast("double") / 1e6) * (col("__i1").cast("double") / 1e6) +
           (col("__u2").cast("double") / 1e6) * (col("__i2").cast("double") / 1e6)))

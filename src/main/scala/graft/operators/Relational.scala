@@ -952,18 +952,16 @@ object Relational {
     * once per column (a width × rows blow-up before the shuffle), while a
     * single-column branch scans just that column off the columnar format
     * and partial-aggregates it; the branches run as parallel stages of one
-    * job. Pass `approxDistinct = true` to swap the exact distinct for the
-    * mergeable HLL++ sketch on billion-distinct columns. The standard
-    * "what did I just ingest" audit in front of a pipeline. */
-  def profile(df: DataFrame, cols: Seq[String], approxDistinct: Boolean = false): DataFrame = {
+    * job. The standard "what did I just ingest" audit in front of a
+    * pipeline. */
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     cols.map { c =>
       df.select(col(c))
         .agg(
           count(lit(1)).as("__total"),
           count(col(c)).as("n_non_null"),
-          (if (approxDistinct) approx_count_distinct(col(c)) else count_distinct(col(c)))
-            .as("n_distinct"),
+          count_distinct(col(c)).as("n_distinct"),
           min(col(c)).cast("string").as("min_value"),
           max(col(c)).cast("string").as("max_value"))
         .select(

@@ -108,15 +108,6 @@ object Sketches {
     df.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.approx_heavy_hitters(col(valueCol), k).as("heavy_hitters"))
 
-  /** Corpus-level quantile-band gate: keep rows whose `valueCol` lies in the
-    * [lo, hi] quantile band of the WHOLE input — the "drop the quality-score
-    * tails" filter in front of a training corpus. Two passes: a global
-    * percentile aggregate reduces to ONE threshold row, which joins back as
-    * a broadcast nested loop (a 1-row cross join — no shuffle of the data
-    * side, no driver collect in the plan), then a codegen'd range filter.
-    * `approx = true` swaps the exact sort-based percentile for the mergeable
-    * approx sketch — same plan shape, bounded memory on huge corpora (the
-    * thresholds then differ from an exact oracle by the sketch error). */
   /** Mergeable distinct-count sketch cube — the pre-aggregation pattern
     * that makes 100 TB distinct-count analytics cheap: materialize one
     * Datasketches HLL sketch COLUMN (binary, mergeable) per fine-grained
@@ -384,8 +375,8 @@ object Sketches {
       eps)
   }
 
-  /** Equi-depth (quantile) histogram: bin edges are the exact (or GK
-    * approx) percentiles — ONE percentile aggregate broadcast back, then
+  /** Equi-depth (quantile) histogram: bin edges are the exact
+    * percentiles — ONE percentile aggregate broadcast back, then
     * the same codegen'd binary-search rank as the Z-order path and one
     * partial-agg count. The complement of [[histogram]] for skewed data,
     * where equi-width bins collapse into one hot bucket. Returns
@@ -395,14 +386,11 @@ object Sketches {
       df: DataFrame,
       valueCol: String,
       nBins: Int,
-      approx: Boolean = false,
       edgeRound: Option[Int] = None): DataFrame = {
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
     val v = col(valueCol).cast("double")
     val probs = array((1 until nBins).map(i => lit(i.toDouble / nBins)): _*)
-    val pct =
-      if (approx) percentile_approx(v, probs, lit(10000))
-      else percentile(v, probs)
+    val pct = percentile(v, probs)
     // edgeRound quantizes the interpolated edges (ONCE, in the 1-row agg —
     // zero per-row cost) so engines whose percentile interpolation differs
     // in the last ulp still bin identically
@@ -1763,22 +1751,17 @@ object Sketches {
     *
     * Shape: two keyed median aggregates (the value, then the residuals),
     * each broadcast back onto the data — the data side itself never
-    * re-shuffles. With `approx = false` the medians are exact (the
-    * percentile aggregate's partial state carries the group's values — fine
-    * up to millions of rows per key); at 100 TB set `approx = true` for the
-    * mergeable GK sketch whose state is bounded at any group size, same
-    * plan shape. */
+    * re-shuffles. The medians are exact (the percentile aggregate's
+    * partial state carries the group's values — fine up to millions of
+    * rows per key). */
   def madOutliers(
       df: DataFrame,
       keyCols: Seq[String],
       valueCol: String,
-      k: Double = 3.0,
-      approx: Boolean = false): DataFrame = {
+      k: Double = 3.0): DataFrame = {
     val keys = keyCols.map(col)
     def medianOf(in: DataFrame, c: Column, as: String): DataFrame = {
-      val m =
-        if (approx) percentile_approx(c, lit(0.5), lit(10000))
-        else percentile(c, lit(0.5))
+      val m = percentile(c, lit(0.5))
       if (keyCols.isEmpty) in.agg(m.as(as)) else in.groupBy(keys: _*).agg(m.as(as))
     }
     def back(in: DataFrame, agg: DataFrame): DataFrame =
@@ -1806,14 +1789,11 @@ object Sketches {
       valueCol: String,
       lo: Double = 0.01,
       hi: Double = 0.99,
-      clampedCol: String = "winsorized",
-      approx: Boolean = false): DataFrame = {
+      clampedCol: String = "winsorized"): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo < hi, s"need 0 <= lo < hi <= 1, got [$lo, $hi]")
     val probs = array(lit(lo), lit(hi))
     val v = col(valueCol).cast("double")
-    val pct =
-      if (approx) percentile_approx(v, probs, lit(10000))
-      else percentile(v, probs)
+    val pct = percentile(v, probs)
     val bounds = df.agg(
       round(element_at(pct, 1), 4).as("__w_lo"),
       round(element_at(pct, 2), 4).as("__w_hi"))
@@ -1822,17 +1802,21 @@ object Sketches {
       .drop("__w_lo", "__w_hi")
   }
 
+  /** Corpus-level quantile-band gate: keep rows whose `valueCol` lies in the
+    * [lo, hi] quantile band of the WHOLE input — the "drop the quality-score
+    * tails" filter in front of a training corpus. Two passes: a global
+    * exact percentile aggregate reduces to ONE threshold row, which joins
+    * back as a broadcast nested loop (a 1-row cross join — no shuffle of the
+    * data side, no driver collect in the plan), then a codegen'd range
+    * filter. */
   def filterByQuantileBand(
       df: DataFrame,
       valueCol: String,
       lo: Double,
-      hi: Double,
-      approx: Boolean = false): DataFrame = {
+      hi: Double): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo < hi, s"need 0 <= lo < hi <= 1, got [$lo, $hi]")
     val probs = array(lit(lo), lit(hi))
-    val pct =
-      if (approx) percentile_approx(col(valueCol), probs, lit(10000))
-      else percentile(col(valueCol), probs)
+    val pct = percentile(col(valueCol), probs)
     val bounds = df.agg(
       element_at(pct, 1).as("__q_lo"),
       element_at(pct, 2).as("__q_hi"))

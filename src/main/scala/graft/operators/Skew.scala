@@ -52,16 +52,15 @@ object Skew {
     * [[saltedAggregate]]/[[saltedJoin]] (or AQE skew handling) is needed
     * BEFORE a job dies on one reducer: one partial-agg key histogram, then
     * one aggregate over the histogram. Every statistic is chosen to be
-    * mergeable/deterministic at any scale: max share, the p50/p99/max of
-    * per-key counts (GK sketch — no histogram sort), and the coefficient of
-    * variation from exact integer sums (`sqrt(k·Σx² − (Σx)²) / Σx`, the
-    * order-free form). No global sort, no driver collect. */
-  def skewReport(df: DataFrame, keyCols: Seq[String], approx: Boolean = true): DataFrame = {
+    * deterministic at any scale: max share, the exact p50/p99/max of
+    * per-key counts, and the coefficient of variation from exact integer
+    * sums (`sqrt(k·Σx² − (Σx)²) / Σx`, the order-free form). The exact
+    * `percentile` state keeps one entry per distinct count value, which
+    * stays small for a count histogram however many keys there are. No
+    * global sort, no driver collect. */
+  def skewReport(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val hist = df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n"))
-    val probs = array(lit(0.5), lit(0.99))
-    val pct =
-      if (approx) percentile_approx(col("__n"), probs, lit(10000)).cast("array<double>")
-      else percentile(col("__n"), probs)
+    val pct = percentile(col("__n"), array(lit(0.5), lit(0.99)))
     hist.agg(
       sum(col("__n")).as("n_rows"),
       count(lit(1)).as("n_keys"),

@@ -464,16 +464,14 @@ object TextAnalysis {
     * ln(c(w1 w2) / c(w1 ·)) — low scores flag text the corpus's own
     * statistics find improbable (gibberish, boilerplate soup). Two count
     * aggregates (bigram, then its w1 marginal), one co-partitioned join
-    * back on the bigram, the vocabulary-sized marginal broadcast
-    * (`broadcastVocab = false` to shuffle-join for n-gram-scale vocabs).
+    * back on the bigram, the vocabulary-sized marginal broadcast.
     * Per-bigram log-probs are rounded to 6 dp and summed as DECIMAL so the
     * per-doc mean is exact and partition-order-independent — float
     * summation order would otherwise make the last bits engine-dependent. */
   def lmBigramScore(
       df: DataFrame,
       idCol: String,
-      textCol: String,
-      broadcastVocab: Boolean = true): DataFrame = {
+      textCol: String): DataFrame = {
     val bi = df.select(
       col(idCol),
       explode(Decontaminate.wordNgrams(col(textCol), 2)).as("bigram"))
@@ -482,9 +480,9 @@ object TextAnalysis {
       .withColumn("__w1", substring_index(col("bigram"), " ", 1))
       .groupBy(col("__w1")).agg(sum(col("__cb")).as("__cu"))
     bi
-      .join(if (broadcastVocab) broadcast(cBi) else cBi, "bigram")
+      .join(broadcast(cBi), "bigram")
       .withColumn("__w1", substring_index(col("bigram"), " ", 1))
-      .join(if (broadcastVocab) broadcast(cUni) else cUni, "__w1")
+      .join(broadcast(cUni), "__w1")
       .withColumn(
         "__lp",
         round(log(col("__cb").cast("double") / col("__cu")), 6).cast("decimal(28,6)"))
@@ -535,15 +533,13 @@ object TextAnalysis {
     * bounded heaps, no Window/Sort. Ranking uses the 6-dp ROUNDED score
     * (ties then broken by term) so any engine reproduces the cut
     * deterministically — raw float ranking can flip on 1-ulp libm
-    * differences. The vocabulary aggregate is broadcast: right for word
-    * vocabularies; for n-gram vocabularies beyond broadcast size pass
-    * `broadcastVocab = false` to shuffle-join instead. */
+    * differences. The vocabulary aggregate is broadcast, which suits word
+    * vocabularies. */
   def tfIdfTopTerms(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      topPerDoc: Int,
-      broadcastVocab: Boolean = true): DataFrame = {
+      topPerDoc: Int): DataFrame = {
     val terms = df
       .select(col(idCol), explode(split(lower(col(textCol)), " ")).as("term"))
       .filter(col("term") =!= "")
@@ -551,7 +547,7 @@ object TextAnalysis {
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).as("__n"))
     val scored = tf
-      .join(if (broadcastVocab) broadcast(dfreq) else dfreq, "term")
+      .join(broadcast(dfreq), "term")
       .crossJoin(broadcast(n))
       .withColumn(
         "tfidf",
@@ -1414,8 +1410,7 @@ object TextAnalysis {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      minDocs: Int,
-      broadcastBoiler: Boolean = true): DataFrame = {
+      minDocs: Int): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val lines = df.select(
       col(idCol),
@@ -1428,9 +1423,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("__docs"))
       .filter(col("__docs") >= minDocs)
       .select(col("__line"))
-    val boilerSide = if (broadcastBoiler) broadcast(boiler) else boiler
     val flagged = lines
-      .join(boilerSide.withColumn("__boiler", lit(true)), Seq("__line"), "left")
+      .join(broadcast(boiler).withColumn("__boiler", lit(true)), Seq("__line"), "left")
       .select(
         col(idCol), col("__pos"), col("__line"),
         coalesce(col("__boiler"), lit(false)).as("__boiler"))
@@ -2011,9 +2005,8 @@ object TextAnalysis {
     * fit on `ref` via [[unigramLm]] — improbable-under-the-reference text
     * (wrong language, gibberish, boilerplate soup) scores high and gets
     * filtered. One reference-count shuffle + one per-doc aggregate; the
-    * vocabulary-sized model broadcasts into the token stream by default
-    * (`broadcastVocab = false` to shuffle-join for n-gram-scale vocabs) —
-    * at 100 TB the scored corpus never shuffles except per-doc.
+    * vocabulary-sized model broadcasts into the token stream, so at 100 TB
+    * the scored corpus never shuffles except per-doc.
     *
     * Output: (idCol, n_tokens, cross_entropy nats, perplexity =
     * exp(cross_entropy)); zero-token documents are absent. Quantized
@@ -2025,12 +2018,11 @@ object TextAnalysis {
       textCol: String,
       ref: DataFrame,
       addK: Double = 1.0,
-      minLen: Int = 1,
-      broadcastVocab: Boolean = true): DataFrame = {
+      minLen: Int = 1): DataFrame = {
     val (model, oov) = unigramLm(ref, textCol, addK, minLen)
     val ce = round(-col("__sq").cast("double") / lit(1e6) / col("n_tokens").cast("double"), 6)
     lmTokens(df.select(col(idCol), col(textCol)), textCol, minLen)
-      .join(if (broadcastVocab) broadcast(model) else model, Seq("__tok"), "left")
+      .join(broadcast(model), Seq("__tok"), "left")
       .crossJoin(broadcast(oov))
       .select(col(idCol), coalesce(col("__lpq"), col("__oovq")).as("__q"))
       .groupBy(col(idCol))

@@ -25,10 +25,10 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * `mapPartitions`.
   *
   * Retries with exponential backoff happen per request inside the task
-  * (5xx and connect errors; 4xx is the server's final answer). With
-  * `failFast=false` (default) exhausted retries yield a row with
-  * status = -1 and the error message as body, so one dead endpoint can't
-  * kill a million-row crawl — filter `status = 200` downstream.
+  * (5xx and connect errors; 4xx is the server's final answer). Exhausted
+  * retries yield a row with status = -1 and the error message as body, so
+  * one dead endpoint can't kill a million-row crawl — filter
+  * `status = 200` downstream.
   */
 object Http extends Logging {
 
@@ -38,16 +38,13 @@ object Http extends Logging {
     * @param timeoutMs  per-request timeout
     * @param retries    attempts per URL (>=1); 5xx / transport errors retry
     * @param backoffMs  base backoff, doubled per attempt
-    * @param failFast   true = throw on an exhausted URL (fails the task);
-    *                   false = emit status=-1 with the error as body
     */
   def fetch(
       df: DataFrame,
       urlCol: String,
       timeoutMs: Int = 10000,
       retries: Int = 3,
-      backoffMs: Long = 100L,
-      failFast: Boolean = false): DataFrame = {
+      backoffMs: Long = 100L): DataFrame = {
     val urlIdx = df.schema.fieldIndex(urlCol)
     val outSchema = StructType(
       df.schema.fields ++ Seq(
@@ -91,9 +88,6 @@ object Http extends Logging {
           }
           if (!done) Thread.sleep(backoffMs << (attempt - 1))
         }
-        if (failFast && (status < 200 || status >= 300)) {
-          throw new RuntimeException(s"HTTP fetch failed after $attempt attempts: $url -> $status $body")
-        }
         Row.fromSeq(row.toSeq :+ status :+ body)
       }
     }(Encoders.row(outSchema))
@@ -130,8 +124,7 @@ object Http extends Logging {
       maxPages: Int = 100,
       timeoutMs: Int = 10000,
       retries: Int = 3,
-      backoffMs: Long = 100L,
-      failFast: Boolean = false): DataFrame = {
+      backoffMs: Long = 100L): DataFrame = {
     require(maxPages >= 1, s"maxPages must be >= 1, got $maxPages")
     val inCols = df.columns.toSeq
     val waves = Seq.newBuilder[DataFrame]
@@ -139,7 +132,7 @@ object Http extends Logging {
     var page = 0
     var exhausted = false
     while (!exhausted && page < maxPages) {
-      val fetched = fetch(wave, urlCol, timeoutMs, retries, backoffMs, failFast)
+      val fetched = fetch(wave, urlCol, timeoutMs, retries, backoffMs)
         .withColumn("page", lit(page))
         .localCheckpoint(true)
       waves += fetched

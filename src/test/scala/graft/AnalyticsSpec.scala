@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Funnel, Graph, Relational, Sketches, Temporal, TextAnalysis}
+import graft.operators.{Funnel, Graph, Models, Relational, Sketches, Skew, Temporal, TextAnalysis}
 
 /** Round-5 analytics operators: boilerplate removal, gap fill, profiler,
   * ECDF normalization, funnel. */
@@ -946,5 +948,38 @@ class AnalyticsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(!out.contains(9L), "sink-only nodes stay outside the node universe")
     assert(out.values.max == 1.0, s"documented max = 1.0 contract: $out")
+  }
+
+  test("degenerate inputs: empty, one-row and null-heavy frames return without an exception") {
+    val frames = Seq(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType.fromDDL("id LONG, k STRING, cls STRING, text STRING, v DOUBLE")),
+      Seq((1L, "a", "x", "hello", 1.0)).toDF("id", "k", "cls", "text", "v"),
+      // NULL text, whitespace-only text, an all-NULL value column
+      Seq[(Long, String, String, String, Option[Double])](
+        (1L, "a", "x", null, None),
+        (2L, "b", "y", "   ", None),
+        (3L, "a", "x", "hello world", None)).toDF("id", "k", "cls", "text", "v"))
+    // operator -> row counts on (empty, one row, null-heavy)
+    val cases: Seq[(String, DataFrame => DataFrame, Seq[Int])] = Seq(
+      ("lmBigramScore", TextAnalysis.lmBigramScore(_, "id", "text"), Seq(0, 0, 2)),
+      ("tfIdfTopTerms", TextAnalysis.tfIdfTopTerms(_, "id", "text", topPerDoc = 3), Seq(0, 1, 2)),
+      ("perplexityScore", df => TextAnalysis.perplexityScore(df, "id", "text", df), Seq(0, 1, 1)),
+      ("removeBoilerplate", TextAnalysis.removeBoilerplate(_, "id", "text", minDocs = 2), Seq(0, 1, 2)),
+      ("naiveBayesClassify", df => Models.naiveBayesClassify(df, "id", "text", df, "cls"), Seq(0, 1, 1)),
+      ("alsRank2", Models.alsRank2(_, "k", "cls", "v", sweeps = 1), Seq(0, 2, 4)),
+      ("equiDepthHistogram", Sketches.equiDepthHistogram(_, "v", nBins = 4), Seq(0, 1, 1)),
+      ("madOutliers", Sketches.madOutliers(_, Seq("k"), "v"), Seq(0, 1, 3)),
+      ("winsorize", Sketches.winsorize(_, "v"), Seq(0, 1, 3)),
+      ("filterByQuantileBand", Sketches.filterByQuantileBand(_, "v", 0.1, 0.9), Seq(0, 1, 0)),
+      ("skewReport", Skew.skewReport(_, Seq("k")), Seq(1, 1, 1)),
+      ("profile", Relational.profile(_, Seq("k", "text", "v")), Seq(3, 3, 3)))
+    for ((op, run, want) <- cases) {
+      val got = frames.map(run(_).collect().length)
+      assert(got == want, s"$op row counts on (empty, one row, null-heavy)")
+    }
+    assert(Skew.skewReport(frames(0), Seq("k")).head.getAs[Long]("n_keys") == 0L)
+    val tfidf = TextAnalysis.tfIdfTopTerms(frames(1), "id", "text", topPerDoc = 3).head
+    assert(tfidf.getAs[Double]("tfidf") == 0.0)
   }
 }

@@ -43,11 +43,11 @@ class SkewSpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("skewReport: exact stats on a planted hot key; approx variant same schema") {
+  test("skewReport: exact stats on a planted hot key; interpolated exact p99") {
     import spark.implicits._
     // 90 rows on 'hot', 10 keys with 1 row each -> 100 rows, 11 keys
     val df = (Seq.fill(90)("hot") ++ (1 to 10).map(i => s"k$i")).toDF("k").repartition(5)
-    val r = Skew.skewReport(df, Seq("k"), approx = false).head
+    val r = Skew.skewReport(df, Seq("k")).head
     assert(r.getAs[Long]("n_rows") == 100L)
     assert(r.getAs[Long]("n_keys") == 11L)
     assert(r.getAs[Long]("max_count") == 90L)
@@ -55,8 +55,8 @@ class SkewSpec extends SparkSpec {
     assert(r.getAs[Double]("p50_count") == 1.0)
     // cv = sqrt(k*ss - n^2)/n with ss = 90^2 + 10 = 8110
     assert(math.abs(r.getAs[Double]("count_cv") - math.sqrt(11.0 * 8110.0 - 10000.0) / 100.0) < 1e-12)
-    val ap = Skew.skewReport(df, Seq("k")).head
-    assert(ap.schema.fieldNames.toSeq == r.schema.fieldNames.toSeq)
-    assert(ap.getAs[Long]("max_count") == 90L)
+    // sorted counts (1 x10, 90): rank 0.99 * 10 = 9.9 interpolates to
+    // 1 + 0.9 * 89 = 81.1; a quantile sketch returns an observed count (1 or 90)
+    assert(math.abs(r.getAs[Double]("p99_count") - 81.1) < 1e-9)
   }
 }

@@ -14,6 +14,10 @@ becomes pandas float64, so `457.0` vs Spark's int64 `457` FAILS here just
 like it fails in the driver — `fetchall()` (Python ints) would hide that
 whole bug class.  An explicit per-column dtype-kind check reports the
 mismatch cause directly.
+
+DuckDB runs under a fixed memory cap, so a query whose oracle SQL outgrows
+it (q_kcore's five chained CTE peel levels) fails alone: it is reported as
+ERROR, counted apart from pass and fail, and makes the exit status 1.
 """
 import json, sys, glob, os
 import duckdb
@@ -21,6 +25,9 @@ import numpy as np
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# DuckDB's own default is 80% of RAM, which starves whatever shares the machine
+MEMORY_LIMIT = "3GB"
 
 
 def norm_cell(v):
@@ -46,23 +53,28 @@ def frame_sig(df):
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT})
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    n_pass = n_fail = n_noora = 0
+    n_pass = n_fail = n_noora = n_err = 0
     for d in sorted(glob.glob(os.path.join(out_dir, "*"))):
         name = os.path.basename(d)
         if not os.path.isdir(d):
             continue
-        s_df = con.execute(f"SELECT * FROM read_parquet('{d}/*.parquet')").df()
-        if name not in oracle:
+        try:
+            s_df = con.execute(f"SELECT * FROM read_parquet('{d}/*.parquet')").df()
+            o_df = con.execute(oracle[name]).df() if name in oracle else None
+        except duckdb.Error as e:
+            n_err += 1
+            print(f"  {name}: ERROR {e}")
+            continue
+        if o_df is None:
             n_noora += 1
             print(f"  {name}: no oracle ({len(s_df)} rows)")
             continue
-        o_df = con.execute(oracle[name]).df()
         sc, sk, sr = frame_sig(s_df)
         oc, ok_kinds, orr = frame_sig(o_df)
         ok = sc == oc and sr == orr
@@ -90,8 +102,8 @@ def main(sf_dir, out_dir):
                     if a != b:
                         print(f"    first diff row {i}: spark={a} oracle={b}")
                         break
-    print(f"pass={n_pass} fail={n_fail} no_oracle={n_noora}")
-    sys.exit(1 if n_fail else 0)
+    print(f"pass={n_pass} fail={n_fail} error={n_err} no_oracle={n_noora}")
+    sys.exit(1 if n_fail + n_err else 0)
 
 
 if __name__ == "__main__":
