@@ -19,8 +19,13 @@ import graft.sources.Tables
   *  1. ingest two heterogeneous "sources" + diagonal union
   *     (extract_*_data.py; pipeline.py:326) — union-then-enrich, so the
   *     dimension joins run once over the combined stream
-  *  2. dimension enrich via broadcast joins          (utils.py:349)
-  *  3. indicator key synthesis + period tagging      (extract_ist_data.py:95)
+  *  2. dimension enrich via broadcast joins          (utils.py:349), with
+  *     the tags computed on each joined side at its own grain: `region`
+  *     and `nation` (`normalize_text`, utils.py:546) in the 5- and 25-row
+  *     dimension selects, `period` in the orders select. A projection
+  *     above the joins would run them once per fact row, and Catalyst
+  *     never pushes a projection below a join.
+  *  3. indicator key synthesis                       (extract_ist_data.py:95)
   *  4. conditional (null-preserving) aggregation     (extract_pec_data.py:141)
   *  5. pivot to the wide report                      (extract_pec_data.py:260)
   *  6. rule-matrix validation split                  (utils.py:133)
@@ -43,22 +48,34 @@ object Pipeline {
     val unioned = Relational.diagonalConcat(Seq(srcA, srcB))
 
     // 2. enrich: order context, then customer -> nation -> region (dims
-    //    broadcast, facts never shuffle for the dim joins)
+    //    broadcast, facts never shuffle for the dim joins). Each side's
+    //    select computes its tags at its own grain; the joins are inner and
+    //    both functions deterministic and null-preserving, so every fact
+    //    row gets the tags a projection above the joins would give it.
     val enriched = unioned
       .join(
-        Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
+        Tables.orders(s, dir).select(
+          col("o_orderkey"),
+          col("o_custkey"),
+          date_format(col("o_orderdate"), "yyyyMM").as("period")),
         col("l_orderkey") === col("o_orderkey"))
       .join(
         Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
+      .join(
+        broadcast(Tables.nation(s, dir).select(
+          col("n_nationkey"), col("n_regionkey"), normalize_text(col("n_name")).as("nation"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(
+        broadcast(Tables.region(s, dir).select(
+          col("r_regionkey"), normalize_text(col("r_name")).as("region"))),
+        col("n_regionkey") === col("r_regionkey"))
 
-    // 3. indicator synthesis + period tagging (reference: indicator + "_" + coc)
+    // 3. indicator synthesis (reference: indicator + "_" + coc)
     val tagged = enriched.select(
-      date_format(col("o_orderdate"), "yyyyMM").as("period"),
-      normalize_text(col("r_name")).as("region"),
-      normalize_text(col("n_name")).as("nation"),
+      col("period"),
+      col("region"),
+      col("nation"),
       concat(col("l_returnflag"), lit("_"), col("l_linestatus")).as("indicator"),
       col("l_quantity"),
       col("l_tax"))

@@ -467,12 +467,15 @@ object TextAnalysis {
     * back on the bigram, the vocabulary-sized marginal broadcast.
     * Per-bigram log-probs are rounded to 6 dp and summed as DECIMAL so the
     * per-doc mean is exact and partition-order-independent — float
-    * summation order would otherwise make the last bits engine-dependent. */
+    * summation order would otherwise make the last bits engine-dependent.
+    * A document with no non-whitespace character is dropped, as
+    * [[tfIdfTopTerms]] and the `lmTokens` scorers drop it: split on single
+    * spaces it would yield bigrams of empty words. */
   def lmBigramScore(
       df: DataFrame,
       idCol: String,
       textCol: String): DataFrame = {
-    val bi = df.select(
+    val bi = df.filter(col(textCol).rlike("\\S")).select(
       col(idCol),
       explode(Decontaminate.wordNgrams(col(textCol), 2)).as("bigram"))
     val cBi = bi.groupBy(col("bigram")).agg(count(lit(1)).as("__cb"))

@@ -962,7 +962,7 @@ class AnalyticsSpec extends SparkSpec {
         (3L, "a", "x", "hello world", None)).toDF("id", "k", "cls", "text", "v"))
     // operator -> row counts on (empty, one row, null-heavy)
     val cases: Seq[(String, DataFrame => DataFrame, Seq[Int])] = Seq(
-      ("lmBigramScore", TextAnalysis.lmBigramScore(_, "id", "text"), Seq(0, 0, 2)),
+      ("lmBigramScore", TextAnalysis.lmBigramScore(_, "id", "text"), Seq(0, 0, 1)),
       ("tfIdfTopTerms", TextAnalysis.tfIdfTopTerms(_, "id", "text", topPerDoc = 3), Seq(0, 1, 2)),
       ("perplexityScore", df => TextAnalysis.perplexityScore(df, "id", "text", df), Seq(0, 1, 1)),
       ("removeBoilerplate", TextAnalysis.removeBoilerplate(_, "id", "text", minDocs = 2), Seq(0, 1, 2)),

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.DateFormatClass
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.sources.Tables
 
@@ -135,6 +138,26 @@ class PlanSpec extends SparkSpec {
     // a third node means the agg->pivot->join-back formulation crept back
     val aggs = "\\(\\d+\\) HashAggregate".r.findAllIn(p).size
     assert(aggs == 2, s"expected 1 fused aggregate (2 nodes), got $aggs:\n$p")
+  }
+
+  test("pipeline e2e: tags are computed at dimension and order grain, never above the lineitem join") {
+    val root = Pipeline.integrationReport(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def tags(p: SparkPlan): Seq[String] = p.expressions.flatMap(_.collect {
+      case i: StaticInvoke if i.functionName == "normalize" => "normalize"
+      case _: DateFormatClass => "date_format"
+    })
+    def scansLineitem(p: SparkPlan): Boolean = p.find {
+      case scan: FileSourceScanExec =>
+        scan.relation.location.rootPaths.exists(_.getName.startsWith("lineitem"))
+      case _ => false
+    }.isDefined
+    val tagging = root.collect { case p if tags(p).nonEmpty => p }
+    // one normalize per dimension (nation, region), one date_format on orders
+    assert(tagging.flatMap(tags).sorted == Seq("date_format", "normalize", "normalize"), root)
+    tagging.foreach(p => assert(!scansLineitem(p), s"tag computed above the lineitem join:\n$p"))
   }
 
   test("decontaminate: bloom prefilter map-side, broadcast verify join, no sort-merge") {
