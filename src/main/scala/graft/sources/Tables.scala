@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders over the engine's supported sources.
   *
@@ -10,10 +13,53 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * over Spark's vectorized readers so predicate pushdown / column pruning /
   * partition pruning all apply (Excel is out of scope in this container; its
   * role — grids of typed cells — is covered by the csv reader).
+  *
+  * Parquet schemas are cached per `SparkSession`. Inferring a parquet
+  * schema starts a Spark job that reads a file footer; a declared schema
+  * starts none. Each parquet read lists the path's leaf files on the driver
+  * and keys the schema by the path plus every file's path, length and
+  * modification time. A rewritten, added or removed file misses the cache
+  * and the schema is inferred again. A new or cloned session starts with
+  * an empty cache.
   */
 object Tables {
+  /** Leaf files of a path, as (path, length, modification time), sorted. */
+  private type Fingerprint = Seq[(String, Long, Long)]
+
+  /** Per session: path -> (the fingerprint its schema was inferred at, schema). */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Fingerprint, StructType)]])
+
+  /** Read parquet at `path` with the session's cached schema, inferring
+    * (and caching) it only when the path's files changed since the last
+    * read. A path that lists no files (missing, or a glob) is never cached,
+    * so Spark resolves it exactly as an uncached read would. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val files = leafFiles(spark, path)
+    val cache = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap)
+    cache.get(path) match {
+      case (`files`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        if (files.nonEmpty) cache.put(path, (files, df.schema))
+        df
+    }
+  }
+
+  /** `listStatus`, not `listFiles`: on the local file system `listFiles`
+    * loads every file's owner and permissions, a process per file (about
+    * 145 ms against 1 ms for a 32-file table on 4 CPUs). */
+  private def leafFiles(spark: SparkSession, path: String): Fingerprint = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(f => if (f.isDirectory) leaves(f.getPath) else Seq(f))
+    try leaves(hp).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
   def parquet(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
 
   def csv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
@@ -121,7 +167,7 @@ object Tables {
     val dot = path.lastIndexOf('.')
     val suffix = if (dot < 0) "" else path.substring(dot + 1).toLowerCase
     suffix match {
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => readParquet(spark, path)
       case "orc" => spark.read.orc(path)
       case "csv" => csv(spark, path)
       case "json" | "jsonl" | "ndjson" => jsonLines(spark, path)
@@ -148,8 +194,11 @@ object Tables {
     * microsecond file surfaces as TIMESTAMP_NTZ (Spark 4 infers NTZ) and
     * casts value-preserving under the UTC session zone. Downstream windows,
     * watermarks and oracles all see one stable type. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = parquet(s, d, "events")
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(parquet(s, d, "events"))
+
+  /** The events `ts` normalization of [[events]], for a batch or a
+    * streaming read of the events table. */
+  private[graft] def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
@@ -158,7 +207,6 @@ object Tables {
         raw.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
       case _ => raw
     }
-  }
   def documents(s: SparkSession, d: String): DataFrame = parquet(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = parquet(s, d, "embeddings")
 }
