@@ -23,13 +23,14 @@ object Dedup {
 
   /** MinHash signatures banded for LSH: explodes each doc into `bands` rows
     * keyed by (band index, hash of the band's signature slice).
-    * Output: idCol, band, band_key. Join this to itself on (band, band_key)
-    * to get candidate pairs.
-    */
-  /** @param keepCols extra input columns carried through to the output —
-    *                  lets a STREAMING caller keep the text next to its
-    *                  band keys (a later stream-stream join-back would
-    *                  need watermark state; a projection doesn't). */
+    * Output: idCol, keepCols, band, band_key. Join this to itself on
+    * (band, band_key) to get candidate pairs. Lazy, so a streaming frame
+    * bands like a batch one.
+    *
+    * @param keepCols extra input columns carried through to the output —
+    *                 lets a STREAMING caller keep the text next to its
+    *                 band keys (a later stream-stream join-back would
+    *                 need watermark state; a projection doesn't). */
   def minHashBands(
       df: DataFrame,
       idCol: String,
@@ -54,8 +55,11 @@ object Dedup {
   /** Candidate near-duplicate pairs via MinHash LSH, verified with exact
     * n-gram Jaccard. Pairs are deduped across bands before the (expensive)
     * verification, and id1 < id2 canonical ordering halves the join output.
-    */
-  /** @param salts >1 spreads each hot band bucket (a giant near-duplicate
+    * Each document is signed and banded once: the bands are pinned
+    * (`localCheckpoint`, one job), and both sides of the band self-join
+    * read that one result.
+    *
+    * @param salts >1 spreads each hot band bucket (a giant near-duplicate
     *              cluster all sharing one band_key) over `salts` reducers via
     *              [[Skew.saltedJoin]]; output is identical to salts=1. */
   def minHashLsh(
@@ -68,6 +72,7 @@ object Dedup {
       jaccardThreshold: Double = 0.7,
       salts: Int = 1): DataFrame = {
     val banded = minHashBands(df, idCol, textCol, numHashes, bands, shingleK)
+      .localCheckpoint(true)
     val l = banded.select(col(idCol).as("id1"), col("band"), col("band_key"))
     val r = banded.select(col(idCol).as("id2"), col("band"), col("band_key"))
     val joined =

@@ -2049,7 +2049,10 @@ object TextAnalysis {
     * Scale shape: both sides tokenize once into [[bigramTerms]], one
     * codegen'd posexplode of the per-doc token ARRAY — a pure map-side
     * projection, no per-doc window, no union, no shuffle before the model
-    * aggregates; the three model tables (bigram, context, continuation)
+    * aggregates. The reference is scanned and tokenized once: its bigram
+    * count table is built once and pinned (`localCheckpoint`, one job),
+    * and the context and continuation tables and the bigram-type total
+    * are small aggregates of that pinned table. All model tables
     * broadcast into the scoring stream; per-token log terms quantize to
     * 1e6 longs (the shared perplexity discipline), so the whole readout
     * replays in SQL. */
@@ -2065,6 +2068,7 @@ object TextAnalysis {
     val big = bigramTerms(ref.select(col(textCol)), Nil, textCol, minLen)
       .filter(col("__w1").isNotNull)
       .groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12"))
+      .localCheckpoint(true)
     val ctx = big.groupBy(col("__w1"))
       .agg(sum(col("__c12")).as("__c1"), count(lit(1)).as("__n1l"))
     val cont = big.groupBy(col("__w2")).agg(count(lit(1)).as("__n1r"))
@@ -2093,12 +2097,16 @@ object TextAnalysis {
     * `__w1` the token before it (NULL for a document's first token). One
     * posexplode of the token array, so the whole stream is one codegen'd
     * map-side pass; the reference's bigrams are its rows with `__w1` set.
-    * Docs with no token (empty, whitespace-only, NULL text) yield no rows. */
+    * Docs with no token (empty, whitespace-only, NULL text) yield no rows:
+    * the outer explode's NULL row is dropped by `__w2 IS NOT NULL`. (A
+    * plain posexplode makes Spark infer `size(__toks) > 0` and push it
+    * below the projection, running the regex three times per document.) */
   private def bigramTerms(d: DataFrame, cols: Seq[Column], textCol: String,
       minLen: Int): DataFrame =
     d.select(cols :+ regexp_extract_all(lower(col(textCol)),
         lit(s"[a-z0-9]{$minLen,}"), lit(0)).as("__toks"): _*)
-      .select(cols :+ col("__toks") :+ posexplode(col("__toks")).as(Seq("__p", "__w2")): _*)
+      .select(cols :+ col("__toks") :+ posexplode_outer(col("__toks")).as(Seq("__p", "__w2")): _*)
+      .filter(col("__w2").isNotNull)
       .select(cols :+ when(col("__p") > 0, element_at(col("__toks"), col("__p"))).as("__w1")
         :+ col("__w2"): _*)
 
@@ -2404,10 +2412,13 @@ object TextAnalysis {
     * trivially, which is exactly why it beat Kneser–Ney at web scale
     * (quality converges with corpus size while costing a fraction). The
     * inexpensive sibling of [[knBigramPerplexity]] on the same term
-    * stream ([[bigramTerms]]: one codegen'd posexplode per side), with
-    * broadcast count tables and 1e6-quantized log terms. Scores are NOT
-    * probabilities (the paper uses S, not P) — the readout is the mean
-    * negative log score, lower = more in-model. Out-of-vocabulary w₂
+    * stream ([[bigramTerms]]: one codegen'd posexplode per side). The
+    * reference is tokenized once into one (w₁, w₂) count table, first
+    * tokens included with w₁ NULL, built once and pinned
+    * (`localCheckpoint`, one job); the bigram, unigram and total counts
+    * are read off it and broadcast, with 1e6-quantized log terms. Scores
+    * are NOT probabilities (the paper uses S, not P) — the readout is the
+    * mean negative log score, lower = more in-model. Out-of-vocabulary w₂
     * scores α/N (one pseudo-count, pinned — the paper's web-scale setting
     * never meets an unseen unigram); first tokens score the unigram path.
     *
@@ -2420,11 +2431,12 @@ object TextAnalysis {
       alpha: Double = 0.4,
       minLen: Int = 1): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    val refTerms = bigramTerms(ref.select(col(textCol)), Nil, textCol, minLen)
-    val uni = refTerms.groupBy(col("__w2")).agg(count(lit(1)).as("__c2"))
-    val big = refTerms.filter(col("__w1").isNotNull)
+    val pairs = bigramTerms(ref.select(col(textCol)), Nil, textCol, minLen)
       .groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12"))
-    val ntot = uni.agg(sum(col("__c2")).as("__nt"))
+      .localCheckpoint(true)
+    val big = pairs.filter(col("__w1").isNotNull)
+    val uni = pairs.groupBy(col("__w2")).agg(sum(col("__c12")).as("__c2"))
+    val ntot = pairs.agg(sum(col("__c12")).as("__nt"))
     val joined = bigramTerms(df.select(col(idCol), col(textCol)), Seq(col(idCol)), textCol, minLen)
       .join(broadcast(big), Seq("__w1", "__w2"), "left")
       .join(broadcast(uni), Seq("__w2"), "left")

@@ -61,7 +61,7 @@ class DrainSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("a failed drain reaches the caller, restores the conf and leaves no active query") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-drain").toString
+    val dir = SparkEntry.tempDir("graft-drain").toString
     spark.range(3).write.parquet(s"$dir/t")
     val stream = spark.readStream.schema("id long").parquet(s"$dir/t")
       .select(col("id"), raise_error(lit("planted drain failure")).cast("long").as("boom"))

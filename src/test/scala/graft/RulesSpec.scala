@@ -85,7 +85,7 @@ class RulesSpec extends SparkSpec {
 
   test("exportMatrixSheets writes one colored sheet per matrix, readable by display name") {
     import graft.sources.Xlsx
-    val path = java.nio.file.Files.createTempDirectory("graft-matrix2").toString + "/wb.xlsx"
+    val path = SparkEntry.tempDir("graft-matrix2").toString + "/wb.xlsx"
     val vih = Seq((1, 200)).toDF("id", "a")
     val ist = Seq((2, 9), (3, 60)).toDF("id", "b")
     Rules.exportMatrixSheets(path, Seq(
@@ -105,7 +105,7 @@ class RulesSpec extends SparkSpec {
 
   test("exportMatrix round-trips values AND per-cell fill colors through xlsx") {
     import graft.sources.Xlsx
-    val path = java.nio.file.Files.createTempDirectory("graft-matrix").toString + "/matrix.xlsx"
+    val path = SparkEntry.tempDir("graft-matrix").toString + "/matrix.xlsx"
     // row 3 violates nothing and must not appear in the report
     val df = Seq((1, 200, 5), (2, 5, 60), (3, 5, 5)).toDF("id", "a", "b")
     Rules.exportMatrix(df,

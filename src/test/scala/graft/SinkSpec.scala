@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.Sink
 
 class SinkSpec extends SparkSpec {
   import spark.implicits._
 
   test("writePartitionedCsv creates one directory per partition value") {
-    val dir = Files.createTempDirectory("graft-sink").toString
+    val dir = SparkEntry.tempDir("graft-sink").toString
     val df = Seq(("202401", 1.0), ("202401", 2.0), ("202402", 3.0)).toDF("period", "v")
     Sink.writePartitionedCsv(df, "period", dir)
     val parts = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
@@ -35,7 +33,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("writePartitionedParquet round-trips with partition pruning") {
-    val dir = Files.createTempDirectory("graft-sinkp").toString
+    val dir = SparkEntry.tempDir("graft-sinkp").toString
     val df = Seq(("202401", 1.0), ("202402", 3.0)).toDF("period", "v")
     Sink.writePartitionedParquet(df, "period", dir)
     val pruned = spark.read.parquet(dir).filter($"period" === "202402")
@@ -44,7 +42,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("writeJsonl produces exactly `shards` files and round-trips values") {
-    val tmp = java.nio.file.Files.createTempDirectory("jsonl_spec_").toFile
+    val tmp = SparkEntry.tempDir("jsonl_spec_")
     val df = (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")
     graft.operators.Sink.writeJsonl(df, tmp.getPath, shards = 4)
     val files = tmp.listFiles.filter(_.getName.startsWith("part-"))
@@ -57,7 +55,7 @@ class SinkSpec extends SparkSpec {
 
   test("writeJsonl codec: compressed shards carry the extension and round-trip") {
     for ((codec, ext) <- Seq("gzip" -> ".gz", "bzip2" -> ".bz2")) {
-      val tmp = java.nio.file.Files.createTempDirectory(s"jsonl_${codec}_").toFile
+      val tmp = SparkEntry.tempDir(s"jsonl_${codec}_")
       val df = (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v")
       graft.operators.Sink.writeJsonl(df, tmp.getPath, shards = 2, codec = codec)
       val files = tmp.listFiles.filter(_.getName.startsWith("part-"))
@@ -78,7 +76,7 @@ class SinkSpec extends SparkSpec {
     val df = spark.range(n)
       .select((col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
       .repartition(8)
-    val dir = Files.createTempDirectory("graft-zorder").toString + "/t"
+    val dir = SparkEntry.tempDir("graft-zorder").toString + "/t"
     Sink.writeZOrdered(df.toDF(), dir, Seq("x", "y"), bits = 8, numFiles = 16)
     val back = spark.read.parquet(dir)
     assert(back.count() == n)
@@ -101,7 +99,7 @@ class SinkSpec extends SparkSpec {
     val df = spark.range(n)
       .select((col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
       .repartition(8)
-    val base = Files.createTempDirectory("graft-skip").toString
+    val base = SparkEntry.tempDir("graft-skip").toString
     Sink.writeZOrdered(df.toDF(), s"$base/z", Seq("x", "y"), bits = 8, numFiles = 16)
     df.repartition(16).write.parquet(s"$base/rr") // round-robin: every file spans the range
     val zRep = Sink.skippingReport(spark, s"$base/z", Seq("x", "y"))
@@ -128,7 +126,7 @@ class SinkSpec extends SparkSpec {
 
   test("overwritePartitions replaces only the partitions present in the new data") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-dynpart").toString + "/t"
+    val dir = SparkEntry.tempDir("graft-dynpart").toString + "/t"
     val full = Seq(("p1", 1), ("p1", 2), ("p2", 3), ("p3", 4)).toDF("part", "v")
     Sink.overwritePartitions(full, dir, Seq("part"))
     // re-publish ONLY p2 with corrected data
@@ -146,14 +144,14 @@ class SinkSpec extends SparkSpec {
     val (observed, obs) = Sink.observed(
       df, "sink_audit",
       Seq("n" -> count(lit(1)), "sum_v" -> sum(col("v")), "nulls" -> count(when(col("v").isNull, 1))))
-    val dir = Files.createTempDirectory("graft-observe").toString + "/t"
+    val dir = SparkEntry.tempDir("graft-observe").toString + "/t"
     observed.write.mode("overwrite").parquet(dir)
     val m = obs.get
     assert(m("n") == 5L && m("sum_v") == 15L && m("nulls") == 0L, m.toString)
   }
 
   test("publishIfStale recomputes only when upstream moved forward") {
-    val dir = Files.createTempDirectory("graft-fresh").toString + "/t"
+    val dir = SparkEntry.tempDir("graft-fresh").toString + "/t"
     var computes = 0
     def df = { computes += 1; Seq((1L, "a"), (2L, "b")).toDF("k", "v") }
     def write(d: org.apache.spark.sql.DataFrame): Unit =
@@ -177,7 +175,7 @@ class SinkSpec extends SparkSpec {
 
   test("compactParquet merges a small-files directory losslessly") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("compact_spec_").toFile.getPath
+    val tmp = SparkEntry.tempDir("compact_spec_").getPath
     val df = (1L to 10000L).map(i => (i, s"payload-$i")).toDF("id", "v")
     df.repartition(64).write.mode("overwrite").parquet(tmp) // 64 tiny files
     val before = new java.io.File(tmp).listFiles.count(_.getName.endsWith(".parquet"))
@@ -194,7 +192,7 @@ class SinkSpec extends SparkSpec {
 
   test("parquet bloom filters: written, audited, no false negatives, typo caught") {
     import graft.operators.Sink
-    val dir = Files.createTempDirectory("graft-bloom").toString + "/t"
+    val dir = SparkEntry.tempDir("graft-bloom").toString + "/t"
     val df = (1L to 5000L).map(i => (i * 7919L % 1000003L, s"p$i"))
       .toDF("id", "payload")
     Sink.writeParquetWithBloom(df.repartition(2), dir, Seq("id"), ndv = 10000L)
@@ -216,7 +214,7 @@ class SinkSpec extends SparkSpec {
       .collect().count(!_.getBoolean(1))
     assert(misses > 150, s"expected most absent probes false, got $misses/200")
     // a mistyped column writes NOTHING — exactly what the audit catches
-    val dir2 = Files.createTempDirectory("graft-bloom2").toString + "/t"
+    val dir2 = SparkEntry.tempDir("graft-bloom2").toString + "/t"
     Sink.writeParquetWithBloom(df, dir2, Seq("id_typo"))
     val a2 = Sink.bloomAudit(spark, dir2, Seq("id")).head
     assert(a2.getLong(2) == 0L)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -10,7 +8,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv source round-trips typed rows with header + schema inference") {
-    val dir = Files.createTempDirectory("graft-csv").toString + "/out"
+    val dir = SparkEntry.tempDir("graft-csv").toString + "/out"
     val df = Seq((1L, "alpha", 1.5), (2L, "beta", -2.0)).toDF("id", "name", "score")
     df.write.option("header", "true").csv(dir)
     val back = Tables.csv(spark, dir).orderBy("id").collect()
@@ -21,7 +19,7 @@ class SourcesSpec extends SparkSpec {
 
   test("jdbc round-trips typed rows via embedded Derby; partitioned read slices by key") {
     import graft.sources.Jdbc
-    val dir = Files.createTempDirectory("graft-jdbc").toString
+    val dir = SparkEntry.tempDir("graft-jdbc").toString
     System.setProperty("derby.stream.error.file", s"$dir/derby.log")
     val url = s"jdbc:derby:$dir/db;create=true"
     val df = (1L to 20L).map(i => (i, s"name_$i", i.toInt * 10, i * 1.5)).toDF("id", "name", "n", "score")
@@ -41,7 +39,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("jsonLines source reads nested records") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString + "/out"
+    val dir = SparkEntry.tempDir("graft-jsonl").toString + "/out"
     Seq("""{"id":1,"meta":{"lang":"en","tags":["a","b"]}}""",
       """{"id":2,"meta":{"lang":"fr","tags":[]}}""").toDF("value")
       .write.text(dir)
@@ -52,7 +50,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csvGrid skips leading decoration rows before the real header") {
-    val dir = Files.createTempDirectory("graft-grid").toString + "/sheet"
+    val dir = SparkEntry.tempDir("graft-grid").toString + "/sheet"
     Seq("Rapport PNLS — T4", "Region: Centre", "site,indicateur,valeur",
       "s1,tx_new,10", "s2,tx_new,12").toDF("value").coalesce(1).write.text(dir)
     val back = Tables.csvGrid(spark, dir, skipLines = 2).orderBy("site").collect()
@@ -62,7 +60,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csvGrid keeps body rows that equal the header line (positional skip, not value filter)") {
-    val dir = Files.createTempDirectory("graft-grid2").toString + "/sheet"
+    val dir = SparkEntry.tempDir("graft-grid2").toString + "/sheet"
     // second body row is byte-identical to the header — must survive
     Seq("TITLE", "a,b", "a,b", "x,y").toDF("value").coalesce(1).write.text(dir)
     val back = Tables.csvGrid(spark, dir, skipLines = 1).orderBy("a").collect()
@@ -71,7 +69,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csvGrid reads multiple files, skipping decoration per file") {
-    val dir = Files.createTempDirectory("graft-grid3").toString + "/sheets"
+    val dir = SparkEntry.tempDir("graft-grid3").toString + "/sheets"
     Seq("junk1", "site,v", "s1,1").toDF("value").coalesce(1)
       .write.text(dir + "/f1")
     Seq("junk2", "site,v", "s2,2").toDF("value").coalesce(1)
@@ -82,7 +80,7 @@ class SourcesSpec extends SparkSpec {
 
   test("xlsx round-trips a typed grid through write + grid read") {
     import graft.sources.Xlsx
-    val path = Files.createTempDirectory("graft-xlsx").toString + "/wb.xlsx"
+    val path = SparkEntry.tempDir("graft-xlsx").toString + "/wb.xlsx"
     Xlsx.write(path, Seq(
       Seq[Any]("DECORATION", null),
       Seq[Any]("name", "score"),
@@ -96,7 +94,7 @@ class SourcesSpec extends SparkSpec {
 
   test("xlsx reader restores sparse cells and skipped empty rows positionally") {
     import graft.sources.Xlsx
-    val path = Files.createTempDirectory("graft-xlsx2").toString + "/wb.xlsx"
+    val path = SparkEntry.tempDir("graft-xlsx2").toString + "/wb.xlsx"
     // row 2 entirely empty (gap), row 3 has only column C populated
     Xlsx.write(path, Seq(
       Seq[Any]("a", "b", "c"),
@@ -110,7 +108,7 @@ class SourcesSpec extends SparkSpec {
 
   test("xlsx reader fans out across multiple workbooks (one task per file)") {
     import graft.sources.Xlsx
-    val dir = Files.createTempDirectory("graft-xlsx3").toString
+    val dir = SparkEntry.tempDir("graft-xlsx3").toString
     Xlsx.write(s"$dir/site1.xlsx", Seq(Seq[Any]("site", "v"), Seq[Any]("s1", 1)))
     Xlsx.write(s"$dir/site2.xlsx", Seq(Seq[Any]("site", "v"), Seq[Any]("s2", 2)))
     val df = Xlsx.grid(spark, dir, skipRows = 0)
@@ -123,7 +121,7 @@ class SourcesSpec extends SparkSpec {
     import java.util.zip.{ZipEntry, ZipOutputStream}
     // hand-built workbook: inline strings split into multiple <r> runs, the
     // shape Excel produces when part of a cell is bold/colored
-    val path = Files.createTempDirectory("graft-xlsx4").toString + "/rich.xlsx"
+    val path = SparkEntry.tempDir("graft-xlsx4").toString + "/rich.xlsx"
     val sheet =
       """<?xml version="1.0" encoding="UTF-8"?>
         |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
@@ -146,7 +144,7 @@ class SourcesSpec extends SparkSpec {
 
   test("xlsx reader resolves sheets by display name like the reference's sheet_name=") {
     import graft.sources.Xlsx
-    val path = Files.createTempDirectory("graft-xlsx5").toString + "/wb.xlsx"
+    val path = SparkEntry.tempDir("graft-xlsx5").toString + "/wb.xlsx"
     Xlsx.write(path, Seq(Seq[Any]("k", "v"), Seq[Any]("a", 1)))
     // the writer names its sheet "Sheet1"; both the part name and the
     // display name must reach the same grid
@@ -185,7 +183,7 @@ class SourcesSpec extends SparkSpec {
   test("resolveColumns makes messy xlsx headers ingestible end-to-end") {
     import graft.operators.Relational
     import graft.sources.Xlsx
-    val path = Files.createTempDirectory("graft-xlsx-h").toString + "/chu.xlsx"
+    val path = SparkEntry.tempDir("graft-xlsx-h").toString + "/chu.xlsx"
     Xlsx.write(path, Seq(
       Seq[Any]("Étàblissement—Sanitaire", "Périodes"),
       Seq[Any]("chu-a", "2024Q1")))
@@ -199,7 +197,7 @@ class SourcesSpec extends SparkSpec {
 
   test("auto dispatches by file extension with a clear error otherwise") {
     import graft.sources.{Tables => T, Xlsx}
-    val dir = Files.createTempDirectory("graft-auto").toString
+    val dir = SparkEntry.tempDir("graft-auto").toString
     // parquet
     Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
     assert(T.auto(spark, s"$dir/t.parquet").count() == 1)
@@ -231,7 +229,7 @@ class SourcesSpec extends SparkSpec {
         Seq.fill(1 + r.nextInt(12))(pool(r.nextInt(pool.length))).mkString,
         s"v$i")
     }
-    val dir = Files.createTempDirectory("graft-xlsx-fuzz").toString
+    val dir = SparkEntry.tempDir("graft-xlsx-fuzz").toString
     Xlsx.write(s"$dir/fuzz.xlsx", rows)
     val back = graft.sources.Xlsx.grid(spark, s"$dir/fuzz.xlsx", skipRows = 0)
       .orderBy(col("h2"))
@@ -246,7 +244,7 @@ class SourcesSpec extends SparkSpec {
 
   test("csvWithQuarantine routes malformed lines to the dead-letter side, keeps clean rows typed") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-quarantine").toString
+    val dir = SparkEntry.tempDir("graft-quarantine").toString
     Seq(
       "id,score",
       "1,10.5",
@@ -266,7 +264,7 @@ class SourcesSpec extends SparkSpec {
 
   test("jsonWithQuarantine routes malformed lines to the dead-letter side, keeps clean rows typed") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-jquarantine").toString
+    val dir = SparkEntry.tempDir("graft-jquarantine").toString
     Seq(
       """{"id": 1, "score": 10.5}""",
       """{"id": 2, "score": """, // truncated JSON
@@ -285,8 +283,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("xml roundtrip preserves typed rows including XML-hostile strings") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_xml_spec_").toFile
-    tmp.deleteOnExit()
+    val tmp = SparkEntry.tempDir("graft_xml_spec_")
     val path = new java.io.File(tmp, "rows").getPath
     val df = Seq(
       (1L, "plain", 1.5),
@@ -313,8 +310,7 @@ class SourcesSpec extends SparkSpec {
   test("fixed-width roundtrip preserves values; nulls pad to blanks and read back null") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fw_spec_").toFile
-    tmp.deleteOnExit()
+    val tmp = SparkEntry.tempDir("graft_fw_spec_")
     val path = new java.io.File(tmp, "fw").getPath
     val df = Seq(
       (1L, "AB", Some(42L)),

@@ -7,8 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * JVM; suites run sequentially), so Spark startup is paid once. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    // keep catalog artifacts (warehouse, derby metastore) out of the repo
-    val scratch = java.nio.file.Files.createTempDirectory("graft-test").toString
+    // keep catalog artifacts (warehouse, derby metastore) out of the repo;
+    // the tree is deleted when the JVM exits. Not a SparkEntry.tempDir:
+    // ExportSpec's deleteTempDirs() runs mid-suite, and the session's
+    // warehouse and embedded Derby's home must outlive it.
+    val scratchDir = java.nio.file.Files.createTempDirectory("graft-test").toFile
+    sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(scratchDir))
+    val scratch = scratchDir.toString
     System.setProperty("derby.system.home", scratch)
     val s = GraftSession.builder("4")
       .appName("graft-test")

@@ -215,8 +215,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source streaming (readStream over parquet, AvailableNow) equals batch") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-stream-src").toString + "/events"
+    val dir = SparkEntry.tempDir("graft-stream-src").toString + "/events"
     val batchDf = sample.toDF("event_id", "ts", "user_id", "event_type", "value")
     batchDf.write.parquet(dir)
     val expected = Events.hourlyAggBatch(batchDf)
