@@ -11,6 +11,36 @@ import org.apache.spark.sql.functions._
   * bit-for-bit. */
 object Models {
 
+  /** Run `n` independent fits, each of which starts Spark jobs, concurrently
+    * and return their results in order. All of them run in one job group
+    * that interrupts its tasks on cancel. The first fit to throw cancels
+    * the group, including jobs its siblings have not started yet; the call
+    * returns once every fit has ended, so no job of the group is left
+    * running, and rethrows that first exception (a `require` message
+    * surfaces as declared, not as a sibling's cancellation). Each fit parks
+    * a global-EC thread for whole Spark jobs, so it runs in `blocking`,
+    * which lets the pool grow instead of starving other users of it. */
+  private[operators] def concurrentFits[T](
+      spark: org.apache.spark.sql.SparkSession, name: String, n: Int)(fit: Int => T): Seq[T] = {
+    import scala.concurrent.{blocking, Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val sc = spark.sparkContext
+    val group = s"$name-${java.util.UUID.randomUUID}"
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val fits = (0 until n).map { i => Future { blocking {
+      sc.setJobGroup(group, s"$name fit $i", interruptOnCancel = true)
+      try fit(i)
+      catch { case e: Throwable =>
+        if (first.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
+        throw e
+      } finally sc.clearJobGroup()
+    } } }
+    fits.foreach(Await.ready(_, Duration.Inf))
+    Option(first.get).foreach(e => throw e)
+    fits.map(_.value.get.get)
+  }
+
   /** Distributed logistic regression by a FIXED quantized batch
     * gradient-descent schedule — the in-engine propensity/quality
     * classifier (the fit half the scoring operators assume): an intercept
@@ -274,23 +304,16 @@ object Models {
     // otherwise leaves the cluster idle between the sequential collects;
     // r14). Exact-integer argmaxes on fixed subsamples are deterministic,
     // so concurrency cannot change a split.
-    val fits = {
-      import scala.concurrent.{blocking, Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence((1 to bags).map { b => Future {
-        val sub = base.filter(
-          Sampling.hashBucket(concat(col("__id"), lit(s"#bag$b")), 100) < samplePct)
-        // blocking{}: the collect parks this global-EC thread for the whole
-        // Spark job — mark it so the pool grows instead of starving other
-        // users of the shared EC in this JVM (r15 ADVICE)
-        val cands = blocking { stumpBest(sub, col("__v"), binCols).collect() }
-        require(cands.nonEmpty, s"bag $b has no split candidate (constant features?)")
-        val r = cands.head
-        (b, r.getAs[String]("feature"), r.getAs[Long]("bin"),
-          r.getAs[Long]("nl"), r.getAs[Long]("nt"),
-          r.getAs[Long]("sl"), r.getAs[Long]("st"))
-      } }), Duration.Inf)
+    val fits = concurrentFits(spark, "baggedStumps", bags) { i =>
+      val b = i + 1
+      val sub = base.filter(
+        Sampling.hashBucket(concat(col("__id"), lit(s"#bag$b")), 100) < samplePct)
+      val cands = stumpBest(sub, col("__v"), binCols).collect()
+      require(cands.nonEmpty, s"bag $b has no split candidate (constant features?)")
+      val r = cands.head
+      (b, r.getAs[String]("feature"), r.getAs[Long]("bin"),
+        r.getAs[Long]("nl"), r.getAs[Long]("nt"),
+        r.getAs[Long]("sl"), r.getAs[Long]("st"))
     }
     val preds = fits.map { case (_, feat, split, nl, nt, sl, st) =>
       val ml = sl.toDouble / 1e6 / nl.toDouble

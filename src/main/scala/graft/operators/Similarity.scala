@@ -399,28 +399,22 @@ object Similarity {
     // sequential because driver code calls them sequentially; each fit's
     // tail otherwise leaves the cluster idle). Seeded KMeans on identical
     // data is deterministic, so concurrency cannot change a codeword.
-    import scala.concurrent.{blocking, Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fits = (0 until m).map { s => Future { blocking {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val training = sample.select(
-        array_to_vector(slice(col(vecCol), lit(s * sub + 1), lit(sub))).as("features"))
-      // 10 iterations: the coarse codebook saturates in a handful of
-      // sweeps, and each extra iteration is a scheduled Spark job per
-      // subspace (m fits x iters jobs dominated q_ann_pq's 6.6 s bench).
-      // blocking{}: each fit parks its global-EC thread for whole Spark
-      // jobs — mark it so the pool grows instead of starving (r15 ADVICE)
-      val model = new KMeans().setK(codes).setSeed(seed + s).setMaxIter(10)
-        .setFeaturesCol("features").fit(training)
-      require(model.clusterCenters.length == codes,
-        s"subspace $s fit ${model.clusterCenters.length} codewords, need $codes " +
-          "(corpus sample has too few distinct sub-vectors)")
-      model.clusterCenters.map(_.toArray).sortBy(_.toSeq)
-    } } }
     val cents: Array[Array[Array[Double]]] =
-      Await.result(Future.sequence(fits), Duration.Inf).toArray
+      Models.concurrentFits(corpus.sparkSession, "pqTopK", m) { s =>
+        import org.apache.spark.ml.clustering.KMeans
+        import org.apache.spark.ml.functions.array_to_vector
+        val training = sample.select(
+          array_to_vector(slice(col(vecCol), lit(s * sub + 1), lit(sub))).as("features"))
+        // 10 iterations: the coarse codebook saturates in a handful of
+        // sweeps, and each extra iteration is a scheduled Spark job per
+        // subspace (m fits x iters jobs dominated q_ann_pq's 6.6 s bench).
+        val model = new KMeans().setK(codes).setSeed(seed + s).setMaxIter(10)
+          .setFeaturesCol("features").fit(training)
+        require(model.clusterCenters.length == codes,
+          s"subspace $s fit ${model.clusterCenters.length} codewords, need $codes " +
+            "(corpus sample has too few distinct sub-vectors)")
+        model.clusterCenters.map(_.toArray).sortBy(_.toSeq)
+      }.toArray
     pqSearch(corpus, queries, idCol, vecCol, k, rerank, cents)
   }
 

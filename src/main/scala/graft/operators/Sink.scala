@@ -41,7 +41,8 @@ object Sink {
     * at scale. One pass: size the input from the file index (no data read),
     * rewrite with `coalesce(ceil(bytes/target))` — coalesce, not
     * repartition, so compaction itself shuffles nothing. Returns the new
-    * file count. */
+    * file count. The read infers the schema (one footer job): `path` was
+    * written by someone else, so its schema is not known here. */
   def compactParquet(
       spark: org.apache.spark.sql.SparkSession,
       path: String,

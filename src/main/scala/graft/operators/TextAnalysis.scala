@@ -390,22 +390,19 @@ object TextAnalysis {
     * the one engine-wobbly op, so it prices the output but never the
     * order) with (w1, w2) ties, and the `minCount` support filter runs
     * BEFORE the unigram joins so the pair table shrinks first. Shapes:
-    * two partial-agg counts + two equi-joins on the word key + one
-    * bounded top-N. */
+    * the corpus is tokenized once, into one (w1, w2) count table pinned by
+    * a local checkpoint (`w1` NULL for a document's first token), and the
+    * bigram, unigram and total counts are all read from it; then two
+    * equi-joins on the word key + one bounded top-N. */
   def collocations(
       df: DataFrame, textCol: String, minCount: Long = 5L, topN: Int = 50): DataFrame = {
-    val arr = regexp_extract_all(lower(col(textCol)), lit("[a-z0-9_]+"), lit(0))
-    val big = df.select(arr.as("__ws")).filter(size(col("__ws")) >= 2)
-      .select(explode(transform(sequence(lit(1), size(col("__ws")) - 1),
-        i => struct(
-          element_at(col("__ws"), i).as("w1"),
-          element_at(col("__ws"), i + 1).as("w2")))).as("__b"))
-      .select(col("__b.w1").as("w1"), col("__b.w2").as("w2"))
-    val uni = df.select(explode(arr).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__c"))
-    val nn = big.agg(count(lit(1)).as("__n"))
-    big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .filter(col("c12") >= minCount)
+    val pairs = bigramTerms(df.select(col(textCol)), Nil, textCol, "[a-z0-9_]+")
+      .groupBy(col("__w1").as("w1"), col("__w2").as("w2")).agg(count(lit(1)).as("c12"))
+      .localCheckpoint(true)
+    val big = pairs.filter(col("w1").isNotNull)
+    val uni = pairs.groupBy(col("w2").as("__w")).agg(sum(col("c12")).as("__c"))
+    val nn = big.agg(sum(col("c12")).as("__n"))
+    big.filter(col("c12") >= minCount)
       .crossJoin(broadcast(nn))
       .join(uni.select(col("__w").as("w1"), col("__c").as("__c1")), Seq("w1"))
       .join(uni.select(col("__w").as("w2"), col("__c").as("__c2")), Seq("w2"))
@@ -2065,7 +2062,8 @@ object TextAnalysis {
       minLen: Int = 1): DataFrame = {
     require(discount > 0 && discount < 1, s"discount must be in (0,1), got $discount")
     require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    val big = bigramTerms(ref.select(col(textCol)), Nil, textCol, minLen)
+    val token = s"[a-z0-9]{$minLen,}"
+    val big = bigramTerms(ref.select(col(textCol)), Nil, textCol, token)
       .filter(col("__w1").isNotNull)
       .groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12"))
       .localCheckpoint(true)
@@ -2073,7 +2071,7 @@ object TextAnalysis {
       .agg(sum(col("__c12")).as("__c1"), count(lit(1)).as("__n1l"))
     val cont = big.groupBy(col("__w2")).agg(count(lit(1)).as("__n1r"))
     val btot = big.agg(count(lit(1)).as("__b"))
-    val joined = bigramTerms(df.select(col(idCol), col(textCol)), Seq(col(idCol)), textCol, minLen)
+    val joined = bigramTerms(df.select(col(idCol), col(textCol)), Seq(col(idCol)), textCol, token)
       .join(broadcast(big), Seq("__w1", "__w2"), "left")
       .join(broadcast(ctx), Seq("__w1"), "left")
       .join(broadcast(cont), Seq("__w2"), "left")
@@ -2092,8 +2090,8 @@ object TextAnalysis {
         round(exp(col("__ce")), 6).as("perplexity"))
   }
 
-  /** The bigram scorers' term stream: one row per `[a-z0-9]{minLen,}` token
-    * of lower-cased `textCol`, carrying `cols`, with `__w2` the token and
+  /** The bigram term stream: one row per `token` regex match in lower-cased
+    * `textCol`, carrying `cols`, with `__w2` the token and
     * `__w1` the token before it (NULL for a document's first token). One
     * posexplode of the token array, so the whole stream is one codegen'd
     * map-side pass; the reference's bigrams are its rows with `__w1` set.
@@ -2102,9 +2100,9 @@ object TextAnalysis {
     * plain posexplode makes Spark infer `size(__toks) > 0` and push it
     * below the projection, running the regex three times per document.) */
   private def bigramTerms(d: DataFrame, cols: Seq[Column], textCol: String,
-      minLen: Int): DataFrame =
+      token: String): DataFrame =
     d.select(cols :+ regexp_extract_all(lower(col(textCol)),
-        lit(s"[a-z0-9]{$minLen,}"), lit(0)).as("__toks"): _*)
+        lit(token), lit(0)).as("__toks"): _*)
       .select(cols :+ col("__toks") :+ posexplode_outer(col("__toks")).as(Seq("__p", "__w2")): _*)
       .filter(col("__w2").isNotNull)
       .select(cols :+ when(col("__p") > 0, element_at(col("__toks"), col("__p"))).as("__w1")
@@ -2431,13 +2429,14 @@ object TextAnalysis {
       alpha: Double = 0.4,
       minLen: Int = 1): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    val pairs = bigramTerms(ref.select(col(textCol)), Nil, textCol, minLen)
+    val token = s"[a-z0-9]{$minLen,}"
+    val pairs = bigramTerms(ref.select(col(textCol)), Nil, textCol, token)
       .groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12"))
       .localCheckpoint(true)
     val big = pairs.filter(col("__w1").isNotNull)
     val uni = pairs.groupBy(col("__w2")).agg(sum(col("__c12")).as("__c2"))
     val ntot = pairs.agg(sum(col("__c12")).as("__nt"))
-    val joined = bigramTerms(df.select(col(idCol), col(textCol)), Seq(col(idCol)), textCol, minLen)
+    val joined = bigramTerms(df.select(col(idCol), col(textCol)), Seq(col(idCol)), textCol, token)
       .join(broadcast(big), Seq("__w1", "__w2"), "left")
       .join(broadcast(uni), Seq("__w2"), "left")
       .join(broadcast(uni.select(col("__w2").as("__w1"), col("__c2").as("__c1"))),

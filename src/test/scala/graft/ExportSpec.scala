@@ -7,7 +7,8 @@ import graft.sources.Tables
 
 /** `q_partitioned_export` writes on every core, one file per period, and
   * reads its partitioned output back without a partition-listing or a
-  * schema-inference job. */
+  * schema-inference job; the other round trips declare the schema they
+  * wrote too. */
 class ExportSpec extends SparkSpec with BeforeAndAfterAll {
 
   private lazy val recorder = new JobRecorder(spark)
@@ -34,6 +35,17 @@ class ExportSpec extends SparkSpec with BeforeAndAfterAll {
     assert(files.size == periods, files)
     assert(files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.size == periods, files)
   }
+
+  // compactParquet infers the schema of the directory it is handed
+  for ((q, footerJobs) <- Seq(
+      "q_compact_roundtrip" -> 1, "q_overwrite_partitions" -> 0, "q_zorder_layout" -> 0))
+    test(s"$q reads back with the schema it wrote: $footerJobs schema-inference jobs") {
+      SparkEntry.queries(q)(spark, sf).collect() // caches the source tables' schemas
+      recorder.clear()
+      SparkEntry.queries(q)(spark, sf).collect()
+      recorder.flush()
+      assert(recorder.parquetReads.size == footerJobs, recorder.parquetReads)
+    }
 
   test("deleteTempDirs removes the export's whole output tree") {
     val out = SparkEntry.queries("q_partitioned_export")(spark, sf)

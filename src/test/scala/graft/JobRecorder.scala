@@ -4,7 +4,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -12,14 +13,19 @@ import org.scalatest.time.SpanSugar._
 /** Records the jobs a session's context starts: each job's label (its
   * description, else its first stage's name, e.g. `parquet at
   * Tables.scala:43`) and the call sites of its stages, and the task counts
-  * of the stages that wrote output. Add it to the context, `clear()`, run
-  * the code under test, then `flush()` before reading. */
+  * of the stages that wrote output, and which jobs have not ended. Add it
+  * to the context, `clear()`, run the code under test, then `flush()`
+  * before reading. */
 class JobRecorder(spark: SparkSession) extends SparkListener {
   private val started = new ConcurrentLinkedQueue[(String, Seq[String])]
+  private val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
   private val writeTasks = new ConcurrentLinkedQueue[Int]
   private val marker = "job-recorder-marker"
 
-  def clear(): Unit = { started.clear(); writeTasks.clear() }
+  def clear(): Unit = { started.clear(); running.clear(); writeTasks.clear() }
+
+  /** Ids of the jobs started since `clear()` that have not ended. */
+  def activeJobs: Set[Int] = running.asScala.toSet
 
   /** Labels of the jobs started since `clear()`. */
   def jobs: Seq[String] = started.asScala.map(_._1).filter(_ != marker).toSeq
@@ -45,11 +51,14 @@ class JobRecorder(spark: SparkSession) extends SparkListener {
     }
   }
 
-  override def onJobStart(e: SparkListenerJobStart): Unit =
-    started.add((
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse(e.stageInfos.headOption.fold("")(_.name)),
-      e.stageInfos.map(_.details)))
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val label = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .getOrElse(e.stageInfos.headOption.fold("")(_.name))
+    if (label != marker) running.add(e.jobId)
+    started.add((label, e.stageInfos.map(_.details)))
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = running.remove(e.jobId)
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val m = e.stageInfo.taskMetrics

@@ -16,10 +16,11 @@ import org.scalatest.time.SpanSugar._
 import graft.operators.Dedup
 
 /** The curate model tables are each computed once per call: the bigram
-  * scorers tokenize their English reference in one stage and the MinHash
-  * self-join signs each document in one stage, read off every executed
-  * plan of the call (eager checkpoints included; a reused exchange is not
-  * run again, so it is not descended into). */
+  * scorers tokenize their English reference in one stage, collocations
+  * tokenize the corpus in one stage, and the MinHash self-join signs each
+  * document in one stage, read off every executed plan of the call (eager
+  * checkpoints included; a reused exchange is not run again, so it is not
+  * descended into). */
 class ModelReuseSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
   private val marker = "model_reuse_spec_marker"
   private val executed = new ConcurrentLinkedQueue[QueryExecution]
@@ -67,6 +68,15 @@ class ModelReuseSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSpark
         .filter(_.contains("size(regexp_extract_all("))
       assert(inferred.isEmpty, s"${inferred.size} expressions, e.g. ${inferred.take(1)}")
     }
+
+  test("q_collocations tokenizes each document once") {
+    val plans = plansOf("q_collocations")
+    val n = plans.map(p => collect(p) { case g: GenerateExec => g }.size).sum
+    assert(n == 1, s"$n tokenizing stages over ${plans.size} executed plans")
+    val inferred = nodeExpressions(plans).map(_.toString)
+      .filter(_.contains("size(regexp_extract_all("))
+    assert(inferred.isEmpty, s"${inferred.size} expressions, e.g. ${inferred.take(1)}")
+  }
 
   test("q_dedup_minhash signs each document in one stage") {
     val plans = plansOf("q_dedup_minhash")

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, lit, udf}
 
-import graft.operators.Models
+import graft.operators.{Models, Sampling}
 
 class ModelsSpec extends SparkSpec {
   import spark.implicits._
@@ -187,6 +187,30 @@ class ModelsSpec extends SparkSpec {
     val g7 = Models.baggedStumps(df.repartition(7), "y", Seq("a", "weak"), "rid",
       bags = 3).orderBy("bag").collect()
     assert(g7.map(_.getAs[Long]("n_bag")).toSeq == sizes.toSeq)
+  }
+
+  test("baggedStumps: the first failed bag cancels its siblings' jobs and its require surfaces") {
+    // bag 1's subsample has one constant feature value, so its fit fails
+    // fast; bags 2 and 3 draw other rows, whose feature takes 200 ms a row
+    val inBag1 = spark.range(200)
+      .filter(Sampling.hashBucket(concat(col("id").cast("string"), lit("#bag1")), 100) < 50)
+      .as[Long].collect().toSet
+    val feature = udf { (id: Long) =>
+      if (inBag1(id)) 0L else { Thread.sleep(200); id % 2 } }
+    val df = spark.range(0, 200, 1, 1)
+      .select(col("id").as("rid"), (col("id") % 7).cast("double").as("y"), feature(col("id")).as("a"))
+    val recorder = new JobRecorder(spark)
+    spark.sparkContext.addSparkListener(recorder)
+    try {
+      recorder.clear()
+      val e = intercept[IllegalArgumentException] {
+        Models.baggedStumps(df, "y", Seq("a"), "rid", bags = 3, samplePct = 50)
+      }
+      assert(e.getMessage.contains("bag 1 has no split candidate"), e.getMessage)
+      recorder.flush()
+      assert(recorder.jobs.nonEmpty)
+      assert(recorder.activeJobs.isEmpty, s"jobs still running: ${recorder.activeJobs}")
+    } finally spark.sparkContext.removeSparkListener(recorder)
   }
 
   test("poissonDispersion: deterministic counts read under-, inflated variance over-") {
