@@ -328,6 +328,11 @@ object Funnel {
       .filter(col("__prev").isNotNull)
       .groupBy(col("__prev").as("state"), col(stateCol).as("next_state"))
       .agg(count(lit(1)).as("n"))
+    transitionProbs(counts)
+  }
+
+  /** Each (state, next_state, n) count's share of its state's row. */
+  def transitionProbs(counts: DataFrame): DataFrame = {
     val byState = org.apache.spark.sql.expressions.Window.partitionBy(col("state"))
     counts.withColumn("p", col("n") / sum(col("n")).over(byState))
   }

@@ -560,19 +560,29 @@ object Models {
       runningCol: String,
       outcomeCol: String,
       cutoff: Double,
+      bandwidth: Double): DataFrame =
+    rdAssemble(rdMoments(df, runningCol, outcomeCol, cutoff, bandwidth))
+
+  /** Moment half of [[regressionDiscontinuity]]: per side of the cutoff,
+    * the quantized DECIMAL sums of the rows inside the bandwidth — a
+    * streaming twin's state. */
+  def rdMoments(
+      df: DataFrame,
+      runningCol: String,
+      outcomeCol: String,
+      cutoff: Double,
       bandwidth: Double): DataFrame = {
     require(bandwidth > 0, s"bandwidth must be > 0, got $bandwidth")
     def q(c: Column) = floor(c * 1e6 + 0.5).cast("decimal(38,0)")
     val x = col(runningCol).cast("double") - lit(cutoff)
-    val base = df
-      .filter(abs(col(runningCol).cast("double") - lit(cutoff)) <= bandwidth)
+    df.filter(abs(col(runningCol).cast("double") - lit(cutoff)) <= bandwidth)
       .select((x >= 0).as("__above"), q(x).as("__qx"),
         q(col(outcomeCol).cast("double")).as("__qy"))
-    rdAssemble(base.groupBy(col("__above")).agg(
-      count(lit(1)).as("n"),
-      sum(col("__qx")).as("__sx0"), sum(col("__qy")).as("__sy0"),
-      sum(col("__qx") * col("__qx")).as("__sxx0"),
-      sum(col("__qx") * col("__qy")).as("__sxy0")))
+      .groupBy(col("__above")).agg(
+        count(lit(1)).as("n"),
+        sum(col("__qx")).as("__sx0"), sum(col("__qy")).as("__sy0"),
+        sum(col("__qx") * col("__qx")).as("__sxx0"),
+        sum(col("__qx") * col("__qy")).as("__sxy0"))
   }
 
   /** Readout half of [[regressionDiscontinuity]] over the pre-aggregated
@@ -1743,13 +1753,16 @@ object Models {
       successCol: String,
       dp: Int = 6): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column required")
-    ebRateShrinkageFromCounts(
-      df.groupBy(keyCols.map(col): _*)
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col(successCol).cast("boolean"), 1L).otherwise(0L)).as("x")),
-      keyCols, dp)
+    ebRateShrinkageFromCounts(ebCounts(df, keyCols, successCol), keyCols, dp)
   }
+
+  /** Per key, the trial and success counts `(n, x)` [[ebRateShrinkage]]
+    * shrinks — one aggregate, so a streaming twin keeps it as state. */
+  def ebCounts(df: DataFrame, keyCols: Seq[String], successCol: String): DataFrame =
+    df.groupBy(keyCols.map(col): _*)
+      .agg(
+        count(lit(1)).as("n"),
+        sum(when(col(successCol).cast("boolean"), 1L).otherwise(0L)).as("x"))
 
   /** [[ebRateShrinkage]]'s assembly half over pre-aggregated per-key
     * `(n, x)` trial/success counts — the streaming twin maintains exactly

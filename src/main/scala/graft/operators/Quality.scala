@@ -556,11 +556,19 @@ object Quality {
       df: DataFrame,
       scoreCol: String,
       labelCol: Column,
+      bins: Int = 10): DataFrame =
+    calibrationAssemble(calibrationBins(df, scoreCol, labelCol, bins))
+
+  /** Count half of [[calibration]]: per score bin, (n, quantized score sum
+    * `__sq`, n_pos) in one aggregate — a streaming twin's state. */
+  def calibrationBins(
+      df: DataFrame,
+      scoreCol: String,
+      labelCol: Column,
       bins: Int = 10): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
     val sc = col(scoreCol).cast("double")
-    val binned = df
-      .withColumn("__bin",
+    df.withColumn("__bin",
         least(floor(sc * bins).cast("long"), lit(bins - 1L)))
       .withColumn("__q", floor(sc * 1e9 + 0.5).cast("long"))
       .withColumn("__pos", labelCol.cast("long"))
@@ -568,6 +576,10 @@ object Quality {
       .agg(count(lit(1)).as("n"),
         sum(col("__q")).as("__sq"),
         sum(col("__pos")).as("n_pos"))
+  }
+
+  /** Readout half of [[calibration]] over [[calibrationBins]]. */
+  def calibrationAssemble(binned: DataFrame): DataFrame = {
     val total = binned.agg(sum(col("n")).as("__nt"))
     binned.crossJoin(broadcast(total))
       .withColumn("mean_score",

@@ -1561,10 +1561,7 @@ object Sketches {
     * (a raw double sum would depend on partial-agg order). Returns
     * `(n, n_cells, dof, chi2)`. */
   def chiSquare(df: DataFrame, colA: String, colB: String): DataFrame = {
-    val cells = df
-      .filter(col(colA).isNotNull && col(colB).isNotNull)
-      .groupBy(col(colA).as("__a"), col(colB).as("__b"))
-      .agg(count(lit(1)).as("__o"))
+    val cells = contingencyCells(df, colA, colB)
     val wa = org.apache.spark.sql.expressions.Window.partitionBy(col("__a"))
     val wb = org.apache.spark.sql.expressions.Window.partitionBy(col("__b"))
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
@@ -1668,10 +1665,14 @@ object Sketches {
     * (lim x·ln x = 0) and are absent from the cell table anyway.
     * Returns `(n, n_cells, dof, g)`. */
   def gTest(df: DataFrame, colA: String, colB: String): DataFrame =
-    gTestFromCells(df
-      .filter(col(colA).isNotNull && col(colB).isNotNull)
+    gTestFromCells(contingencyCells(df, colA, colB))
+
+  /** The `(__a, __b, __o)` contingency cells of the rows where both
+    * columns are set: one aggregate, so a stream can keep them as state. */
+  def contingencyCells(df: DataFrame, colA: String, colB: String): DataFrame =
+    df.filter(col(colA).isNotNull && col(colB).isNotNull)
       .groupBy(col(colA).as("__a"), col(colB).as("__b"))
-      .agg(count(lit(1)).as("__o")))
+      .agg(count(lit(1)).as("__o"))
 
   /** The assembly half of [[gTest]] over a pre-aggregated contingency cell
     * table `(__a, __b, __o)` — e.g. maintained incrementally in a
@@ -1712,16 +1713,25 @@ object Sketches {
       groupCol: String,
       successCol: String,
       a: String,
+      b: String): DataFrame =
+    twoProportionAssemble(twoProportionCounts(df, groupCol, successCol, a, b))
+
+  /** The counting half of [[twoProportionZ]]: the four exact counters
+    * `(n_a, x_a, n_b, x_b)` in one global aggregate. */
+  def twoProportionCounts(
+      df: DataFrame,
+      groupCol: String,
+      successCol: String,
+      a: String,
       b: String): DataFrame = {
     def cnt(g: String, pred: Column) =
       sum(when(col(groupCol) === g && pred, 1L).otherwise(0L))
-    twoProportionAssemble(df
-      .filter(col(groupCol).isin(a, b))
+    df.filter(col(groupCol).isin(a, b))
       .agg(
         cnt(a, lit(true)).as("n_a"),
         cnt(a, col(successCol)).as("x_a"),
         cnt(b, lit(true)).as("n_b"),
-        cnt(b, col(successCol)).as("x_b")))
+        cnt(b, col(successCol)).as("x_b"))
   }
 
   /** The pure-assembly half of [[twoProportionZ]]: takes the four exact
@@ -4465,15 +4475,24 @@ object Sketches {
       valueCol: String,
       groupA: String,
       groupB: String,
-      dp: Int = 6): DataFrame = {
+      dp: Int = 6): DataFrame =
+    wassersteinAssemble(wassersteinCounts(df, groupCol, valueCol, groupA, groupB),
+      groupA, groupB, dp)
+
+  /** Count half of [[wasserstein1d]]: per distinct value, the count of
+    * each group's rows — a streaming twin's state. */
+  def wassersteinCounts(
+      df: DataFrame,
+      groupCol: String,
+      valueCol: String,
+      groupA: String,
+      groupB: String): DataFrame = {
     val isA = col(groupCol) === lit(groupA)
-    val hist = df
-      .filter(col(groupCol).isin(groupA, groupB))
+    df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(col(valueCol).cast("long").as("__v"))
       .agg(
         sum(when(isA, 1L).otherwise(0L)).as("__cA"),
         sum(when(!isA, 1L).otherwise(0L)).as("__cB"))
-    wassersteinAssemble(hist, groupA, groupB, dp)
   }
 
   /** Assembly half of [[wasserstein1d]] over a pre-aggregated
@@ -4596,17 +4615,26 @@ object Sketches {
       df: DataFrame,
       treatmentCol: String,
       metricCol: String,
+      covariateCol: String): DataFrame =
+    cupedAssemble(cupedMoments(df, treatmentCol, metricCol, covariateCol))
+
+  /** Moment half of [[cuped]]: the pooled and treated-arm quantized sums
+    * in one global aggregate — a streaming twin's state row. */
+  def cupedMoments(
+      df: DataFrame,
+      treatmentCol: String,
+      metricCol: String,
       covariateCol: String): DataFrame = {
     val y = col(metricCol).cast("double")
     val x = col(covariateCol).cast("double")
     val t = when(col(treatmentCol), 1.0).otherwise(0.0)
     def q(c: Column): Column = sum(floor(c * 1e6 + 0.5).cast("long"))
-    cupedAssemble(df.agg(
+    df.agg(
       count(lit(1)).as("n"),
       q(x).as("__sx"), q(y).as("__sy"),
       q(x * x).as("__sxx"), q(x * y).as("__sxy"), q(y * y).as("__syy"),
       sum(when(col(treatmentCol), 1L).otherwise(0L)).as("n_t"),
-      q(t * y).as("__syt"), q(t * x).as("__sxt")))
+      q(t * y).as("__syt"), q(t * x).as("__sxt"))
   }
 
   /** Readout half of [[cuped]] over the pre-aggregated quantized moment
@@ -4649,14 +4677,19 @@ object Sketches {
   def kishWeightedMean(
       df: DataFrame,
       valueCol: String,
-      weightCol: String): DataFrame = {
+      weightCol: String): DataFrame =
+    kishAssemble(kishMoments(df, valueCol, weightCol))
+
+  /** Moment half of [[kishWeightedMean]]: the quantized weight sums in
+    * one global aggregate — a streaming twin's state row. */
+  def kishMoments(df: DataFrame, valueCol: String, weightCol: String): DataFrame = {
     val y = col(valueCol).cast("double")
     val w = col(weightCol).cast("double")
     def q(c: Column): Column = sum(floor(c * 1e6 + 0.5).cast("long"))
-    kishAssemble(df.agg(
+    df.agg(
       count(lit(1)).as("n"),
       q(w).as("__sw"), q(w * y).as("__swy"),
-      q(w * w).as("__sww"), q(w * y * y).as("__swyy")))
+      q(w * w).as("__sww"), q(w * y * y).as("__swyy"))
   }
 
   /** Readout half of [[kishWeightedMean]] over a pre-aggregated
@@ -4692,9 +4725,14 @@ object Sketches {
       df: DataFrame,
       valueCol: String,
       groupCol: String): DataFrame =
-    jackknifeAssemble(df.groupBy(col(groupCol).as("__g")).agg(
+    jackknifeAssemble(jackknifeGroupSums(df, valueCol, groupCol))
+
+  /** Sum half of [[jackknifeGroupSe]]: per group, the count and the
+    * quantized value sum — a streaming twin's state. */
+  def jackknifeGroupSums(df: DataFrame, valueCol: String, groupCol: String): DataFrame =
+    df.groupBy(col(groupCol).as("__g")).agg(
       count(lit(1)).as("__ng"),
-      sum(floor(col(valueCol).cast("double") * 1e6 + 0.5).cast("long")).as("__sg")))
+      sum(floor(col(valueCol).cast("double") * 1e6 + 0.5).cast("long")).as("__sg"))
 
   /** Readout half of [[jackknifeGroupSe]] over the pre-aggregated
     * (__g, __ng, __sg) group table — shared by the streaming twin, whose

@@ -2020,16 +2020,32 @@ object TextAnalysis {
       addK: Double = 1.0,
       minLen: Int = 1): DataFrame = {
     val (model, oov) = unigramLm(ref, textCol, addK, minLen)
-    val ce = round(-col("__sq").cast("double") / lit(1e6) / col("n_tokens").cast("double"), 6)
+    perplexityFromSums(unigramLogProbSums(df, idCol, textCol, model, oov, minLen), idCol)
+  }
+
+  /** Per document, the token count `n_tokens` and the quantized log-prob
+    * sum `__sq` under a [[unigramLm]] model — one aggregate, so a
+    * streaming twin keeps it as state. */
+  def unigramLogProbSums(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      model: DataFrame,
+      oov: DataFrame,
+      minLen: Int = 1): DataFrame =
     lmTokens(df.select(col(idCol), col(textCol)), textCol, minLen)
       .join(broadcast(model), Seq("__tok"), "left")
       .crossJoin(broadcast(oov))
       .select(col(idCol), coalesce(col("__lpq"), col("__oovq")).as("__q"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"), sum(col("__q")).as("__sq"))
-      .select(col(idCol), col("n_tokens"),
-        ce.as("cross_entropy"),
-        round(exp(ce), 6).as("perplexity"))
+
+  /** The readout half of [[perplexityScore]] over [[unigramLogProbSums]]. */
+  def perplexityFromSums(sums: DataFrame, idCol: String): DataFrame = {
+    val ce = round(-col("__sq").cast("double") / lit(1e6) / col("n_tokens").cast("double"), 6)
+    sums.select(col(idCol), col("n_tokens"),
+      ce.as("cross_entropy"),
+      round(exp(ce), 6).as("perplexity"))
   }
 
   /** Interpolated Kneser–Ney BIGRAM perplexity (Kneser & Ney 1995; Chen &

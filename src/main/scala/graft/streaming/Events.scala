@@ -47,18 +47,22 @@ object Events {
   def sessionizeBatch(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("__us"), col("event_id"))
     val gapUs = gapSeconds * 1000000L
-    events
+    sessionRollup(events
       .withColumn("__us", unix_micros(col("ts").cast("timestamp")))
       .withColumn(
         "__new",
         when(col("__us") - lag(col("__us"), 1).over(byUser) > gapUs, 1).otherwise(0))
-      .withColumn("session_idx", sum(col("__new")).over(byUser))
-      .groupBy(col("user_id"), col("session_idx"))
+      .withColumn("session_idx", sum(col("__new")).over(byUser)))
+  }
+
+  /** Per (user_id, session_idx): the event count, first event id and the
+    * span of the `__us` event times. */
+  def sessionRollup(events: DataFrame): DataFrame =
+    events.groupBy(col("user_id"), col("session_idx"))
       .agg(
         count(lit(1)).as("n_events"),
         min(col("event_id")).as("first_event_id"),
         (max(col("__us")) - min(col("__us"))).as("duration_us"))
-  }
 
   /** Gap sessions via Spark's native `session_window` — the declarative twin
     * of [[sessionizeBatch]] (same session boundaries; the native operator

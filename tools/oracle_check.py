@@ -17,7 +17,9 @@ mismatch cause directly.
 
 DuckDB runs under a fixed memory cap, so a query whose oracle SQL outgrows
 it (q_kcore's five chained CTE peel levels) fails alone: it is reported as
-ERROR, counted apart from pass and fail, and makes the exit status 1.
+ERROR, counted apart from pass and fail, and makes the exit status 1. A
+query with no entry in oracle_sql.json is counted as no_oracle and also
+makes the exit status 1.
 """
 import json, sys, glob, os
 import duckdb
@@ -103,7 +105,8 @@ def main(sf_dir, out_dir):
                         print(f"    first diff row {i}: spark={a} oracle={b}")
                         break
     print(f"pass={n_pass} fail={n_fail} error={n_err} no_oracle={n_noora}")
-    sys.exit(1 if n_fail + n_err else 0)
+    # a query with no oracle is unchecked, so it fails the run as well
+    sys.exit(1 if n_fail + n_err + n_noora else 0)
 
 
 if __name__ == "__main__":
