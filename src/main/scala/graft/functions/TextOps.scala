@@ -175,13 +175,6 @@ object TextOps {
     '˜' -> 0x98, '™' -> 0x99, 'š' -> 0x9A, '›' -> 0x9B,
     'œ' -> 0x9C, 'ž' -> 0x9E, 'Ÿ' -> 0x9F)
 
-  /** Repair UTF-8-decoded-as-latin-1/cp1252 mojibake ("cafÃ©" -> "café"):
-    * if EVERY char maps back to a single sloppy-cp1252 byte and the byte
-    * string is valid multi-byte UTF-8, re-decode; otherwise return the
-    * input untouched (the whole-string validity requirement is what makes
-    * the repair conservative — genuine "café" re-encodes to invalid UTF-8
-    * and passes through). Up to 3 rounds, so double-encoded text unwinds.
-    * Re-derived from the publicly documented ftfy heuristic. */
   /** Deflate compression ratio of a string's UTF-8 bytes (zlib level 6):
     * `compressed_size / raw_size`, the CCNet/Gopher-style redundancy
     * signal — templated/spammy text compresses far below ~0.4, natural
@@ -203,6 +196,13 @@ object TextOps {
     } finally d.end()
   }
 
+  /** Repair UTF-8-decoded-as-latin-1/cp1252 mojibake ("cafÃ©" -> "café"):
+    * if EVERY char maps back to a single sloppy-cp1252 byte and the byte
+    * string is valid multi-byte UTF-8, re-decode; otherwise return the
+    * input untouched (the whole-string validity requirement is what makes
+    * the repair conservative — genuine "café" re-encodes to invalid UTF-8
+    * and passes through). Up to 3 rounds, so double-encoded text unwinds.
+    * Re-derived from the publicly documented ftfy heuristic. */
   def fixMojibake(s: UTF8String): UTF8String = {
     var cur = s.toString
     var rounds = 0

@@ -304,10 +304,6 @@ object Funnel {
     depthCounts(perUser.select(depth.as("__depth")), steps)
   }
 
-  /** Reduce per-user reached depths (column `__depth`) to one row per funnel
-    * step with the user count that reached it — shared by the batch fold
-    * above and the streaming state-machine twin
-    * ([[graft.streaming.Events.funnelStream]]). */
   /** First-order Markov transition matrix of per-key event sequences:
     * P(next_state | state) estimated from consecutive pairs. One window lag
     * per key (`tiebreakCols` pins equal-timestamp order), one partial-agg
@@ -337,6 +333,10 @@ object Funnel {
     counts.withColumn("p", col("n") / sum(col("n")).over(byState))
   }
 
+  /** Reduce per-user reached depths (column `__depth`) to one row per funnel
+    * step with the user count that reached it — shared by the batch fold
+    * above and the streaming state-machine twin
+    * ([[graft.streaming.Events.funnelStream]]). */
   private[graft] def depthCounts(depths: DataFrame, steps: Seq[String]): DataFrame = {
     val stepReach = steps.indices.map(i =>
       sum(when(col("__depth") >= i + 1, 1L).otherwise(0L)).as(s"__r$i"))
@@ -513,8 +513,7 @@ object Funnel {
       tsCol: String,
       channelCol: String,
       convChannel: String,
-      maxChannels: Int = 12,
-      dp: Int = 6): DataFrame = {
+      maxChannels: Int = 12): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val base = df.select(
@@ -565,11 +564,11 @@ object Funnel {
       .agg(sum((col("__w") * (col("__vi") - col("__v"))).cast("decimal(38,0)"))
         .as("__phiN"))
       .select(col("channel"),
-        round(col("__phiN").cast("double") / lit(fact(c).toDouble), dp)
+        round(col("__phiN").cast("double") / lit(fact(c).toDouble), 6)
           .as("conversions"),
         when(lit(nTouched) > 0,
           round(col("__phiN").cast("double") / lit(fact(c).toDouble) /
-            lit(nTouched.toDouble), dp)).as("share"))
+            lit(nTouched.toDouble), 6)).as("share"))
     phi.unionByName(
       Seq(("__DIRECT__", nDirect.toDouble)).toDF("channel", "conversions")
         .withColumn("share", lit(null).cast("double")))

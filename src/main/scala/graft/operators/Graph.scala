@@ -651,8 +651,7 @@ object Graph {
   def assortativity(
       edges: DataFrame,
       srcCol: String,
-      dstCol: String,
-      dp: Int = 6): DataFrame = {
+      dstCol: String): DataFrame = {
     val raw = edges
       .select(
         least(col(srcCol), col(dstCol)).as("a"),
@@ -679,7 +678,7 @@ object Graph {
       (col("__m") / 2).cast("long").as("m_edges"),
       when(d1 =!= 0 && d2 =!= 0,
         round(num.cast("double") /
-          sqrt(d1.cast("double") * d2.cast("double")), dp))
+          sqrt(d1.cast("double") * d2.cast("double")), 6))
         .as("assortativity"))
   }
 
@@ -711,8 +710,7 @@ object Graph {
       srcCol: String,
       dstCol: String,
       maxDegree: Long = 1000L,
-      minCommon: Long = 1L,
-      dp: Int = 6): DataFrame = {
+      minCommon: Long = 1L): DataFrame = {
     val raw = edges
       .select(
         least(col(srcCol), col(dstCol)).as("a"),
@@ -746,9 +744,9 @@ object Graph {
         col("x").as("u"), col("y").as("v"), col("common_neighbors"),
         round(col("common_neighbors").cast("double") /
           (col("__dx") + col("__dy") - col("common_neighbors")).cast("double"),
-          dp).as("jaccard"),
-        round(col("__aaq").cast("double") / lit(1e9), dp).as("adamic_adar"),
-        round(col("__raq").cast("double") / lit(1e9), dp).as("resource_alloc"))
+          6).as("jaccard"),
+        round(col("__aaq").cast("double") / lit(1e9), 6).as("adamic_adar"),
+        round(col("__raq").cast("double") / lit(1e9), 6).as("resource_alloc"))
   }
 
   /** Fixed-iteration HITS hubs & authorities (Kleinberg 1999) over a
@@ -817,24 +815,6 @@ object Graph {
         coalesce(col("authority"), lit(0.0)).as("authority"))
   }
 
-  /** k-source hop-bounded betweenness centrality (Brandes 2001 restricted
-    * to a pivot set — the standard sampling estimator, Brandes & Pich
-    * 2007): forward BFS from every source SIMULTANEOUSLY (frontier keyed
-    * by (source, node)) accumulating exact integer shortest-path counts
-    * σ, then the backward dependency sweep
-    * δ(v) = Σ_{w ∈ succ(v)} σ(v)/σ(w)·(1+δ(w)) level by level, with each
-    * (v,w) term quantized floor(·1e9+0.5) to a long before the per-node
-    * sum — partition-invariant and replayable as level-unrolled SQL.
-    * The result is the PIVOT-SET estimate truncated at `maxHops` (paths
-    * longer than the bound contribute nothing — the documented
-    * approximation); nodes whose dependency is identically zero only
-    * surface if they sit on the deepest level.
-    *
-    * Scale: `maxHops` driver-paced rounds of co-partitioned equi-joins
-    * (frontier × edges, anti-join visited), lineage checkpointed per
-    * round; the backward sweep is the same join shape downward. Sources
-    * are a bounded literal set (pivots: dozens). Top-`topK` rows by the
-    * UNROUNDED exact accumulator, ties on node id. */
   /** Pivot-sampled HARMONIC closeness centrality (Marchiori & Latora 2000
     * harmonic form; Eppstein & Wang 2001 pivot estimation; Boldi & Vigna
     * 2014 on why harmonic beats classic closeness on disconnected
@@ -893,6 +873,24 @@ object Graph {
         round(col("__h").cast("double") / 1e9 * lit(scale), 6).as("h_est"))
   }
 
+  /** k-source hop-bounded betweenness centrality (Brandes 2001 restricted
+    * to a pivot set — the standard sampling estimator, Brandes & Pich
+    * 2007): forward BFS from every source SIMULTANEOUSLY (frontier keyed
+    * by (source, node)) accumulating exact integer shortest-path counts
+    * σ, then the backward dependency sweep
+    * δ(v) = Σ_{w ∈ succ(v)} σ(v)/σ(w)·(1+δ(w)) level by level, with each
+    * (v,w) term quantized floor(·1e9+0.5) to a long before the per-node
+    * sum — partition-invariant and replayable as level-unrolled SQL.
+    * The result is the PIVOT-SET estimate truncated at `maxHops` (paths
+    * longer than the bound contribute nothing — the documented
+    * approximation); nodes whose dependency is identically zero only
+    * surface if they sit on the deepest level.
+    *
+    * Scale: `maxHops` driver-paced rounds of co-partitioned equi-joins
+    * (frontier × edges, anti-join visited), lineage checkpointed per
+    * round; the backward sweep is the same join shape downward. Sources
+    * are a bounded literal set (pivots: dozens). Top-`topK` rows by the
+    * UNROUNDED exact accumulator, ties on node id. */
   def betweennessApprox(
       edges: DataFrame,
       srcCol: String,

@@ -74,11 +74,8 @@ object Models {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(lr > 0, s"lr must be > 0, got $lr")
     val k = featureCols.length + 1
-    val base = df.select(
-      when(col(labelCol), 1.0).otherwise(0.0).as("__y") +:
-        (lit(1.0) +: featureCols.map(c => col(c).cast("double")))
-          .zipWithIndex.map { case (f, j) => f.as(s"__x$j") }: _*)
-      .localCheckpoint(true) // pin the loop-invariant base: ONE source scan for the whole fit
+    val base =
+      pinnedDesign(df, Seq(when(col(labelCol), 1.0).otherwise(0.0).as("__y")), featureCols)
     val n = base.count()
     require(n > 0, "cannot fit on an empty DataFrame")
     val wq = fitQ(base, k, iterations, lr, n)
@@ -94,6 +91,15 @@ object Models {
         (-col("__ll").cast("double") / 1e6 / col("n").cast("double")).as("log_loss") :+
         (col("__ok").cast("double") / col("n").cast("double")).as("accuracy"): _*)
   }
+
+  /** The GD fits' design: the `lead` columns (the label `__y` first), then
+    * the intercept `__x0` = 1 and each feature as `__x1…`, checkpointed to
+    * pin the loop-invariant base — ONE source scan for the whole fit. */
+  private def pinnedDesign(
+      df: DataFrame, lead: Seq[Column], featureCols: Seq[String]): DataFrame =
+    df.select(lead ++ (lit(1.0) +: featureCols.map(c => col(c).cast("double")))
+        .zipWithIndex.map { case (f, j) => f.as(s"__x$j") }: _*)
+      .localCheckpoint(true)
 
   /** σ(w·x) over the `__x0…` columns for 1e-9-quantized weights — the
     * fixed left-assoc IEEE chain both the fit and every scorer share. */
@@ -167,11 +173,7 @@ object Models {
     require(tau > 0 && tau < 1, s"tau must be in (0,1), got $tau")
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val k = featureCols.length + 1
-    val base = df.select(
-      col(valueCol).cast("double").as("__y") +:
-        (lit(1.0) +: featureCols.map(c => col(c).cast("double")))
-          .zipWithIndex.map { case (f, j) => f.as(s"__x$j") }: _*)
-      .localCheckpoint(true) // pin the loop-invariant base: ONE source scan for the whole fit
+    val base = pinnedDesign(df, Seq(col(valueCol).cast("double").as("__y")), featureCols)
     val n = base.count()
     require(n > 0, "cannot fit on an empty DataFrame")
     var wq = Array.fill(k)(0L)
@@ -430,11 +432,8 @@ object Models {
     require(lr > 0, s"lr must be > 0, got $lr")
     require(lambda >= 0, s"lambda must be >= 0, got $lambda")
     val k = featureCols.length + 1
-    val base = df.select(
-      when(col(labelCol), 1.0).otherwise(-1.0).as("__y") +:
-        (lit(1.0) +: featureCols.map(c => col(c).cast("double")))
-          .zipWithIndex.map { case (f, j) => f.as(s"__x$j") }: _*)
-      .localCheckpoint(true) // pin the loop-invariant base: ONE source scan for the whole fit
+    val base =
+      pinnedDesign(df, Seq(when(col(labelCol), 1.0).otherwise(-1.0).as("__y")), featureCols)
     val n = base.count()
     require(n > 0, "cannot fit on an empty DataFrame")
     var wq = Array.fill(k)(0L)
@@ -653,11 +652,7 @@ object Models {
     require(lr > 0, s"lr must be > 0, got $lr")
     require(maxCount >= 1, s"maxCount must be >= 1, got $maxCount")
     val k = featureCols.length + 1
-    val base = df.select(
-      col(countCol).cast("double").as("__y") +:
-        (lit(1.0) +: featureCols.map(c => col(c).cast("double")))
-          .zipWithIndex.map { case (f, j) => f.as(s"__x$j") }: _*)
-      .localCheckpoint(true) // pin the loop-invariant base: ONE source scan for the whole fit
+    val base = pinnedDesign(df, Seq(col(countCol).cast("double").as("__y")), featureCols)
     val n = base.count()
     require(n > 0, "cannot fit on an empty DataFrame")
     val wq = poissonFitQ(base, k, iterations, lr, n)
@@ -706,11 +701,7 @@ object Models {
     require(featureCols.length == 2,
       s"exactly two features (plus intercept) supported, got ${featureCols.length}")
     val k = featureCols.length + 1
-    val base = df.select(
-      col(countCol).cast("double").as("__y") +:
-        (lit(1.0) +: featureCols.map(c => col(c).cast("double")))
-          .zipWithIndex.map { case (f, j) => f.as(s"__x$j") }: _*)
-      .localCheckpoint(true) // pin the loop-invariant base: ONE source scan for the whole fit
+    val base = pinnedDesign(df, Seq(col(countCol).cast("double").as("__y")), featureCols)
     val n = base.count()
     require(n > 0, "cannot fit on an empty DataFrame")
     val wq = poissonFitQ(base, k, iterations, lr, n)
@@ -1007,6 +998,40 @@ object Models {
         seCol.as("se"), zCol.as("z"))
   }
 
+  /** The exact normal-equation moments of `valueCol` on two features:
+    * per-row 1e6-quantized DECIMAL(38,0) sums in one partial aggregate,
+    * cast to doubles (`n`, `nn`, `sa` … `syy`) — the head of
+    * [[linearRegression]] and [[ridgeRegression]]. */
+  private def twoFeatureMoments(
+      df: DataFrame, valueCol: String, featureCols: Seq[String]): DataFrame = {
+    def q(c: String) = floor(col(c).cast("double") * 1e6 + 0.5).cast("decimal(38,0)")
+    val m = df
+      .select(q(valueCol).as("__y"),
+        q(featureCols.head).as("__a"), q(featureCols(1)).as("__b"))
+      .agg(
+        count(lit(1)).as("n"),
+        sum(col("__a")).as("__sa"), sum(col("__b")).as("__sb"),
+        sum(col("__a") * col("__a")).as("__saa"),
+        sum(col("__b") * col("__b")).as("__sbb"),
+        sum(col("__a") * col("__b")).as("__sab"),
+        sum(col("__y")).as("__sy"),
+        sum(col("__a") * col("__y")).as("__say"),
+        sum(col("__b") * col("__y")).as("__sby"),
+        sum(col("__y") * col("__y")).as("__syy"))
+    m.select(
+      col("n"),
+      col("n").cast("double").as("nn"),
+      (col("__sa").cast("double") / 1e6).as("sa"),
+      (col("__sb").cast("double") / 1e6).as("sb"),
+      (col("__saa").cast("double") / 1e12).as("saa"),
+      (col("__sbb").cast("double") / 1e12).as("sbb"),
+      (col("__sab").cast("double") / 1e12).as("sab"),
+      (col("__sy").cast("double") / 1e6).as("sy"),
+      (col("__say").cast("double") / 1e12).as("say"),
+      (col("__sby").cast("double") / 1e12).as("sby"),
+      (col("__syy").cast("double") / 1e12).as("syy"))
+  }
+
   /** Multiple linear regression (intercept + two features) by EXACT
     * normal equations — the closed-form big sibling of the per-key OLS
     * trend: per-row values quantize to 1e-6 longs, so every normal-
@@ -1028,32 +1053,7 @@ object Models {
       featureCols: Seq[String]): DataFrame = {
     require(featureCols.length == 2,
       s"exactly two features (plus intercept) supported, got ${featureCols.length}")
-    def q(c: String) = floor(col(c).cast("double") * 1e6 + 0.5).cast("decimal(38,0)")
-    val m = df
-      .select(q(valueCol).as("__y"),
-        q(featureCols.head).as("__a"), q(featureCols(1)).as("__b"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("__a")).as("__sa"), sum(col("__b")).as("__sb"),
-        sum(col("__a") * col("__a")).as("__saa"),
-        sum(col("__b") * col("__b")).as("__sbb"),
-        sum(col("__a") * col("__b")).as("__sab"),
-        sum(col("__y")).as("__sy"),
-        sum(col("__a") * col("__y")).as("__say"),
-        sum(col("__b") * col("__y")).as("__sby"),
-        sum(col("__y") * col("__y")).as("__syy"))
-    val t = m.select(
-      col("n"),
-      col("n").cast("double").as("nn"),
-      (col("__sa").cast("double") / 1e6).as("sa"),
-      (col("__sb").cast("double") / 1e6).as("sb"),
-      (col("__saa").cast("double") / 1e12).as("saa"),
-      (col("__sbb").cast("double") / 1e12).as("sbb"),
-      (col("__sab").cast("double") / 1e12).as("sab"),
-      (col("__sy").cast("double") / 1e6).as("sy"),
-      (col("__say").cast("double") / 1e12).as("say"),
-      (col("__sby").cast("double") / 1e12).as("sby"),
-      (col("__syy").cast("double") / 1e12).as("syy"))
+    val t = twoFeatureMoments(df, valueCol, featureCols)
     val det = col("nn") * (col("saa") * col("sbb") - col("sab") * col("sab")) -
       col("sa") * (col("sa") * col("sbb") - col("sab") * col("sb")) +
       col("sb") * (col("sa") * col("sab") - col("saa") * col("sb"))
@@ -1101,8 +1101,7 @@ object Models {
       df: DataFrame,
       orderCols: Seq[String],
       valueCol: String,
-      featureCols: Seq[String],
-      dp: Int = 6): DataFrame = {
+      featureCols: Seq[String]): DataFrame = {
     require(featureCols.length == 2,
       s"exactly two features (plus intercept) supported, got ${featureCols.length}")
     require(orderCols.nonEmpty, "orderCols must give the residuals a total time order")
@@ -1241,32 +1240,7 @@ object Models {
     require(featureCols.length == 2,
       s"exactly two features (plus intercept) supported, got ${featureCols.length}")
     require(lambda >= 0, s"lambda must be >= 0, got $lambda")
-    def q(c: String) = floor(col(c).cast("double") * 1e6 + 0.5).cast("decimal(38,0)")
-    val m = df
-      .select(q(valueCol).as("__y"),
-        q(featureCols.head).as("__a"), q(featureCols(1)).as("__b"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("__a")).as("__sa"), sum(col("__b")).as("__sb"),
-        sum(col("__a") * col("__a")).as("__saa"),
-        sum(col("__b") * col("__b")).as("__sbb"),
-        sum(col("__a") * col("__b")).as("__sab"),
-        sum(col("__y")).as("__sy"),
-        sum(col("__a") * col("__y")).as("__say"),
-        sum(col("__b") * col("__y")).as("__sby"),
-        sum(col("__y") * col("__y")).as("__syy"))
-    val t = m.select(
-      col("n"),
-      col("n").cast("double").as("nn"),
-      (col("__sa").cast("double") / 1e6).as("sa"),
-      (col("__sb").cast("double") / 1e6).as("sb"),
-      (col("__saa").cast("double") / 1e12).as("saa"),
-      (col("__sbb").cast("double") / 1e12).as("sbb"),
-      (col("__sab").cast("double") / 1e12).as("sab"),
-      (col("__sy").cast("double") / 1e6).as("sy"),
-      (col("__say").cast("double") / 1e12).as("say"),
-      (col("__sby").cast("double") / 1e12).as("sby"),
-      (col("__syy").cast("double") / 1e12).as("syy"))
+    val t = twoFeatureMoments(df, valueCol, featureCols)
       .withColumn("paa", col("saa") + lit(lambda))
       .withColumn("pbb", col("sbb") + lit(lambda))
     val det = col("nn") * (col("paa") * col("pbb") - col("sab") * col("sab")) -
@@ -1324,12 +1298,10 @@ object Models {
     require(featureCols.nonEmpty, "at least one feature required")
     require(clip > 0 && clip < 0.5, s"clip must be in (0, 0.5), got $clip")
     val k = featureCols.length + 1
-    val base = df.select(
-      when(col(treatedCol), 1.0).otherwise(0.0).as("__y") +:
-        col(valueCol).cast("double").as("__v") +:
-        (lit(1.0) +: featureCols.map(c => col(c).cast("double")))
-          .zipWithIndex.map { case (f, j) => f.as(s"__x$j") }: _*)
-      .localCheckpoint(true) // pin the loop-invariant base: ONE source scan for the whole fit
+    val base = pinnedDesign(df,
+      Seq(when(col(treatedCol), 1.0).otherwise(0.0).as("__y"),
+        col(valueCol).cast("double").as("__v")),
+      featureCols)
     val n = base.count()
     require(n > 0, "cannot fit on an empty DataFrame")
     val wq = fitQ(base, k, iterations, lr, n)
@@ -1379,8 +1351,7 @@ object Models {
       treatedCol: String,
       scoreCol: String,
       outcomeCol: String,
-      caliper: Double,
-      dp: Int = 6): DataFrame = {
+      caliper: Double): DataFrame = {
     require(caliper > 0, s"caliper must be > 0, got $caliper")
     val cq = math.max(1L, math.floor(caliper * 1e9 + 0.5).toLong)
     val base = df.select(
@@ -1411,7 +1382,7 @@ object Models {
           col("__cid"), col("__csq"), col("__cyq"))).as("__b"))
       .select(
         // UNROUNDED: every output is an exact-rational double (long/1e9 or
-        // long/1e6) — identical bits on any engine, while a 6-dp ROUND
+        // long/1e6) — identical bits on any engine, while a 6-6 ROUND
         // re-introduces the half-way knife-edge (measured: gap 997500ns
         // rendered .000998 via Spark's HALF_UP vs .000997 via DuckDB's
         // half-even at sf0.01)
@@ -1456,8 +1427,7 @@ object Models {
       itemCol: String,
       ratingCol: String,
       sweeps: Int = 3,
-      lambda: Double = 0.1,
-      dp: Int = 6): DataFrame = {
+      lambda: Double = 0.1): DataFrame = {
     require(sweeps >= 1, s"sweeps must be >= 1, got $sweeps")
     require(lambda > 0, s"lambda must be > 0 (Cramer needs det > 0), got $lambda")
     val r = ratings.select(
@@ -1522,13 +1492,13 @@ object Models {
       count(lit(1)).as("__n"),
       sum(floor(col("__e") * col("__e") * 1e9 + 0.5).cast("decimal(38,0)")).as("__se"))
       .select(round(sqrt(col("__se").cast("double") / 1e9 /
-        col("__n").cast("double")), dp).as("rmse"))
+        col("__n").cast("double")), 6).as("rmse"))
     val users = uf.select(lit("user").as("entity"), col("__uu").as("id"),
-      round(col("__u1").cast("double") / 1e6, dp).as("f1"),
-      round(col("__u2").cast("double") / 1e6, dp).as("f2"))
+      round(col("__u1").cast("double") / 1e6, 6).as("f1"),
+      round(col("__u2").cast("double") / 1e6, 6).as("f2"))
     val itemsOut = itf.select(lit("item").as("entity"), col("__ii").as("id"),
-      round(col("__i1").cast("double") / 1e6, dp).as("f1"),
-      round(col("__i2").cast("double") / 1e6, dp).as("f2"))
+      round(col("__i1").cast("double") / 1e6, 6).as("f1"),
+      round(col("__i2").cast("double") / 1e6, 6).as("f2"))
     users.unionByName(itemsOut).crossJoin(broadcast(rmse))
   }
 
@@ -1556,8 +1526,7 @@ object Models {
       outcomeCol: String,
       scoreCol: String,
       tiebreakCols: Seq[String],
-      buckets: Int = 10,
-      dp: Int = 6): DataFrame = {
+      buckets: Int = 10): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     require(tiebreakCols.nonEmpty, "tiebreakCols must make the score order total")
     val ranked = Relational.globalRowNumbers(
@@ -1587,11 +1556,11 @@ object Models {
         col("bucket"), col("n_t"), col("n_c"), col("conv_t"), col("conv_c"),
         when(col("n_t") > 0 && col("n_c") > 0,
           round(col("conv_t").cast("double") / col("n_t").cast("double") -
-            col("conv_c").cast("double") / col("n_c").cast("double"), dp)).as("uplift"),
+            col("conv_c").cast("double") / col("n_c").cast("double"), 6)).as("uplift"),
         when(col("__cnc") > 0,
           round(col("__cct").cast("double") -
             col("__ccc").cast("double") * col("__cnt").cast("double") /
-              col("__cnc").cast("double"), dp)).as("qini"))
+              col("__cnc").cast("double"), 6)).as("qini"))
   }
 
   /** k-NN majority-vote classifier — the SERVING-side lazy learner
@@ -1701,8 +1670,7 @@ object Models {
   def nbFitMoments(
       df: DataFrame,
       keyCols: Seq[String],
-      countCol: String,
-      dp: Int = 6): DataFrame = {
+      countCol: String): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column required")
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val keys = keyCols.map(col)
@@ -1721,10 +1689,10 @@ object Models {
     val over = vv - m
     agg.select(keys ++ Seq(
       col("n"),
-      round(m, dp).as("mean"),
-      when(col("n") > 1, round(vv, dp)).as("variance"),
-      when(col("n") > 1, when(over > 0, round(m * m / over, dp))).as("r_hat"),
-      when(col("n") > 1, when(over > 0, round(m / vv, dp))).as("p_hat")): _*)
+      round(m, 6).as("mean"),
+      when(col("n") > 1, round(vv, 6)).as("variance"),
+      when(col("n") > 1, when(over > 0, round(m * m / over, 6))).as("r_hat"),
+      when(col("n") > 1, when(over > 0, round(m / vv, 6))).as("p_hat")): _*)
   }
 
   /** Empirical-Bayes beta-binomial rate shrinkage (Robbins 1956 empirical
@@ -1750,10 +1718,9 @@ object Models {
   def ebRateShrinkage(
       df: DataFrame,
       keyCols: Seq[String],
-      successCol: String,
-      dp: Int = 6): DataFrame = {
+      successCol: String): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column required")
-    ebRateShrinkageFromCounts(ebCounts(df, keyCols, successCol), keyCols, dp)
+    ebRateShrinkageFromCounts(ebCounts(df, keyCols, successCol), keyCols)
   }
 
   /** Per key, the trial and success counts `(n, x)` [[ebRateShrinkage]]
@@ -1771,8 +1738,7 @@ object Models {
     * discipline). */
   def ebRateShrinkageFromCounts(
       perKey: DataFrame,
-      keyCols: Seq[String],
-      dp: Int = 6): DataFrame = {
+      keyCols: Seq[String]): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val keys = keyCols.map(col)
     // n = 0 keys (legal in pre-aggregated input) carry NO rate: the x/n
@@ -1808,9 +1774,9 @@ object Models {
       .select(keys ++ Seq(
         col("n"), col("x"),
         when(col("n") > 0,
-          round(col("x").cast("double") / col("n").cast("double"), dp))
+          round(col("x").cast("double") / col("n").cast("double"), 6))
           .as("rate_raw"),
-        when(col("__alpha").isNotNull && col("n") > 0, round(eb, dp))
+        when(col("__alpha").isNotNull && col("n") > 0, round(eb, 6))
           .as("rate_eb")): _*)
   }
 

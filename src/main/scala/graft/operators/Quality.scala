@@ -241,19 +241,6 @@ object Quality {
     }.reduce(_ unionByName _)
   }
 
-  /** k-anonymity audit — the privacy re-identification check: every
-    * quasi-identifier combination must describe at least k records, or the
-    * records in it are linkable. Returns the VIOLATING combinations (quasi
-    * values + group size); an empty result certifies the k-anonymity
-    * property. One partial aggregate on the quasi key — always cheap
-    * relative to the release it audits, any corpus size. */
-  /** l-diversity audit — the companion to [[kAnonymity]]: a k-anonymous
-    * equivalence class still leaks the sensitive attribute when every row in
-    * it shares one value, so flag quasi-identifier groups whose sensitive
-    * column carries fewer than `l` DISTINCT values (Machanavajjhala et al.,
-    * ICDE 2006). One partial-agg groupBy with a distinct count — the same
-    * single-shuffle shape as the k-anonymity audit; the audit output is
-    * group-level, bounded by the quasi-identifier domain, never row-scale. */
   /** Deterministic experiment assignment + sample-ratio-mismatch audit —
     * the experimentation-platform pair in one pass: units assign to arms
     * by `md5(salt|unit) mod Σweights` bucketed through the cumulative
@@ -440,6 +427,13 @@ object Quality {
       round(col("__ny").cast("double") / n, 6).as("true_rate"))
   }
 
+  /** l-diversity audit — the companion to [[kAnonymity]]: a k-anonymous
+    * equivalence class still leaks the sensitive attribute when every row in
+    * it shares one value, so flag quasi-identifier groups whose sensitive
+    * column carries fewer than `l` DISTINCT values (Machanavajjhala et al.,
+    * ICDE 2006). One partial-agg groupBy with a distinct count — the same
+    * single-shuffle shape as the k-anonymity audit; the audit output is
+    * group-level, bounded by the quasi-identifier domain, never row-scale. */
   def lDiversity(
       df: DataFrame,
       quasiCols: Seq[String],
@@ -454,6 +448,12 @@ object Quality {
       .withColumn("diverse", col("l_distinct") >= l)
   }
 
+  /** k-anonymity audit — the privacy re-identification check: every
+    * quasi-identifier combination must describe at least k records, or the
+    * records in it are linkable. Returns the VIOLATING combinations (quasi
+    * values + group size); an empty result certifies the k-anonymity
+    * property. One partial aggregate on the quasi key — always cheap
+    * relative to the release it audits, any corpus size. */
   def kAnonymity(df: DataFrame, quasiCols: Seq[String], k: Long): DataFrame = {
     require(quasiCols.nonEmpty, "kAnonymity needs at least one quasi-identifier column")
     require(k >= 2, s"k must be >= 2, got $k")
@@ -703,8 +703,7 @@ object Quality {
   def sourceAblation(
       df: DataFrame,
       sourceCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val q = floor(col(valueCol).cast("double") * 1000000.0 + 0.5).cast("long")
     val per = df.groupBy(col(sourceCol))
       .agg(count(lit(1)).as("__n"), sum(q).as("__s"))
@@ -715,10 +714,10 @@ object Quality {
     per.crossJoin(broadcast(tot))
       .select(
         col(sourceCol), col("__n").as("n"),
-        round(col("__s").cast("double") / 1000000.0 / col("__n").cast("double"), dp)
+        round(col("__s").cast("double") / 1000000.0 / col("__n").cast("double"), 6)
           .as("mean_source"),
-        when(col("__nt") > col("__n"), round(without, dp)).as("mean_without"),
-        when(col("__nt") > col("__n"), round(withAll - without, dp)).as("delta"))
+        when(col("__nt") > col("__n"), round(without, 6)).as("mean_without"),
+        when(col("__nt") > col("__n"), round(withAll - without, 6)).as("delta"))
   }
 
   /** Chapman capture–recapture population estimate (Chapman 1951; the

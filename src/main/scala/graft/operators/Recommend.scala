@@ -37,8 +37,7 @@ object Recommend {
       ratings: DataFrame,
       userCol: String,
       itemCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val r = ratings.select(
       col(userCol).as("__u"), col(itemCol).as("__i"),
       col(valueCol).cast("long").as("__r"))
@@ -59,7 +58,7 @@ object Recommend {
     pred.select(
       col("__u").as(userCol), col("__j").as(itemCol),
       col("__den").as("n_pairs"),
-      round(col("__num").cast("double") / col("__den").cast("double"), dp)
+      round(col("__num").cast("double") / col("__den").cast("double"), 6)
         .as("prediction"))
   }
 

@@ -669,16 +669,6 @@ object Relational {
       .drop("__op", "__src")
   }
 
-  /** Guard for pair-mining and other per-key self-join fan-outs: drop every
-    * group whose row count exceeds `maxRows`, logging how many groups (and
-    * rows) were dropped. A single pathological hot key — one basket with
-    * 10k lines, one session with a million events — turns a per-key
-    * quadratic shape (pairs ~ n²/2) into a job-killer at scale; capping is
-    * the standard mining hygiene (a basket that large carries no signal
-    * anyway). Shape: one partial-aggregate pass finds the (by assumption
-    * FEW) oversized keys, which then broadcast into a left-anti join — the
-    * main table never shuffles. The hot-key table is eagerly checkpointed,
-    * so the logged count costs nothing extra. */
   /** 2-D skyline (Pareto frontier): rows not strictly dominated under
     * (maximize `maxCol`, minimize `minCol`) — the multi-criteria shortlist
     * query ("best price for the quantity", Börzsönyi et al. 2001). The
@@ -751,6 +741,16 @@ object Relational {
           max(when(col("__attr") === a, col("__val"))).as(a + "_golden")): _*)
   }
 
+  /** Guard for pair-mining and other per-key self-join fan-outs: drop every
+    * group whose row count exceeds `maxRows`, logging how many groups (and
+    * rows) were dropped. A single pathological hot key — one basket with
+    * 10k lines, one session with a million events — turns a per-key
+    * quadratic shape (pairs ~ n²/2) into a job-killer at scale; capping is
+    * the standard mining hygiene (a basket that large carries no signal
+    * anyway). Shape: one partial-aggregate pass finds the (by assumption
+    * FEW) oversized keys, which then broadcast into a left-anti join — the
+    * main table never shuffles. The hot-key table is eagerly checkpointed,
+    * so the logged count costs nothing extra. */
   def capGroupSize(df: DataFrame, keyCols: Seq[String], maxRows: Long): DataFrame = {
     require(maxRows >= 1, s"maxRows must be >= 1, got $maxRows")
     val hot = df.groupBy(keyCols.map(col): _*)
@@ -820,13 +820,6 @@ object Relational {
       .agg(remerge.head, remerge.tail: _*)
   }
 
-  /** Multi-format timestamp coercion — the messy-ingestion hygiene step:
-    * try each format in order (first success wins, the fixed priority that
-    * makes ambiguous strings deterministic), null when nothing parses.
-    * Pure codegen'd projection (`try_to_timestamp` chain under ANSI mode —
-    * a bare `to_timestamp` would THROW on the first malformed row), zero
-    * shuffle, pushdown-transparent. Pair with a `.filter(isnull)` split
-    * for a dead-letter route. */
   /** Incremental JOIN-view maintenance — the delta-algebra identity
     * `Δ(A ⋈ B) = ΔA ⋈ B_new ∪ A_old ⋈ ΔB` (with `B_new = B_old ∪ ΔB`),
     * the join sibling of [[aggState]]/[[mergeAggState]]'s aggregate
@@ -853,6 +846,13 @@ object Relational {
       .unionByName(aOld.join(bDelta, cond(aOld, bDelta)))
   }
 
+  /** Multi-format timestamp coercion — the messy-ingestion hygiene step:
+    * try each format in order (first success wins, the fixed priority that
+    * makes ambiguous strings deterministic), null when nothing parses.
+    * Pure codegen'd projection (`try_to_timestamp` chain under ANSI mode —
+    * a bare `to_timestamp` would THROW on the first malformed row), zero
+    * shuffle, pushdown-transparent. Pair with a `.filter(isnull)` split
+    * for a dead-letter route. */
   def coerceTimestamps(
       df: DataFrame,
       srcCol: String,
@@ -1039,7 +1039,7 @@ object Relational {
     * small-category overfit. y must be INTEGER-VALUED (quantize first):
     * with S,N the global sum/count and s,n the category's, the encoding is
     * the single exact-integer ratio (s·N + m·S)/(N·(n + m)) — decimal
-    * arithmetic until ONE double division rounded at `dp`, so the
+    * arithmetic until ONE double division rounded at 6 dp, so the
     * encoding reproduces bit-for-bit on any engine. Two partial aggregates
     * (category + global), a 1-row broadcast cross join — the fact table is
     * never shuffled; join the returned (category, n, encoded) map back
@@ -1048,8 +1048,7 @@ object Relational {
       df: DataFrame,
       catCol: String,
       targetCol: String,
-      smoothing: Int,
-      dp: Int = 6): DataFrame = {
+      smoothing: Int): DataFrame = {
     require(smoothing >= 0, s"smoothing must be >= 0, got $smoothing")
     val y = col(targetCol).cast("decimal(38,0)")
     val perCat = df.groupBy(col(catCol))
@@ -1064,7 +1063,7 @@ object Relational {
         round(
           (col("__s") * col("__gn") + lit(smoothing) * col("__gs")).cast("double") /
             (col("__gn") * (col("__n") + lit(smoothing))).cast("double"),
-          dp).as("encoded"))
+          6).as("encoded"))
   }
 
   /** Out-of-fold smoothed target encoding — [[targetEncode]] with the
@@ -1092,8 +1091,7 @@ object Relational {
       targetCol: String,
       idCol: String,
       folds: Int = 5,
-      smoothing: Int = 20,
-      dp: Int = 6): DataFrame = {
+      smoothing: Int = 20): DataFrame = {
     require(folds >= 2, s"folds must be >= 2, got $folds")
     require(smoothing >= 0, s"smoothing must be >= 0, got $smoothing")
     val y = col(targetCol).cast("decimal(38,0)")
@@ -1129,7 +1127,7 @@ object Relational {
         round(
           ((col("__sc") - col("__sf")) * oofN + lit(smoothing) * (col("__sg") - col("__sfold")))
             .cast("double") / den.cast("double"),
-          dp)).as("encoded"))
+          6)).as("encoded"))
   }
 
   /** A-priori frequent TRIPLE mining (Agrawal & Srikant, VLDB 1994, level

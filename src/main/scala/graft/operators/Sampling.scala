@@ -203,18 +203,6 @@ object Sampling {
       k = perKey)
       .drop("__h")
 
-  /** Deterministic hash-based negative sampling — k pseudo-random items
-    * per query for contrastive / ranking training pairs, with NO RNG state:
-    * draw j ∈ 0..k−1 picks item rank md5(query:j) mod N, so the sample is
-    * reproducible on any engine, partitioning and run (the
-    * deterministicSplit discipline applied to sampling). The item universe
-    * is ranked once by the two-pass range-partition numbering (id sort
-    * order — stable), N comes from a 1-row broadcast cross join, and the
-    * draw joins the rank table on its key — a co-partitioned equi-join,
-    * never a collect. Accidental positives are kept (standard practice —
-    * filter afterwards if the loss requires it).
-    *
-    * Returns (queryIdCol, draw, itemIdCol) — k rows per query. */
   /** DSIR importance scores (Xie et al., NeurIPS 2023, arXiv:2302.03169) —
     * "which raw documents look like the target domain?", the
     * data-selection step between quality filtering and mixing: fit two
@@ -297,6 +285,18 @@ object Sampling {
       .drop("__term")
   }
 
+  /** Deterministic hash-based negative sampling — k pseudo-random items
+    * per query for contrastive / ranking training pairs, with NO RNG state:
+    * draw j ∈ 0..k−1 picks item rank md5(query:j) mod N, so the sample is
+    * reproducible on any engine, partitioning and run (the
+    * deterministicSplit discipline applied to sampling). The item universe
+    * is ranked once by the two-pass range-partition numbering (id sort
+    * order — stable), N comes from a 1-row broadcast cross join, and the
+    * draw joins the rank table on its key — a co-partitioned equi-join,
+    * never a collect. Accidental positives are kept (standard practice —
+    * filter afterwards if the loss requires it).
+    *
+    * Returns (queryIdCol, draw, itemIdCol) — k rows per query. */
   def negativeSample(
       queries: DataFrame,
       queryIdCol: String,
@@ -386,8 +386,7 @@ object Sampling {
       df: DataFrame,
       strataCols: Seq[String],
       valueCol: String,
-      totalSample: Long,
-      dp: Int = 6): DataFrame = {
+      totalSample: Long): DataFrame = {
     require(strataCols.nonEmpty, "at least one stratum column required")
     require(totalSample >= 0, s"totalSample must be >= 0, got $totalSample")
     val keys = strataCols.map(col)
@@ -415,6 +414,6 @@ object Sampling {
       .drop("__w0", "__w_sum")
     Relational.apportion(fallback, "__wq", totalSample, keys, outCol = "n_alloc")
       .select(keys ++ Seq(col("n_pop"),
-        round(col("__sd"), dp).as("sd"), col("n_alloc")): _*)
+        round(col("__sd"), 6).as("sd"), col("n_alloc")): _*)
   }
 }

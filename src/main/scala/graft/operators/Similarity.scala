@@ -1252,8 +1252,7 @@ object Similarity {
   def clusterQuality(
       df: DataFrame,
       featureCols: Seq[String],
-      centroids: Seq[(Int, Seq[Long])],
-      dp: Int = 6): DataFrame = {
+      centroids: Seq[(Int, Seq[Long])]): DataFrame = {
     require(centroids.size >= 2, s"need >= 2 centroids, got ${centroids.size}")
     val dims = featureCols.indices
     val pts = df.select(featureCols.zipWithIndex.map { case (c, i) =>
@@ -1318,12 +1317,12 @@ object Similarity {
       round(when(col("__k") > 1 && col("__wss") > 0,
         (col("__n2b") * (dec(col("__ntot")) - dec(col("__k")))).cast("double") /
           (dec(col("__ntot")) * dec(col("__ntot")) * dec(col("__wss")) *
-            (dec(col("__k")) - lit(1))).cast("double")), dp)
+            (dec(col("__k")) - lit(1))).cast("double")), 6)
         .as("calinski_harabasz"),
       // all centroid pairs coincident → zero contributing clusters; report
       // NULL instead of an ANSI divide-by-zero that would kill the row
       round(when(col("__kk") > 0,
         col("__mqs").cast("double") / lit(1e9) / col("__kk").cast("double")),
-        dp).as("davies_bouldin"))
+        6).as("davies_bouldin"))
   }
 }

@@ -233,14 +233,6 @@ object Sketches {
       hll_sketch_estimate(hll_union_agg(col("hll")).over(w)))
   }
 
-  /** Population Stability Index of a score column between a `baseline` and
-    * a `current` snapshot — the standard drift alarm in front of a model or
-    * a curated corpus (public convention: PSI < 0.1 stable, > 0.25 shifted).
-    * Bins are the BASELINE's equi-width bins (broadcast bounds, same shape
-    * as [[histogram]]); both sides reduce to bin counts with one partial
-    * aggregate each, the comparison joins B bin rows. Empty bins clamp to
-    * `eps` share (the standard continuity correction). Returns one row per
-    * bin with the PSI term; sum `psi_term` for the index. */
   /** Equi-width bin bounds of the baseline as a 1-row frame (__lo, __w) —
     * the broadcastable piece of [[psi]], factored out so a STREAMING
     * current side can bin against a static baseline. */
@@ -278,17 +270,26 @@ object Sketches {
       baseCounts: DataFrame,
       curCounts: DataFrame,
       eps: Double = 1e-4): DataFrame = {
+    binShares(baseCounts, curCounts)
+      .withColumn("base_pct", greatest(col("base_pct"), lit(eps)))
+      .withColumn("cur_pct", greatest(col("cur_pct"), lit(eps)))
+      .withColumn(
+        "psi_term",
+        (col("cur_pct") - col("base_pct")) * log(col("cur_pct") / col("base_pct")))
+  }
+
+  /** Per-bin baseline/current counts (bin, n_base) ⋈ (bin, n_cur), a side's
+    * missing bin counted 0, with each side's share of its total (`base_pct`,
+    * `cur_pct`) — the head of the PSI, JS and Hellinger assembles. */
+  private def binShares(baseCounts: DataFrame, curCounts: DataFrame): DataFrame = {
     val joined = baseCounts
       .join(curCounts, Seq("bin"), "full_outer")
       .na.fill(0L, Seq("n_base", "n_cur"))
     val totB = sum(col("n_base")).over(org.apache.spark.sql.expressions.Window.partitionBy())
     val totC = sum(col("n_cur")).over(org.apache.spark.sql.expressions.Window.partitionBy())
     joined
-      .withColumn("base_pct", greatest(col("n_base") / totB, lit(eps)))
-      .withColumn("cur_pct", greatest(col("n_cur") / totC, lit(eps)))
-      .withColumn(
-        "psi_term",
-        (col("cur_pct") - col("base_pct")) * log(col("cur_pct") / col("base_pct")))
+      .withColumn("base_pct", col("n_base") / totB)
+      .withColumn("cur_pct", col("n_cur") / totC)
   }
 
   /** Jensen–Shannon divergence terms from per-bin baseline/current counts
@@ -299,14 +300,7 @@ object Sketches {
     * table, so every number this operator emits is a fixed per-row double
     * chain, engine-stable with no order-dependent double SUM anywhere. */
   def jsAssemble(baseCounts: DataFrame, curCounts: DataFrame): DataFrame = {
-    val joined = baseCounts
-      .join(curCounts, Seq("bin"), "full_outer")
-      .na.fill(0L, Seq("n_base", "n_cur"))
-    val totB = sum(col("n_base")).over(org.apache.spark.sql.expressions.Window.partitionBy())
-    val totC = sum(col("n_cur")).over(org.apache.spark.sql.expressions.Window.partitionBy())
-    joined
-      .withColumn("base_pct", col("n_base") / totB)
-      .withColumn("cur_pct", col("n_cur") / totC)
+    binShares(baseCounts, curCounts)
       .withColumn("m_pct", (col("base_pct") + col("cur_pct")) / 2)
       .withColumn(
         "js_term",
@@ -323,14 +317,7 @@ object Sketches {
     * each per-bin term is a fixed 3-op IEEE chain, so the bounded bin
     * table sums engine-stably like the JS path. */
   def hellingerAssemble(baseCounts: DataFrame, curCounts: DataFrame): DataFrame = {
-    val joined = baseCounts
-      .join(curCounts, Seq("bin"), "full_outer")
-      .na.fill(0L, Seq("n_base", "n_cur"))
-    val totB = sum(col("n_base")).over(org.apache.spark.sql.expressions.Window.partitionBy())
-    val totC = sum(col("n_cur")).over(org.apache.spark.sql.expressions.Window.partitionBy())
-    joined
-      .withColumn("base_pct", col("n_base") / totB)
-      .withColumn("cur_pct", col("n_cur") / totC)
+    binShares(baseCounts, curCounts)
       .withColumn("h2_term",
         (sqrt(col("base_pct")) - sqrt(col("cur_pct"))) *
           (sqrt(col("base_pct")) - sqrt(col("cur_pct"))) / 2)
@@ -362,6 +349,14 @@ object Sketches {
       psiBinCounts(current, bounds, valueCol, nBins, "n_cur"))
   }
 
+  /** Population Stability Index of a score column between a `baseline` and
+    * a `current` snapshot — the standard drift alarm in front of a model or
+    * a curated corpus (public convention: PSI < 0.1 stable, > 0.25 shifted).
+    * Bins are the BASELINE's equi-width bins (broadcast bounds, same shape
+    * as [[histogram]]); both sides reduce to bin counts with one partial
+    * aggregate each, the comparison joins B bin rows. Empty bins clamp to
+    * `eps` share (the standard continuity correction). Returns one row per
+    * bin with the PSI term; sum `psi_term` for the index. */
   def psi(
       baseline: DataFrame,
       current: DataFrame,
@@ -439,8 +434,9 @@ object Sketches {
     * the only ordered pass runs over the HISTOGRAM (cardinality = distinct
     * quantized values, bounded by 10^dp × score range — thousands, not
     * rows), so the data side never sorts or re-shuffles. The standard
-    * "quality score → corpus percentile" step before threshold filtering. */
-  /** @param keyCols optional grouping — percentiles computed within each
+    * "quality score → corpus percentile" step before threshold filtering.
+    *
+    * @param keyCols optional grouping — percentiles computed within each
     *   key (e.g. per language); the histogram windows partition by key, so
     *   no single partition ever holds more than one key's buckets. */
   def ecdfNormalize(
@@ -482,7 +478,7 @@ object Sketches {
     * the POOLED distribution (`x → G⁻¹(F_g(x))`, the rank-matching
     * transform of bioinformatics/ML preprocessing): after it, every group
     * has the same marginal distribution, which kills per-group scale drift
-    * without choosing a parametric form. Both CDFs live on dp-quantized
+    * without choosing a parametric form. Both CDFs live on 6-dp-quantized
     * value HISTOGRAMS (windows bounded by the grid, not the corpus), and
     * the inverse lookup `min{v : G(v) ≥ p}` is the as-of union+window
     * shape — group-grid and global-grid rows union-tagged, ONE descending
@@ -493,11 +489,10 @@ object Sketches {
   def quantileNormalize(
       df: DataFrame,
       valueCol: String,
-      keyCols: Seq[String],
-      dp: Int = 6): DataFrame = {
+      keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(keyCols.nonEmpty, "quantileNormalize needs at least one key column")
-    val q = round(col(valueCol).cast("double"), dp)
+    val q = round(col(valueCol).cast("double"), 6)
     val keys = keyCols.map(col)
     val gh = df.select(keys :+ q.as("__v"): _*)
       .groupBy(keys :+ col("__v"): _*).agg(count(lit(1)).as("__c"))
@@ -533,7 +528,7 @@ object Sketches {
   /** Two-sample Kolmogorov–Smirnov test — the nonparametric drift check
     * next to [[psi]] (binned), chi-square (categorical) and Welch
     * (means): D = sup |F_a − F_b| over the two empirical CDFs, sensitive
-    * to ANY distributional change. Runs on the dp-quantized value
+    * to ANY distributional change. Runs on the 6-dp-quantized value
     * HISTOGRAM (the [[ecdfNormalize]] trick: window size capped by the
     * grid, not the corpus), and the supremum is computed in EXACT integer
     * arithmetic — the gap at each step is |i_a·m − i_b·n| (cumulative
@@ -543,8 +538,8 @@ object Sketches {
     * the asymptotic c(α)·√((n+m)/nm) form, compared after 6 dp rounding.
     * Returns one row: (n_a, n_b, ks_d, crit_95, crit_99, reject_95,
     * reject_99). */
-  def ksTest(a: DataFrame, b: DataFrame, valueCol: String, dp: Int = 6): DataFrame = {
-    val q = round(col(valueCol).cast("double"), dp)
+  def ksTest(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
+    val q = round(col(valueCol).cast("double"), 6)
     val ha = a.select(q.as("__s")).groupBy(col("__s")).agg(count(lit(1)).as("__ca"))
     val hb = b.select(q.as("__s")).groupBy(col("__s")).agg(count(lit(1)).as("__cb"))
     val w = org.apache.spark.sql.expressions.Window
@@ -586,8 +581,8 @@ object Sketches {
     * σ² = n_a·n_b/12 · ((n+1) − Σ(t³−t)/(n(n−1))) with the tie sum an
     * exact long, rounding z at 6 dp only at the end. Returns one row:
     * (n_a, n_b, u_a, z, reject_95, reject_99). */
-  def mannWhitneyU(a: DataFrame, b: DataFrame, valueCol: String, dp: Int = 6): DataFrame = {
-    val q = round(col(valueCol).cast("double"), dp)
+  def mannWhitneyU(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
+    val q = round(col(valueCol).cast("double"), 6)
     val ha = a.select(q.as("__s")).groupBy(col("__s")).agg(count(lit(1)).as("__ca"))
     val hb = b.select(q.as("__s")).groupBy(col("__s")).agg(count(lit(1)).as("__cb"))
     val w = org.apache.spark.sql.expressions.Window
@@ -641,7 +636,7 @@ object Sketches {
     * (n₁·SR₂ − n₂·SR₁)/(2N) — one more division — and p̂ to
     * (SR₂ − n₂(n₂+1))/(2n₁n₂). Degenerate variance (complete separation)
     * or nₖ ≤ 1 → NULL W/dof, p̂ still reports. */
-  def brunnerMunzel(a: DataFrame, b: DataFrame, valueCol: String, dp: Int = 6): DataFrame = {
+  def brunnerMunzel(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val v = col(valueCol).cast("long")
     val ha = a.filter(v.isNotNull).select(v.as("__v"))
@@ -691,9 +686,9 @@ object Sketches {
     val ok = col("__na") > 1 && col("__nb") > 1
     qAgg.select(
       col("__na").as("n_a"), col("__nb").as("n_b"),
-      when(col("__na") > 0 && col("__nb") > 0, round(pHat, dp)).as("p_hat"),
-      when(ok, when(se > 0, round(wStat, dp))).as("w_stat"),
-      when(ok, when(se > 0 && (t1 > 0 || t2 > 0), round(dof, dp))).as("dof"))
+      when(col("__na") > 0 && col("__nb") > 0, round(pHat, 6)).as("p_hat"),
+      when(ok, when(se > 0, round(wStat, 6))).as("w_stat"),
+      when(ok, when(se > 0 && (t1 > 0 || t2 > 0), round(dof, 6))).as("dof"))
   }
 
   /** Cliff's delta (Cliff 1993) with the Vargha–Delaney Â (2000) beside it
@@ -767,17 +762,7 @@ object Sketches {
       valueCol: String,
       a: String,
       b: String): DataFrame = {
-    def S(e: Column) =
-      sum(floor(e * 1000000.0 + 0.5).cast("long")).cast("double") / 1000000.0
-    val v = col(valueCol).cast("double")
-    val byGroup = df
-      .filter(col(groupCol).isin(a, b))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).cast("double").as("__n"), S(v).as("__s"), S(v * v).as("__ss"))
-    def pick(g: String, c: String) = max(when(col(groupCol) === g, col(c)))
-    val wide = byGroup.agg(
-      pick(a, "__n").as("na"), pick(a, "__s").as("sa"), pick(a, "__ss").as("ssa"),
-      pick(b, "__n").as("nb"), pick(b, "__s").as("sb"), pick(b, "__ss").as("ssb"))
+    val wide = welchMoments(df, groupCol, valueCol, a, b)
     val ma = col("sa") / col("na")
     val mb = col("sb") / col("nb")
     val va = (col("ssa") - col("sa") * col("sa") / col("na")) / (col("na") - 1)
@@ -790,6 +775,29 @@ object Sketches {
       ((ma - mb) / sqrt(sea + seb)).as("t_stat"),
       (pow(sea + seb, 2.0) /
         (pow(sea, 2.0) / (col("na") - 1) + pow(seb, 2.0) / (col("nb") - 1))).as("dof"))
+  }
+
+  /** Groups `a` and `b`'s count (`na`, `nb`), sum (`sa`, `sb`) and sum of
+    * squares (`ssa`, `ssb`) as one row, the sums from per-row
+    * `floor(x·1e6 + 0.5)` exact long sums — the moments of [[welchTTest]]
+    * and [[tostEquivalence]]. */
+  private def welchMoments(
+      df: DataFrame,
+      groupCol: String,
+      valueCol: String,
+      a: String,
+      b: String): DataFrame = {
+    def S(e: Column) =
+      sum(floor(e * 1000000.0 + 0.5).cast("long")).cast("double") / 1000000.0
+    val v = col(valueCol).cast("double")
+    val byGroup = df
+      .filter(col(groupCol).isin(a, b))
+      .groupBy(col(groupCol))
+      .agg(count(lit(1)).cast("double").as("__n"), S(v).as("__s"), S(v * v).as("__ss"))
+    def pick(g: String, c: String) = max(when(col(groupCol) === g, col(c)))
+    byGroup.agg(
+      pick(a, "__n").as("na"), pick(a, "__s").as("sa"), pick(a, "__ss").as("ssa"),
+      pick(b, "__n").as("nb"), pick(b, "__s").as("sb"), pick(b, "__ss").as("ssb"))
   }
 
   /** Group-sequential A/B readout with Pocock boundaries (Pocock 1977) —
@@ -878,17 +886,7 @@ object Sketches {
       b: String,
       margin: Double): DataFrame = {
     require(margin > 0, s"margin must be > 0, got $margin")
-    def S(e: Column) =
-      sum(floor(e * 1000000.0 + 0.5).cast("long")).cast("double") / 1000000.0
-    val v = col(valueCol).cast("double")
-    val byGroup = df
-      .filter(col(groupCol).isin(a, b))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).cast("double").as("__n"), S(v).as("__s"), S(v * v).as("__ss"))
-    def pick(g: String, c: String) = max(when(col(groupCol) === g, col(c)))
-    val wide = byGroup.agg(
-      pick(a, "__n").as("na"), pick(a, "__s").as("sa"), pick(a, "__ss").as("ssa"),
-      pick(b, "__n").as("nb"), pick(b, "__s").as("sb"), pick(b, "__ss").as("ssb"))
+    val wide = welchMoments(df, groupCol, valueCol, a, b)
     val ma = col("sa") / col("na")
     val mb = col("sb") / col("nb")
     val va = (col("ssa") - col("sa") * col("sa") / col("na")) / (col("na") - 1)
@@ -930,10 +928,9 @@ object Sketches {
       b: String,
       alpha: Double = 0.05,
       power: Double = 0.8,
-      targetEffect: Option[Double] = None,
-      dp: Int = 6): DataFrame =
+      targetEffect: Option[Double] = None): DataFrame =
     abPowerAssemble(msprtMoments(df, groupCol, valueCol, a, b),
-      groupCol, a, b, alpha, power, targetEffect, dp)
+      groupCol, a, b, alpha, power, targetEffect)
 
   /** Readout half of [[abPower]] over the shared per-arm integer moment
     * rows ([[msprtMoments]]) — the streaming twin's state shape. */
@@ -944,8 +941,7 @@ object Sketches {
       b: String,
       alpha: Double = 0.05,
       power: Double = 0.8,
-      targetEffect: Option[Double] = None,
-      dp: Int = 6): DataFrame = {
+      targetEffect: Option[Double] = None): DataFrame = {
     val zAlpha = Map(0.01 -> 2.5758293035489004,
       0.05 -> 1.959963984540054, 0.1 -> 1.6448536269514722)
     val zPower = Map(0.8 -> 0.8416212335729143,
@@ -954,14 +950,7 @@ object Sketches {
     require(zPower.contains(power), s"power must be one of ${zPower.keys}, got $power")
     targetEffect.foreach(e => require(e > 0, s"targetEffect must be > 0, got $e"))
     val zSum = zAlpha(alpha) + zPower(power)
-    def pick(g: String, c: String) = max(when(col(groupCol) === g, col(c)))
-    val wide = byGroup.agg(
-      pick(a, "__n").cast("double").as("na"),
-      (pick(a, "__sq").cast("double") / 1000000.0).as("sa"),
-      (pick(a, "__ssq").cast("double") / 1000000.0).as("ssa"),
-      pick(b, "__n").cast("double").as("nb"),
-      (pick(b, "__sq").cast("double") / 1000000.0).as("sb"),
-      (pick(b, "__ssq").cast("double") / 1000000.0).as("ssb"))
+    val wide = armMoments(byGroup, groupCol, a, b)
     val va = (col("ssa") - col("sa") * col("sa") / col("na")) / (col("na") - 1)
     val vb = (col("ssb") - col("sb") * col("sb") / col("nb")) / (col("nb") - 1)
     val seDiff = sqrt(va / col("na") + vb / col("nb"))
@@ -969,9 +958,9 @@ object Sketches {
       ceil(lit(zSum) * lit(zSum) * (va + vb) / lit(e * e)).cast("long"))
     wide.select(Seq(
       col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"),
-      round(col("sa") / col("na") - col("sb") / col("nb"), dp).as("observed_diff"),
-      round(seDiff, dp).as("se_diff"),
-      round(lit(zSum) * seDiff, dp).as("mde")) ++
+      round(col("sa") / col("na") - col("sb") / col("nb"), 6).as("observed_diff"),
+      round(seDiff, 6).as("se_diff"),
+      round(lit(zSum) * seDiff, 6).as("mde")) ++
       nReq.map(_.as("n_required_per_arm")).toSeq: _*)
   }
 
@@ -1003,8 +992,7 @@ object Sketches {
       valueCol: String,
       a: String,
       b: String,
-      trimFrac: Double = 0.2,
-      dp: Int = 6): DataFrame = {
+      trimFrac: Double = 0.2): DataFrame = {
     require(trimFrac > 0 && trimFrac < 0.5, s"trimFrac must be in (0, 0.5), got $trimFrac")
     def d(c: Column): Column = c.cast("decimal(38,0)")
     val hist = df
@@ -1061,10 +1049,10 @@ object Sketches {
       col("na").as("n_a"), col("nb").as("n_b"),
       (col("na") - col("ka") * 2).as("h_a"),
       (col("nb") - col("kb") * 2).as("h_b"),
-      round(tma, dp).as("tmean_a"),
-      round(tmb, dp).as("tmean_b"),
-      when(ok, round(t, dp)).as("t_stat"),
-      when(ok, round(dof, dp)).as("dof"))
+      round(tma, 6).as("tmean_a"),
+      round(tmb, 6).as("tmean_b"),
+      when(ok, round(t, 6)).as("t_stat"),
+      when(ok, round(dof, 6)).as("dof"))
   }
 
   /** Standardized effect sizes (Cohen 1969; Hedges 1981; Glass 1976) —
@@ -1083,10 +1071,8 @@ object Sketches {
       groupCol: String,
       valueCol: String,
       a: String,
-      b: String,
-      dp: Int = 6): DataFrame =
-    effectSizeAssemble(msprtMoments(df, groupCol, valueCol, a, b),
-      groupCol, a, b, dp)
+      b: String): DataFrame =
+    effectSizeAssemble(msprtMoments(df, groupCol, valueCol, a, b), groupCol, a, b)
 
   /** Readout half of [[effectSize]] over the shared per-arm integer
     * moment rows ([[msprtMoments]]) — the streaming twin's state shape. */
@@ -1094,16 +1080,8 @@ object Sketches {
       byGroup: DataFrame,
       groupCol: String,
       a: String,
-      b: String,
-      dp: Int = 6): DataFrame = {
-    def pick(g: String, c: String) = max(when(col(groupCol) === g, col(c)))
-    val wide = byGroup.agg(
-      pick(a, "__n").cast("double").as("na"),
-      (pick(a, "__sq").cast("double") / 1000000.0).as("sa"),
-      (pick(a, "__ssq").cast("double") / 1000000.0).as("ssa"),
-      pick(b, "__n").cast("double").as("nb"),
-      (pick(b, "__sq").cast("double") / 1000000.0).as("sb"),
-      (pick(b, "__ssq").cast("double") / 1000000.0).as("ssb"))
+      b: String): DataFrame = {
+    val wide = armMoments(byGroup, groupCol, a, b)
     val va = (col("ssa") - col("sa") * col("sa") / col("na")) / (col("na") - 1)
     val vb = (col("ssb") - col("sb") * col("sb") / col("nb")) / (col("nb") - 1)
     val diff = col("sa") / col("na") - col("sb") / col("nb")
@@ -1113,11 +1091,11 @@ object Sketches {
     val corr = lit(1.0) - lit(3.0) / (lit(4.0) * (col("na") + col("nb")) - 9.0)
     wide.select(
       col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"),
-      round(diff, dp).as("mean_diff"),
-      when(sp > 0, round(sp, dp)).as("pooled_sd"),
-      when(sp > 0, round(d, dp)).as("cohens_d"),
-      when(sp > 0, round(d * corr, dp)).as("hedges_g"),
-      when(vb > 0, round(diff / sqrt(vb), dp)).as("glass_delta"))
+      round(diff, 6).as("mean_diff"),
+      when(sp > 0, round(sp, 6)).as("pooled_sd"),
+      when(sp > 0, round(d, 6)).as("cohens_d"),
+      when(sp > 0, round(d * corr, 6)).as("hedges_g"),
+      when(vb > 0, round(diff / sqrt(vb), 6)).as("glass_delta"))
   }
 
   /** Two-sample mixture SPRT / always-valid p-value (Robbins 1970;
@@ -1144,10 +1122,9 @@ object Sketches {
       b: String,
       tau: Double,
       mu0: Double = 0.0,
-      alpha: Double = 0.05,
-      dp: Int = 6): DataFrame =
+      alpha: Double = 0.05): DataFrame =
     msprtAssemble(msprtMoments(df, groupCol, valueCol, a, b),
-      groupCol, a, b, tau, mu0, alpha, dp)
+      groupCol, a, b, tau, mu0, alpha)
 
   /** Moment half of [[msprt]]: per-arm (count, quantized Σv, Σv²) as
     * exact LONG sums — the streaming twin accumulates exactly these in
@@ -1166,6 +1143,21 @@ object Sketches {
       .agg(count(lit(1)).as("__n"), q(v).as("__sq"), q(v * v).as("__ssq"))
   }
 
+  /** The two arms of a [[msprtMoments]] table as one row: count (`na`,
+    * `nb`), sum (`sa`, `sb`) and sum of squares (`ssa`, `ssb`) as doubles —
+    * the head of [[abPowerAssemble]], [[effectSizeAssemble]] and
+    * [[msprtAssemble]]. */
+  private def armMoments(byGroup: DataFrame, groupCol: String, a: String, b: String): DataFrame = {
+    def pick(g: String, c: String) = max(when(col(groupCol) === g, col(c)))
+    byGroup.agg(
+      pick(a, "__n").cast("double").as("na"),
+      (pick(a, "__sq").cast("double") / 1000000.0).as("sa"),
+      (pick(a, "__ssq").cast("double") / 1000000.0).as("ssa"),
+      pick(b, "__n").cast("double").as("nb"),
+      (pick(b, "__sq").cast("double") / 1000000.0).as("sb"),
+      (pick(b, "__ssq").cast("double") / 1000000.0).as("ssb"))
+  }
+
   /** Readout half of [[msprt]] over the per-arm integer moment rows —
     * the always-valid p is DESIGNED for this split: the state updates
     * every micro-batch and the readout stays honest at every look. */
@@ -1176,18 +1168,10 @@ object Sketches {
       b: String,
       tau: Double,
       mu0: Double = 0.0,
-      alpha: Double = 0.05,
-      dp: Int = 6): DataFrame = {
+      alpha: Double = 0.05): DataFrame = {
     require(tau > 0, s"tau must be > 0, got $tau")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    def pick(g: String, c: String) = max(when(col(groupCol) === g, col(c)))
-    val wide = byGroup.agg(
-      pick(a, "__n").cast("double").as("na"),
-      (pick(a, "__sq").cast("double") / 1000000.0).as("sa"),
-      (pick(a, "__ssq").cast("double") / 1000000.0).as("ssa"),
-      pick(b, "__n").cast("double").as("nb"),
-      (pick(b, "__sq").cast("double") / 1000000.0).as("sb"),
-      (pick(b, "__ssq").cast("double") / 1000000.0).as("ssb"))
+    val wide = armMoments(byGroup, groupCol, a, b)
     val va = (col("ssa") - col("sa") * col("sa") / col("na")) / (col("na") - 1)
     val vb = (col("ssb") - col("sb") * col("sb") / col("nb")) / (col("nb") - 1)
     val se2 = va / col("na") + vb / col("nb")
@@ -1198,9 +1182,9 @@ object Sketches {
     val p = least(lit(1.0), exp(-logLambda))
     wide.select(
       col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"),
-      round(d, dp).as("diff"),
-      round(logLambda, dp).as("log_lambda"),
-      round(p, dp).as("p_always_valid"),
+      round(d, 6).as("diff"),
+      round(logLambda, 6).as("log_lambda"),
+      round(p, 6).as("p_always_valid"),
       (p <= alpha).as("reject"))
   }
 
@@ -1226,8 +1210,7 @@ object Sketches {
   def metaAnalysis(
       df: DataFrame,
       effectCol: String,
-      seCol: String,
-      dp: Int = 6): DataFrame = {
+      seCol: String): DataFrame = {
     val e = col(effectCol).cast("double")
     val se = col(seCol).cast("double")
     val w = lit(1.0) / (se * se)
@@ -1245,12 +1228,12 @@ object Sketches {
     val dfK = (col("k") - 1).cast("double")
     firstP.crossJoin(qPass).select(
       col("k"),
-      round(col("__pooled"), dp).as("pooled_effect"),
-      round(sqrt(lit(1.0) / (col("__sw").cast("double") / 1e6)), dp).as("pooled_se"),
-      when(col("k") > 1, round(qStat, dp)).as("q_stat"),
+      round(col("__pooled"), 6).as("pooled_effect"),
+      round(sqrt(lit(1.0) / (col("__sw").cast("double") / 1e6)), 6).as("pooled_se"),
+      when(col("k") > 1, round(qStat, 6)).as("q_stat"),
       when(col("k") > 1,
         round(greatest(lit(0.0),
-          when(qStat > 0, (qStat - dfK) / qStat).otherwise(lit(0.0))), dp)).as("i2"))
+          when(qStat > 0, (qStat - dfK) / qStat).otherwise(lit(0.0))), 6)).as("i2"))
   }
 
   /** Survey raking / iterative proportional fitting (Deming–Stephan 1940)
@@ -1844,12 +1827,11 @@ object Sketches {
     * itself follows the PSI precedent) then QUANTIZED to exact 1e-12ths
     * before the cross-cell sum, so the total is partition-order-independent
     * and the oracle replays it cell for cell. Returns one row
-    * (n, n_cells, mi) with mi ≥ 0 up to quantization, rounded at `dp`. */
+    * (n, n_cells, mi) with mi ≥ 0 up to quantization, rounded at 6 dp. */
   def mutualInformation(
       df: DataFrame,
       aCol: String,
-      bCol: String,
-      dp: Int = 6): DataFrame = {
+      bCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cells = df.groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
       .agg(count(lit(1)).as("__c"))
@@ -1868,7 +1850,7 @@ object Sketches {
       .agg(
         max(col("__n")).as("n"),
         count(lit(1)).as("n_cells"),
-        round(sum(col("__tq")) / 1e12, dp).as("mi"))
+        round(sum(col("__tq")) / 1e12, 6).as("mi"))
   }
 
   /** Binned mutual information between two CONTINUOUS columns — the
@@ -1885,8 +1867,7 @@ object Sketches {
       xCol: String,
       yCol: String,
       nx: Int,
-      ny: Int,
-      dp: Int = 6): DataFrame = {
+      ny: Int): DataFrame = {
     require(nx >= 1 && ny >= 1, s"bin counts must be >= 1, got nx=$nx ny=$ny")
     val x = col(xCol).cast("double")
     val y = col(yCol).cast("double")
@@ -1903,7 +1884,7 @@ object Sketches {
       .select(
         binOf(x, col("__xlo"), col("__wx"), nx).as("__bx"),
         binOf(y, col("__ylo"), col("__wy"), ny).as("__by"))
-    mutualInformation(binned, "__bx", "__by", dp)
+    mutualInformation(binned, "__bx", "__by")
   }
 
   /** Per-group simple linear regression (closed-form OLS) — the trend
@@ -1917,7 +1898,7 @@ object Sketches {
     * slope = (nΣxy−ΣxΣy)/(nΣx²−(Σx)²), intercept = (Σy·den−num·Σx)/(n·den),
     * r² = (num/den)·(num/den_y). Every division casts TWO exact integers to
     * double (IEEE round-to-nearest — identical on any engine) and rounds at
-    * `dp`; numerators/denominators are never squared in decimal (num² would
+    * 6 dp; numerators/denominators are never squared in decimal (num² would
     * overflow 38 digits), the oracle replays the same double expression
     * shape. Degenerate groups (constant x, or constant y for r²) yield NULL.
     *
@@ -1926,8 +1907,7 @@ object Sketches {
       df: DataFrame,
       groupCols: Seq[String],
       xCol: String,
-      yCol: String,
-      dp: Int = 6): DataFrame = {
+      yCol: String): DataFrame = {
     val x = col(xCol).cast("decimal(38,0)")
     val y = col(yCol).cast("decimal(38,0)")
     val agg = df.groupBy(groupCols.map(col): _*)
@@ -1947,12 +1927,12 @@ object Sketches {
     agg.select(
       groupCols.map(col) ++ Seq(
         col("__n").cast("long").as("n"),
-        when(den =!= 0, round(numD / denD, dp)).as("slope"),
+        when(den =!= 0, round(numD / denD, 6)).as("slope"),
         when(den =!= 0,
           round((col("__sy") * den - num * col("__sx")).cast("double") /
-            (col("__n") * den).cast("double"), dp)).as("intercept"),
+            (col("__n") * den).cast("double"), 6)).as("intercept"),
         when(den =!= 0 && deny =!= 0,
-          round((numD / denD) * (numD / denyD), dp)).as("r2")): _*)
+          round((numD / denD) * (numD / denyD), 6)).as("r2")): _*)
   }
 
   /** Gini coefficient per key group — the inequality/concentration measure
@@ -1966,7 +1946,7 @@ object Sketches {
     * ties share the same v so their rank order inside the block cancels,
     * making the statistic tie-stable and engine-deterministic. All sums
     * are exact DECIMAL(38,0) (the olsTrend recipe); G is one division of
-    * two exact integers, rounded at `dp`.
+    * two exact integers, rounded at 6 dp.
     *
     * Scale shape: one partial agg to the histogram, one windowed pass over
     * it (bounded by value resolution — quantize upstream), one partial agg
@@ -1975,8 +1955,7 @@ object Sketches {
   def gini(
       df: DataFrame,
       keyCols: Seq[String],
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val keys = keyCols.map(col)
     val hist = df
       .groupBy(keys :+ col(valueCol).cast("long").as("__v"): _*)
@@ -1998,30 +1977,9 @@ object Sketches {
       keys ++ Seq(
         col("__n").cast("long").as("n"),
         when(col("__s1") =!= 0,
-          round(num.cast("double") / den.cast("double"), dp)).as("gini")): _*)
+          round(num.cast("double") / den.cast("double"), 6)).as("gini")): _*)
   }
 
-  /** Theil–Sen robust trend per group — the median of all pairwise slopes
-    * (Theil 1950 / Sen 1968), the outlier-resistant sibling of X118's
-    * least-squares trend (breakdown point ~29% vs 0%).
-    *
-    * Pairwise means quadratic PER GROUP: the caller's contract is bounded
-    * groups (compose with [[Relational.capGroupSize]] upstream, the same
-    * guard the basket-mining shapes use). Under that bound the whole
-    * computation runs as a native kernel over each group's collected
-    * points ([[graft.functions.theil_sen_median]]) — ONE partial aggregate,
-    * no O(k²)-row pair join and no rank window (the first formulation
-    * shuffled every pair and benched 8.3s at sf0.1; the kernel does the
-    * same O(k²) arithmetic inside a row). Equal-x pairs are skipped
-    * (undefined slope); each slope is one division of two exact integer
-    * differences (bit-identical on any IEEE engine), and the median is the
-    * LOWER median — the ⌈n/2⌉-th smallest slope, an element SELECTION
-    * rather than an interpolation, so the output double is one of the
-    * bit-exact slopes and needs no rounding at all (an interpolated
-    * median's (a+b)/2 vs a+(b−a)/2 differ by an ulp across engines).
-    * The slope multiset is collection-order-independent, so so is the
-    * selected element.
-    */
   /** Elo ratings from an ordered match log (Elo 1978; the Bradley–Terry
     * family's ONLINE member — X280's MM fit weighs all pairs at once,
     * Elo replays the match SEQUENCE, so recent form moves the number):
@@ -2056,6 +2014,27 @@ object Sketches {
         col("__e.games").as("games"))
   }
 
+  /** Theil–Sen robust trend per group — the median of all pairwise slopes
+    * (Theil 1950 / Sen 1968), the outlier-resistant sibling of X118's
+    * least-squares trend (breakdown point ~29% vs 0%).
+    *
+    * Pairwise means quadratic PER GROUP: the caller's contract is bounded
+    * groups (compose with [[Relational.capGroupSize]] upstream, the same
+    * guard the basket-mining shapes use). Under that bound the whole
+    * computation runs as a native kernel over each group's collected
+    * points ([[graft.functions.theil_sen_median]]) — ONE partial aggregate,
+    * no O(k²)-row pair join and no rank window (the first formulation
+    * shuffled every pair and benched 8.3s at sf0.1; the kernel does the
+    * same O(k²) arithmetic inside a row). Equal-x pairs are skipped
+    * (undefined slope); each slope is one division of two exact integer
+    * differences (bit-identical on any IEEE engine), and the median is the
+    * LOWER median — the ⌈n/2⌉-th smallest slope, an element SELECTION
+    * rather than an interpolation, so the output double is one of the
+    * bit-exact slopes and needs no rounding at all (an interpolated
+    * median's (a+b)/2 vs a+(b−a)/2 differ by an ulp across engines).
+    * The slope multiset is collection-order-independent, so so is the
+    * selected element.
+    */
   def theilSen(
       df: DataFrame,
       groupCols: Seq[String],
@@ -2252,8 +2231,7 @@ object Sketches {
   def momentStats(
       df: DataFrame,
       keyCols: Seq[String],
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val keys = keyCols.map(col)
     val v = col(valueCol).cast("long")
     def d(c: Column): Column = c.cast("decimal(38,0)")
@@ -2274,12 +2252,12 @@ object Sketches {
     agg.select(
       keys ++ Seq(
         col("__n").cast("long").as("n"),
-        round(m1, dp).as("mean"),
-        when(col("__n") > 1, round(m2, dp)).as("m2"),
+        round(m1, 6).as("mean"),
+        when(col("__n") > 1, round(m2, 6)).as("m2"),
         when(col("__n") > 2 && m2 > 0,
-          round(m3 / (m2 * sqrt(m2)), dp)).as("skewness"),
+          round(m3 / (m2 * sqrt(m2)), 6)).as("skewness"),
         when(col("__n") > 3 && m2 > 0,
-          round(m4 / (m2 * m2) - lit(3.0), dp)).as("excess_kurtosis")): _*)
+          round(m4 / (m2 * m2) - lit(3.0), 6)).as("excess_kurtosis")): _*)
   }
 
   /** Jarque–Bera normality test per key (Jarque & Bera 1980) — the
@@ -2292,8 +2270,7 @@ object Sketches {
   def jarqueBera(
       df: DataFrame,
       keyCols: Seq[String],
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val keys = keyCols.map(col)
     val v = col(valueCol).cast("long")
     def d(c: Column): Column = c.cast("decimal(38,0)")
@@ -2317,10 +2294,10 @@ object Sketches {
     agg.select(
       keys ++ Seq(
         col("__n").cast("long").as("n"),
-        when(col("__n") > 3 && m2 > 0, round(g1, dp)).as("skewness"),
-        when(col("__n") > 3 && m2 > 0, round(g2, dp)).as("excess_kurtosis"),
+        when(col("__n") > 3 && m2 > 0, round(g1, 6)).as("skewness"),
+        when(col("__n") > 3 && m2 > 0, round(g2, 6)).as("excess_kurtosis"),
         when(col("__n") > 3 && m2 > 0,
-          round(n / lit(6.0) * (g1 * g1 + g2 * g2 / lit(4.0)), dp)).as("jb")): _*)
+          round(n / lit(6.0) * (g1 * g1 + g2 * g2 / lit(4.0)), 6)).as("jb")): _*)
   }
 
   /** Exact trimmed mean per group: drop the ⌊n·trimFrac⌋ smallest and
@@ -2377,8 +2354,7 @@ object Sketches {
       df: DataFrame,
       keyCols: Seq[String],
       orderCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val keys = keyCols.map(col)
     val v = col(valueCol).cast("long")
     val wRank = Window.partitionBy(keys: _*).orderBy(col("__v"))
@@ -2411,9 +2387,9 @@ object Sketches {
       keys ++ Seq(
         col("runs"), col("n_above"), col("n_below"),
         when(col("n_above") > 0 && col("n_below") > 0 && n > 1,
-          round(mu, dp)).as("expected_runs"),
+          round(mu, 6)).as("expected_runs"),
         when(col("n_above") > 0 && col("n_below") > 0 && n > 1,
-          round((col("runs").cast("double") - mu) / sqrt(vr), dp)).as("z")): _*)
+          round((col("runs").cast("double") - mu) / sqrt(vr), 6)).as("z")): _*)
   }
 
   /** Cochran's Q (1950) — the k-treatment generalization of [[mcnemar]]:
@@ -2425,7 +2401,7 @@ object Sketches {
     * (k−1)·Σ_j(k·T_j − S)² / (k·(k·S − ΣR²)): every term an exact long
     * from ONE partial aggregate, the statistic ONE division. Degenerate
     * tables (every row all-true/all-false) report NULL. */
-  def cochranQ(df: DataFrame, ruleCols: Seq[String], dp: Int = 6): DataFrame = {
+  def cochranQ(df: DataFrame, ruleCols: Seq[String]): DataFrame = {
     val k = ruleCols.size
     require(k >= 2, s"need >= 2 rules, got $k")
     val r = ruleCols.map(c => when(col(c), 1L).otherwise(0L)).reduce(_ + _)
@@ -2442,7 +2418,7 @@ object Sketches {
     val den = (col("__s") * k - col("__r2")) * k
     agg.select(
       col("__n").as("n"), lit(k.toLong).as("k"), lit((k - 1).toLong).as("dof"),
-      when(den > 0, round(num.cast("double") / den.cast("double"), dp))
+      when(den > 0, round(num.cast("double") / den.cast("double"), 6))
         .as("q"))
   }
 
@@ -2459,18 +2435,16 @@ object Sketches {
   def classificationReport(
       df: DataFrame,
       actualCol: String,
-      predictedCol: String,
-      dp: Int = 6): DataFrame =
+      predictedCol: String): DataFrame =
     classificationReportFromCells(
       df.groupBy(col(actualCol).as("__a"), col(predictedCol).as("__p"))
-        .agg(count(lit(1)).as("__c")),
-      dp)
+        .agg(count(lit(1)).as("__c")))
 
   /** [[classificationReport]]'s assembly half over pre-aggregated confusion
     * cells `(__a, __p, __c)` — the label-domain-bounded state shape a
     * streaming monitor maintains in the state store (complete mode), so
     * stream == batch exactly: integer cells merge associatively. */
-  def classificationReportFromCells(cells: DataFrame, dp: Int = 6): DataFrame = {
+  def classificationReportFromCells(cells: DataFrame): DataFrame = {
     val act = cells.groupBy(col("__a").as("label"))
       .agg(sum(col("__c")).as("__act"))
     val prd = cells.groupBy(col("__p").as("label"))
@@ -2497,15 +2471,49 @@ object Sketches {
         col("tp"), col("fp"), col("fn"),
         when(col("tp") + col("fp") > 0,
           round(col("tp").cast("double") /
-            (col("tp") + col("fp")).cast("double"), dp)).as("precision"),
+            (col("tp") + col("fp")).cast("double"), 6)).as("precision"),
         when(col("tp") + col("fn") > 0,
           round(col("tp").cast("double") /
-            (col("tp") + col("fn")).cast("double"), dp)).as("recall"),
-        round(f1, dp).as("f1"),
+            (col("tp") + col("fn")).cast("double"), 6)).as("recall"),
+        round(f1, 6).as("f1"),
         round(sum(col("__f1q")).over(wAll).cast("double") / lit(1e9) /
-          count(lit(1)).over(wAll).cast("double"), dp).as("macro_f1"),
-        round(col("__tpAll").cast("double") / col("__nAll").cast("double"), dp)
+          count(lit(1)).over(wAll).cast("double"), 6).as("macro_f1"),
+        round(col("__tpAll").cast("double") / col("__nAll").cast("double"), 6)
           .as("accuracy"))
+  }
+
+  /** The complete blocks of a (`__b` block, `__t` treatment, `__v` value)
+    * frame: blocks with one row for each of the k treatments. The filter
+    * checks BOTH counts, distinct treatments == k AND rows == k — a block
+    * with a duplicated (block, treatment) row plus a missing treatment
+    * matches the raw row count alone and would silently corrupt the
+    * within-block midranks. */
+  private def completeBlocks(base: DataFrame): DataFrame = {
+    val kDf = base.agg(count_distinct(col("__t")).as("__k"))
+    val complete = base.groupBy(col("__b"))
+      .agg(count(lit(1)).as("__cnt"), count_distinct(col("__t")).as("__td"))
+      .crossJoin(broadcast(kDf))
+      .filter(col("__cnt") === col("__k") && col("__td") === col("__k"))
+      .select(col("__b"))
+    base.join(complete, Seq("__b"), "left_semi")
+  }
+
+  /** Rows per (block, value) of a [[completeBlocks]] frame (`__c`). */
+  private def blockValueCounts(kept: DataFrame): DataFrame =
+    kept.groupBy(col("__b"), col("__v")).agg(count(lit(1)).as("__c"))
+
+  /** Each treatment's sum `__R2` of doubled within-block midranks
+    * (2·before + ties + 1, exact integers) and its block count `__nb`. */
+  private def treatmentRankSums(kept: DataFrame, hist: DataFrame): DataFrame = {
+    val wCum = Window.partitionBy(col("__b")).orderBy(col("__v"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val r2 = hist
+      .withColumn("__before", sum(col("__c")).over(wCum) - col("__c"))
+      .select(col("__b"), col("__v"),
+        (col("__before") * 2 + col("__c") + 1).as("__r2"))
+    kept.join(r2, Seq("__b", "__v"))
+      .groupBy(col("__t"))
+      .agg(sum(col("__r2")).as("__R2"), count(lit(1)).as("__nb"))
   }
 
   /** Friedman test (1937) — the nonparametric repeated-measures check
@@ -2523,33 +2531,12 @@ object Sketches {
       df: DataFrame,
       blockCol: String,
       treatmentCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val base = df.select(
       col(blockCol).as("__b"), col(treatmentCol).as("__t"),
       col(valueCol).cast("long").as("__v"))
-    val kDf = base.agg(count_distinct(col("__t")).as("__k"))
-    // complete-block filter on BOTH counts: distinct treatments == k AND
-    // one row per treatment — a block with a duplicated (block, treatment)
-    // row plus a missing treatment matches the raw row count alone and
-    // would silently corrupt the within-block midranks
-    val complete = base.groupBy(col("__b"))
-      .agg(count(lit(1)).as("__cnt"), count_distinct(col("__t")).as("__td"))
-      .crossJoin(broadcast(kDf))
-      .filter(col("__cnt") === col("__k") && col("__td") === col("__k"))
-      .select(col("__b"))
-    val kept = base.join(complete, Seq("__b"), "left_semi")
-    val hist = kept.groupBy(col("__b"), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val wCum = Window.partitionBy(col("__b")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val r2 = hist
-      .withColumn("__before", sum(col("__c")).over(wCum) - col("__c"))
-      .select(col("__b"), col("__v"),
-        (col("__before") * 2 + col("__c") + 1).as("__r2"))
-    val perT = kept.join(r2, Seq("__b", "__v"))
-      .groupBy(col("__t"))
-      .agg(sum(col("__r2")).as("__R2"), count(lit(1)).as("__nb"))
+    val kept = completeBlocks(base)
+    val perT = treatmentRankSums(kept, blockValueCounts(kept))
     val agg = perT.agg(
       max(col("__nb")).as("__n"),
       count(lit(1)).as("__kk"),
@@ -2560,7 +2547,7 @@ object Sketches {
     agg.select(
       n.as("n_blocks"), k.as("k"),
       (k - 1).as("dof"),
-      round(num.cast("double") / den.cast("double"), dp).as("q"))
+      round(num.cast("double") / den.cast("double"), 6).as("q"))
   }
 
   /** First-order PARTIAL correlation r_xy·z (Yule 1907; Fisher 1924 t) —
@@ -2583,8 +2570,7 @@ object Sketches {
       df: DataFrame,
       xCol: String,
       yCol: String,
-      zCol: String,
-      dp: Int = 6): DataFrame = {
+      zCol: String): DataFrame = {
     def d(c: String): Column = col(c).cast("decimal(38,0)")
     val agg = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull && col(zCol).isNotNull)
@@ -2614,13 +2600,13 @@ object Sketches {
     val tStat = rp * sqrt((n.cast("double") - 3.0) / (lit(1.0) - rp * rp))
     agg.select(
       n.cast("long").as("n"),
-      when(varsOk, round(rxy, dp)).as("r_xy"),
-      when(varsOk, round(rxz, dp)).as("r_xz"),
-      when(varsOk, round(ryz, dp)).as("r_yz"),
-      when(varsOk, when(denSq > 0, round(rp, dp))).as("r_partial"),
+      when(varsOk, round(rxy, 6)).as("r_xy"),
+      when(varsOk, round(rxz, 6)).as("r_xz"),
+      when(varsOk, round(ryz, 6)).as("r_yz"),
+      when(varsOk, when(denSq > 0, round(rp, 6))).as("r_partial"),
       when(varsOk,
         when(denSq > 0 && n > 3,
-          when(rp * rp < 1.0, round(tStat, dp)))).as("t_stat"))
+          when(rp * rp < 1.0, round(tStat, 6)))).as("t_stat"))
   }
 
   /** Jonckheere–Terpstra ordered-alternative k-sample test (Terpstra 1952;
@@ -2646,8 +2632,7 @@ object Sketches {
   def jonckheereTerpstra(
       df: DataFrame,
       groupCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = df.select(
       col(groupCol).cast("long").as("__g"), col(valueCol).cast("long").as("__v"))
@@ -2693,9 +2678,9 @@ object Sketches {
     agg.select(
       bigN.cast("long").as("n"),
       col("__k").as("k"),
-      when(col("__k") > 1, round(col("__jt2").cast("double") / 2.0, dp))
+      when(col("__k") > 1, round(col("__jt2").cast("double") / 2.0, 6))
         .as("jt"),
-      when(col("__k") > 1 && varI > 0, round(z, dp)).as("z"))
+      when(col("__k") > 1 && varI > 0, round(z, 6)).as("z"))
   }
 
   /** Ordinal-association suite — Goodman–Kruskal γ (1954), Somers' D in
@@ -2719,8 +2704,7 @@ object Sketches {
   def ordinalAssociation(
       df: DataFrame,
       aCol: String,
-      bCol: String,
-      dp: Int = 6): DataFrame = {
+      bCol: String): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = df.select(
       col(aCol).cast("long").as("__a"), col(bCol).cast("long").as("__b"))
@@ -2767,16 +2751,16 @@ object Sketches {
     agg.select(
       col("__n").cast("long").as("n"),
       when(denG > 0,
-        round(num.cast("double") / denG.cast("double"), dp)).as("gamma"),
+        round(num.cast("double") / denG.cast("double"), 6)).as("gamma"),
       when(den1 > 0,
-        round((num * 2).cast("double") / den1.cast("double"), dp))
+        round((num * 2).cast("double") / den1.cast("double"), 6))
         .as("somers_d_yx"),
       when(den2 > 0,
-        round((num * 2).cast("double") / den2.cast("double"), dp))
+        round((num * 2).cast("double") / den2.cast("double"), 6))
         .as("somers_d_xy"),
       when(den1 > 0 && den2 > 0,
         round((num * 2).cast("double") /
-          sqrt(den1.cast("double") * den2.cast("double")), dp)).as("tau_b"))
+          sqrt(den1.cast("double") * den2.cast("double")), 6)).as("tau_b"))
   }
 
   /** ROC / PR operating-point table — the CURVE behind X199's tie-aware
@@ -2792,8 +2776,7 @@ object Sketches {
   def rocCurve(
       df: DataFrame,
       scoreCol: String,
-      labelCol: String,
-      dp: Int = 6): DataFrame = {
+      labelCol: String): DataFrame = {
     val sc = col(scoreCol).cast("long")
     val hist = df.filter(sc.isNotNull && col(labelCol).isNotNull)
       .groupBy(sc.as("threshold"))
@@ -2814,14 +2797,14 @@ object Sketches {
       (col("__tP") - col("tp")).as("fn"),
       (col("__tN") - col("fp")).as("tn"),
       when(col("__tP") > 0,
-        round(col("tp").cast("double") / col("__tP").cast("double"), dp))
+        round(col("tp").cast("double") / col("__tP").cast("double"), 6))
         .as("tpr"),
       when(col("__tN") > 0,
-        round(col("fp").cast("double") / col("__tN").cast("double"), dp))
+        round(col("fp").cast("double") / col("__tN").cast("double"), 6))
         .as("fpr"),
       when(col("tp") + col("fp") > 0,
         round(col("tp").cast("double") / (col("tp") + col("fp")).cast("double"),
-          dp)).as("precision"))
+          6)).as("precision"))
       .orderBy(col("threshold").desc)
   }
 
@@ -2843,8 +2826,7 @@ object Sketches {
       df: DataFrame,
       groupCol: String,
       valueCol: String,
-      zCrit: Double,
-      dp: Int = 6): DataFrame = {
+      zCrit: Double): DataFrame = {
     require(zCrit > 0, s"zCrit must be > 0, got $zCrit")
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = df.select(col(groupCol).cast("string").as("__g"),
@@ -2878,9 +2860,9 @@ object Sketches {
       (dec(col("__n1")) * dec(col("__n2")) * 2).cast("double")
     val z = round(num / sqrt(sigma2 *
       (lit(1.0) / col("__n1").cast("double") +
-        lit(1.0) / col("__n2").cast("double"))), dp)
+        lit(1.0) / col("__n2").cast("double"))), 6)
     val meanRank = (c: String, n: String) =>
-      round(col(c).cast("double") / (col(n).cast("double") * 2.0), dp)
+      round(col(c).cast("double") / (col(n).cast("double") * 2.0), 6)
     pairs.select(
       col("g1"), col("g2"),
       col("__n1").as("n_1"), col("__n2").as("n_2"),
@@ -2908,8 +2890,7 @@ object Sketches {
       df: DataFrame,
       keyCols: Seq[String],
       successCol: String,
-      z: Double = 1.959964,
-      dp: Int = 6): DataFrame = {
+      z: Double = 1.959964): DataFrame = {
     require(keyCols.nonEmpty, "at least one key column required")
     require(z > 0, s"z must be > 0, got $z")
     val keys = keyCols.map(col)
@@ -2926,9 +2907,9 @@ object Sketches {
       lit(z2) / (nD * nD * 4.0))
     per.select(keys ++ Seq(
       col("n"), col("x"),
-      round(p, dp).as("p_hat"),
-      round(greatest(lit(0.0), (center - half) / denom), dp).as("ci_lo"),
-      round(least(lit(1.0), (center + half) / denom), dp).as("ci_hi")): _*)
+      round(p, 6).as("p_hat"),
+      round(greatest(lit(0.0), (center - half) / denom), 6).as("ci_lo"),
+      round(least(lit(1.0), (center + half) / denom), 6).as("ci_hi")): _*)
   }
 
   /** Distribution-free quantile confidence interval (order-statistic
@@ -3001,8 +2982,7 @@ object Sketches {
   def bowkerTest(
       df: DataFrame,
       beforeCol: String,
-      afterCol: String,
-      dp: Int = 6): DataFrame = {
+      afterCol: String): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val cells = df
       .filter(col(beforeCol).isNotNull && col(afterCol).isNotNull)
@@ -3027,7 +3007,7 @@ object Sketches {
     agg.crossJoin(broadcast(nAgg)).select(
       col("__n").as("n"),
       col("__dof").as("dof"),
-      when(col("__dof") > 0, round(col("__chi2").cast("double"), dp))
+      when(col("__dof") > 0, round(col("__chi2").cast("double"), 6))
         .as("chi2_bowker"))
   }
 
@@ -3050,33 +3030,17 @@ object Sketches {
       df: DataFrame,
       blockCol: String,
       treatmentCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = df.select(
       col(blockCol).as("__b"), col(treatmentCol).as("__t"),
       col(valueCol).cast("long").as("__v"))
-    val kDf = base.agg(count_distinct(col("__t")).as("__k"))
-    val complete = base.groupBy(col("__b"))
-      .agg(count(lit(1)).as("__cnt"), count_distinct(col("__t")).as("__td"))
-      .crossJoin(broadcast(kDf))
-      .filter(col("__cnt") === col("__k") && col("__td") === col("__k"))
-      .select(col("__b"))
-    val kept = base.join(complete, Seq("__b"), "left_semi")
-    val hist = kept.groupBy(col("__b"), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val wCum = Window.partitionBy(col("__b")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val r2 = hist
-      .withColumn("__before", sum(col("__c")).over(wCum) - col("__c"))
-      .select(col("__b"), col("__v"),
-        (col("__before") * 2 + col("__c") + 1).as("__r2"))
+    val kept = completeBlocks(base)
+    val hist = blockValueCounts(kept)
     val tieAgg = hist.agg(
       coalesce(sum(dec(col("__c")) * dec(col("__c")) * dec(col("__c"))
         - dec(col("__c"))), lit(0).cast("decimal(38,0)")).as("__T"))
-    val perT = kept.join(r2, Seq("__b", "__v"))
-      .groupBy(col("__t"))
-      .agg(sum(col("__r2")).as("__R2"), count(lit(1)).as("__nb"))
+    val perT = treatmentRankSums(kept, hist)
     val agg = perT.agg(
       max(col("__nb")).as("__m"),
       count(lit(1)).as("__kk"),
@@ -3091,9 +3055,9 @@ object Sketches {
       col("__m").as("n_blocks"), col("__kk").as("k"),
       (col("__kk") - 1).as("dof"),
       when(den > 0,
-        round(num.cast("double") / den.cast("double"), dp)).as("w"),
+        round(num.cast("double") / den.cast("double"), 6)).as("w"),
       when(den > 0,
-        round((num * m * (k - 1)).cast("double") / den.cast("double"), dp))
+        round((num * m * (k - 1)).cast("double") / den.cast("double"), 6))
         .as("chi2"))
   }
 
@@ -3118,30 +3082,13 @@ object Sketches {
       df: DataFrame,
       blockCol: String,
       treatmentCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = df.select(
       col(blockCol).as("__b"), col(treatmentCol).cast("long").as("__t"),
       col(valueCol).cast("long").as("__v"))
-    val kDf = base.agg(count_distinct(col("__t")).as("__k"))
-    val complete = base.groupBy(col("__b"))
-      .agg(count(lit(1)).as("__cnt"), count_distinct(col("__t")).as("__td"))
-      .crossJoin(broadcast(kDf))
-      .filter(col("__cnt") === col("__k") && col("__td") === col("__k"))
-      .select(col("__b"))
-    val kept = base.join(complete, Seq("__b"), "left_semi")
-    val hist = kept.groupBy(col("__b"), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val wCum = Window.partitionBy(col("__b")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val r2 = hist
-      .withColumn("__before", sum(col("__c")).over(wCum) - col("__c"))
-      .select(col("__b"), col("__v"),
-        (col("__before") * 2 + col("__c") + 1).as("__r2"))
-    val perT = kept.join(r2, Seq("__b", "__v"))
-      .groupBy(col("__t"))
-      .agg(sum(col("__r2")).as("__R2"), count(lit(1)).as("__nb"))
+    val kept = completeBlocks(base)
+    val perT = treatmentRankSums(kept, blockValueCounts(kept))
     // hypothesized-order rank over the k-row treatment table
     val ranked = perT.withColumn("__cj",
       row_number().over(Window.orderBy(col("__t"))))
@@ -3156,8 +3103,8 @@ object Sketches {
       (lit(4.0) * sqrt(varI.cast("double") / 144.0))
     agg.select(
       col("__m").as("n_blocks"), col("__kk").as("k"),
-      round(col("__L2").cast("double") / 2.0, dp).as("l_stat"),
-      when(col("__kk") > 1 && varI > 0, round(z, dp)).as("z"))
+      round(col("__L2").cast("double") / 2.0, 6).as("l_stat"),
+      when(col("__kk") > 1 && varI > 0, round(z, 6)).as("z"))
   }
 
   /** McNemar's test (1947) for PAIRED binary classifiers/rules on the same
@@ -3169,8 +3116,7 @@ object Sketches {
   def mcnemar(
       df: DataFrame,
       ruleACol: String,
-      ruleBCol: String,
-      dp: Int = 6): DataFrame = {
+      ruleBCol: String): DataFrame = {
     val a = col(ruleACol); val b = col(ruleBCol)
     val agg = df.agg(
       count(lit(1)).as("n"),
@@ -3182,10 +3128,10 @@ object Sketches {
     agg.select(
       col("n"), col("b_only"), col("c_only"),
       when(disc > 0,
-        round((diff * diff).cast("double") / disc.cast("double"), dp))
+        round((diff * diff).cast("double") / disc.cast("double"), 6))
         .as("chi2"),
       when(disc > 0,
-        round((corr * corr).cast("double") / disc.cast("double"), dp))
+        round((corr * corr).cast("double") / disc.cast("double"), 6))
         .as("chi2_corrected"))
   }
 
@@ -3562,17 +3508,6 @@ object Sketches {
           .as("tau_b")): _*)
   }
 
-  /** Mantel–Haenszel pooled odds ratio across strata — the confounder-
-    * adjusted association readout of stratified surveillance analysis
-    * (the reference domain's workhorse next to age/sex standardization):
-    * per stratum the 2×2 cell counts (a, b, c, d), OR_MH =
-    * Σ(aᵢdᵢ/nᵢ) / Σ(bᵢcᵢ/nᵢ), reported beside the crude (collapsed) OR
-    * whose divergence IS the confounding signal (Simpson's paradox gate).
-    * One partial agg to k stratum rows; cell products are exact longs,
-    * per-stratum terms single divisions, the only float SUMs span k
-    * strata. Strata where any margin is empty still contribute their
-    * defined terms (0 numerators drop out naturally); a zero denominator
-    * yields NULL. */
   /** Cochran–Armitage trend test (1954/55) — "does the success rate climb
     * MONOTONICALLY with an ordered dose/severity score?" — the ordered
     * alternative the unordered independence family (X65/X224) has no power
@@ -3698,6 +3633,17 @@ object Sketches {
         when(col("__fits"), col("__pq").cast("double") / 1e12).as("p_two_sided"))
   }
 
+  /** Mantel–Haenszel pooled odds ratio across strata — the confounder-
+    * adjusted association readout of stratified surveillance analysis
+    * (the reference domain's workhorse next to age/sex standardization):
+    * per stratum the 2×2 cell counts (a, b, c, d), OR_MH =
+    * Σ(aᵢdᵢ/nᵢ) / Σ(bᵢcᵢ/nᵢ), reported beside the crude (collapsed) OR
+    * whose divergence IS the confounding signal (Simpson's paradox gate).
+    * One partial agg to k stratum rows; cell products are exact longs,
+    * per-stratum terms single divisions, the only float SUMs span k
+    * strata. Strata where any margin is empty still contribute their
+    * defined terms (0 numerators drop out naturally); a zero denominator
+    * yields NULL. */
   def mantelHaenszel(
       df: DataFrame,
       strataCol: String,
@@ -4050,8 +3996,7 @@ object Sketches {
   def woeIv(
       df: DataFrame,
       catCol: String,
-      labelCol: String,
-      dp: Int = 6): DataFrame = {
+      labelCol: String): DataFrame = {
     val agg = df.groupBy(col(catCol).as("category"))
       .agg(
         sum(when(col(labelCol), 0L).otherwise(1L)).as("n_good"),
@@ -4069,9 +4014,9 @@ object Sketches {
         when(valid, floor(diff * woe * 1e9 + 0.5).cast("long")).otherwise(0L))
       .select(
         col("category"), col("n_good"), col("n_bad"),
-        when(valid, round(woe, dp)).as("woe"),
-        when(valid, round(diff * woe, dp)).as("iv_term"),
-        round(sum(col("__tq")).over(wAll).cast("double") / lit(1e9), dp)
+        when(valid, round(woe, 6)).as("woe"),
+        when(valid, round(diff * woe, 6)).as("iv_term"),
+        round(sum(col("__tq")).over(wAll).cast("double") / lit(1e9), 6)
           .as("iv"))
   }
 
@@ -4093,8 +4038,7 @@ object Sketches {
       scoreCol: String,
       labelCol: String,
       tieCols: Seq[String],
-      buckets: Int = 10,
-      dp: Int = 6): DataFrame = {
+      buckets: Int = 10): DataFrame = {
     val keys = keyCols.map(col)
     val w = Window.partitionBy(keys: _*)
       .orderBy(col(scoreCol).desc +: tieCols.map(col): _*)
@@ -4113,13 +4057,13 @@ object Sketches {
       .withColumn("__rc", sum(col("responders")).over(wCum))
       .select(keys ++ Seq(
         col("__b").as("bucket"), col("n"), col("responders"),
-        round(col("responders").cast("double") / col("n").cast("double"), dp)
+        round(col("responders").cast("double") / col("n").cast("double"), 6)
           .as("response_rate"),
         when(col("__rt") > 0,
           round((col("responders") * col("__nt")).cast("double") /
-            (col("n") * col("__rt")).cast("double"), dp)).as("lift"),
+            (col("n") * col("__rt")).cast("double"), 6)).as("lift"),
         when(col("__rt") > 0,
-          round(col("__rc").cast("double") / col("__rt").cast("double"), dp))
+          round(col("__rc").cast("double") / col("__rt").cast("double"), 6))
           .as("cum_gain")): _*)
   }
 
@@ -4140,8 +4084,7 @@ object Sketches {
   def rocAuc(
       df: DataFrame,
       labelCol: String,
-      scoreCol: String,
-      dp: Int = 6): DataFrame = {
+      scoreCol: String): DataFrame = {
     val hist = df
       .groupBy(col(scoreCol).cast("long").as("__v"))
       .agg(
@@ -4158,8 +4101,21 @@ object Sketches {
     t.agg(
       n1.as("n_pos"),
       n0.as("n_neg"),
-      round(num.cast("double") / (n1 * n0 * lit(2)).cast("double"), dp)
+      round(num.cast("double") / (n1 * n0 * lit(2)).cast("double"), 6)
         .as("auc"))
+  }
+
+  /** Each row's score quantized to 1e-9 (`__pq`), its 0/1 label (`__y`)
+    * and its equal-width bin of [0, 1] (`__bin`, an integer chain; p = 1.0
+    * clamps into the top bin) — the head of [[reliabilityDiagram]],
+    * [[calibrationError]] and [[brierDecomposition]]. */
+  private def scoreBins(df: DataFrame, scoreCol: String, labelCol: String, bins: Int): DataFrame = {
+    require(bins >= 2, s"bins must be >= 2, got $bins")
+    val pq = floor(col(scoreCol).cast("double") * 1000000000.0 + 0.5).cast("long")
+    df.select(pq.as("__pq"), when(col(labelCol), 1L).otherwise(0L).as("__y"))
+      .withColumn("__bin",
+        least(floor((col("__pq") * bins).cast("double") / 1000000000.0).cast("long"),
+          lit(bins - 1L)))
   }
 
   /** Reliability diagram — the calibration readout next to [[rocAuc]]'s
@@ -4177,21 +4133,15 @@ object Sketches {
       df: DataFrame,
       scoreCol: String,
       labelCol: String,
-      bins: Int = 10,
-      dp: Int = 6): DataFrame = {
-    require(bins >= 2, s"bins must be >= 2, got $bins")
-    val pq = floor(col(scoreCol).cast("double") * 1000000000.0 + 0.5).cast("long")
-    df.select(pq.as("__pq"), when(col(labelCol), 1L).otherwise(0L).as("__y"))
-      .withColumn("__bin",
-        least(floor((col("__pq") * bins).cast("double") / 1000000000.0).cast("long"),
-          lit(bins - 1L)))
+      bins: Int = 10): DataFrame = {
+    scoreBins(df, scoreCol, labelCol, bins)
       .groupBy(col("__bin").as("bin"))
       .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
         sum(col("__pq")).as("__sp"))
       .select(col("bin"), col("n"), col("n_pos"),
-        round(col("__sp").cast("double") / 1000000000.0 / col("n").cast("double"), dp)
+        round(col("__sp").cast("double") / 1000000000.0 / col("n").cast("double"), 6)
           .as("mean_pred"),
-        round(col("n_pos").cast("double") / col("n").cast("double"), dp)
+        round(col("n_pos").cast("double") / col("n").cast("double"), 6)
           .as("frac_pos"))
   }
 
@@ -4208,15 +4158,8 @@ object Sketches {
       df: DataFrame,
       scoreCol: String,
       labelCol: String,
-      bins: Int = 10,
-      dp: Int = 6): DataFrame = {
-    require(bins >= 2, s"bins must be >= 2, got $bins")
-    val pq = floor(col(scoreCol).cast("double") * 1000000000.0 + 0.5).cast("long")
-    val perBin = df
-      .select(pq.as("__pq"), when(col(labelCol), 1L).otherwise(0L).as("__y"))
-      .withColumn("__bin",
-        least(floor((col("__pq") * bins).cast("double") / 1000000000.0).cast("long"),
-          lit(bins - 1L)))
+      bins: Int = 10): DataFrame = {
+    val perBin = scoreBins(df, scoreCol, labelCol, bins)
       .groupBy(col("__bin"))
       .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__pos"),
         sum(col("__pq")).as("__sp"))
@@ -4233,8 +4176,8 @@ object Sketches {
         sum(col("__wgap")).as("__sw"),
         max(col("__gap")).as("__mx"))
       .select(col("n"), col("n_bins_used"),
-        round(col("__sw").cast("double") / col("n").cast("double"), dp).as("ece"),
-        round(col("__mx").cast("double"), dp).as("mce"))
+        round(col("__sw").cast("double") / col("n").cast("double"), 6).as("ece"),
+        round(col("__mx").cast("double"), 6).as("mce"))
   }
 
   /** Murphy (1973) decomposition of the Brier score — calibration
@@ -4253,14 +4196,8 @@ object Sketches {
       df: DataFrame,
       scoreCol: String,
       labelCol: String,
-      bins: Int = 10,
-      dp: Int = 6): DataFrame = {
-    require(bins >= 2, s"bins must be >= 2, got $bins")
-    val pq = floor(col(scoreCol).cast("double") * 1000000000.0 + 0.5).cast("long")
-    val rows = df.select(pq.as("__pq"), when(col(labelCol), 1L).otherwise(0L).as("__y"))
-      .withColumn("__bin",
-        least(floor((col("__pq") * bins).cast("double") / 1000000000.0).cast("long"),
-          lit(bins - 1L)))
+      bins: Int = 10): DataFrame = {
+    val rows = scoreBins(df, scoreCol, labelCol, bins)
       .withColumn("__p", col("__pq").cast("double") / 1000000000.0)
       .withColumn("__bt",
         floor((col("__p") - col("__y").cast("double"))
@@ -4285,13 +4222,13 @@ object Sketches {
           .cast("decimal(30,12)"))
     terms.agg(
       max(col("__tot")).as("n"),
-      round(sum(col("__sbt")).cast("double") / 1000000000.0 / max(col("__tot")).cast("double"), dp)
+      round(sum(col("__sbt")).cast("double") / 1000000000.0 / max(col("__tot")).cast("double"), 6)
         .as("brier"),
-      round(sum(col("__rel")).cast("double") / max(col("__tot")).cast("double"), dp)
+      round(sum(col("__rel")).cast("double") / max(col("__tot")).cast("double"), 6)
         .as("reliability"),
-      round(sum(col("__res")).cast("double") / max(col("__tot")).cast("double"), dp)
+      round(sum(col("__res")).cast("double") / max(col("__tot")).cast("double"), 6)
         .as("resolution"),
-      round(max(col("__o")) * (lit(1.0) - max(col("__o"))), dp).as("uncertainty"))
+      round(max(col("__o")) * (lit(1.0) - max(col("__o"))), 6).as("uncertainty"))
   }
 
   /** Exact tie-aware average precision (the PR-curve area by the step
@@ -4308,8 +4245,7 @@ object Sketches {
   def averagePrecision(
       df: DataFrame,
       labelCol: String,
-      scoreCol: String,
-      dp: Int = 6): DataFrame = {
+      scoreCol: String): DataFrame = {
     val hist = df.groupBy(col(scoreCol).cast("long").as("__v"))
       .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("__p"),
         count(lit(1)).as("__c"))
@@ -4325,7 +4261,7 @@ object Sketches {
             (col("__np") * col("__cn")).cast("double") * 1e9 + 0.5).cast("long")))
           .as("__apq"))
       .select(col("n_pos"), col("n_neg"),
-        round(col("__apq").cast("double") / 1e9, dp).as("ap"))
+        round(col("__apq").cast("double") / 1e9, 6).as("ap"))
   }
 
   /** Two-sample Cramér–von Mises statistic + 1-D energy distance between
@@ -4348,23 +4284,10 @@ object Sketches {
       groupCol: String,
       valueCol: String,
       groupA: String,
-      groupB: String,
-      dp: Int = 6): DataFrame = {
-    val isA = col(groupCol) === lit(groupA)
-    val hist = df
-      .filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(valueCol).cast("long").as("__v"))
-      .agg(
-        sum(when(isA, 1L).otherwise(0L)).as("__cA"),
-        sum(when(!isA, 1L).otherwise(0L)).as("__cB"))
+      groupB: String): DataFrame = {
+    val hist = wassersteinCounts(df, groupCol, valueCol, groupA, groupB)
     def d(c: Column): Column = c.cast("decimal(38,0)")
-    val tot = hist.agg(
-      sum(col("__cA")).as("__nA"), sum(col("__cB")).as("__nB"))
-    val t = Relational
-      .globalRunningSums(hist, Seq(col("__v")),
-        Seq("__cA" -> "__FA", "__cB" -> "__FB"), leadOf = Some("__v" -> "__nxt"))
-      .crossJoin(broadcast(tot))
-      .withColumn("__dx", coalesce(col("__nxt") - col("__v"), lit(0L)))
+    val t = ecdfSteps(hist)
       .withColumn("__num",
         d(col("__FA") * col("__nB") - col("__FB") * col("__nA")) *
           d(col("__FA") * col("__nB") - col("__FB") * col("__nA")))
@@ -4377,10 +4300,10 @@ object Sketches {
       nB.as("n_b"),
       // T = Σ c·(FA·m − FB·n)² / ((n+m)²·n·m)
       round(sum(col("__num") * d(col("__cA") + col("__cB"))).cast("double") /
-        (d(nTot) * d(nTot) * d(nA) * d(nB)).cast("double"), dp).as("cvm"),
+        (d(nTot) * d(nTot) * d(nA) * d(nB)).cast("double"), 6).as("cvm"),
       // D² = 2·Σ (FA·m − FB·n)²·Δx / (n·m)²
       round((sum(col("__num") * d(col("__dx"))) * 2).cast("double") /
-        (d(nA) * d(nB) * d(nA) * d(nB)).cast("double"), dp)
+        (d(nA) * d(nB) * d(nA) * d(nB)).cast("double"), 6)
         .as("energy_sq"))
   }
 
@@ -4416,15 +4339,8 @@ object Sketches {
       groupCol: String,
       valueCol: String,
       groupA: String,
-      groupB: String,
-      dp: Int = 6): DataFrame = {
-    val isA = col(groupCol) === lit(groupA)
-    val hist = df
-      .filter(col(groupCol).isin(groupA, groupB))
-      .groupBy(col(valueCol).cast("long").as("__v"))
-      .agg(
-        sum(when(isA, 1L).otherwise(0L)).as("__cA"),
-        sum(when(!isA, 1L).otherwise(0L)).as("__cB"))
+      groupB: String): DataFrame = {
+    val hist = wassersteinCounts(df, groupCol, valueCol, groupA, groupB)
     def d(c: Column): Column = c.cast("decimal(38,0)")
     val tot = hist.agg(
       sum(col("__cA")).as("__nA"), sum(col("__cB")).as("__nB"))
@@ -4449,7 +4365,7 @@ object Sketches {
         col("n_a"), col("n_b"),
         round(
           (col("__sq").cast("double") / 1e9) /
-            (d(col("n_a")) * d(col("n_b"))).cast("double"), dp).as("ad"))
+            (d(col("n_a")) * d(col("n_b"))).cast("double"), 6).as("ad"))
   }
 
   /** 1-D Wasserstein-1 (earth mover's) distance between two groups' value
@@ -4474,10 +4390,8 @@ object Sketches {
       groupCol: String,
       valueCol: String,
       groupA: String,
-      groupB: String,
-      dp: Int = 6): DataFrame =
-    wassersteinAssemble(wassersteinCounts(df, groupCol, valueCol, groupA, groupB),
-      groupA, groupB, dp)
+      groupB: String): DataFrame =
+    wassersteinAssemble(wassersteinCounts(df, groupCol, valueCol, groupA, groupB), groupA, groupB)
 
   /** Count half of [[wasserstein1d]]: per distinct value, the count of
     * each group's rows — a streaming twin's state. */
@@ -4502,16 +4416,9 @@ object Sketches {
   def wassersteinAssemble(
       hist: DataFrame,
       groupA: String,
-      groupB: String,
-      dp: Int = 6): DataFrame = {
+      groupB: String): DataFrame = {
     def d(c: Column): Column = c.cast("decimal(38,0)")
-    val tot = hist.agg(
-      sum(col("__cA")).as("__nA"), sum(col("__cB")).as("__nB"))
-    val t = Relational
-      .globalRunningSums(hist, Seq(col("__v")),
-        Seq("__cA" -> "__FA", "__cB" -> "__FB"), leadOf = Some("__v" -> "__nxt"))
-      .crossJoin(broadcast(tot))
-      .withColumn("__dx", coalesce(col("__nxt") - col("__v"), lit(0L)))
+    val t = ecdfSteps(hist)
       .withColumn("__step",
         d(abs(col("__FA") * col("__nB") - col("__FB") * col("__nA"))) *
           d(col("__dx")))
@@ -4521,8 +4428,22 @@ object Sketches {
       max(col("__nA")).as("n_a"),
       max(col("__nB")).as("n_b"),
       round(sum(col("__step")).cast("double") /
-        (max(col("__nA")) * max(col("__nB"))).cast("double"), dp)
+        (max(col("__nA")) * max(col("__nB"))).cast("double"), 6)
         .as("wasserstein"))
+  }
+
+  /** Both groups' running counts (`__FA`, `__FB`) and totals (`__nA`,
+    * `__nB`) over a [[wassersteinCounts]] table, with each distinct value's
+    * step width `__dx` to the next — the ECDF pass of [[cramerVonMises]] and
+    * [[wassersteinAssemble]] ([[andersonDarling]] needs no step width). */
+  private def ecdfSteps(hist: DataFrame): DataFrame = {
+    val tot = hist.agg(
+      sum(col("__cA")).as("__nA"), sum(col("__cB")).as("__nB"))
+    Relational
+      .globalRunningSums(hist, Seq(col("__v")),
+        Seq("__cA" -> "__FA", "__cB" -> "__FB"), leadOf = Some("__v" -> "__nxt"))
+      .crossJoin(broadcast(tot))
+      .withColumn("__dx", coalesce(col("__nxt") - col("__v"), lit(0L)))
   }
 
   /** Herfindahl–Hirschman concentration index per key (Herfindahl 1950;
@@ -4540,8 +4461,7 @@ object Sketches {
       df: DataFrame,
       keys: Seq[String],
       entityCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     require(keys.nonEmpty, "at least one key required (use a constant for global)")
     val k = keys.map(col)
     val ent = df.groupBy(k :+ col(entityCol).as("__e"): _*)
@@ -4556,9 +4476,9 @@ object Sketches {
     val nd = col("n_entities").cast("double")
     per.select(k ++ Seq(
       col("n_entities"),
-      when(col("__sv") > 0, round(hhi, dp)).as("hhi"),
+      when(col("__sv") > 0, round(hhi, 6)).as("hhi"),
       when(col("__sv") > 0 && col("n_entities") > 1,
-        round((hhi - lit(1.0) / nd) / (lit(1.0) - lit(1.0) / nd), dp)).as("hhi_norm")): _*)
+        round((hhi - lit(1.0) / nd) / (lit(1.0) - lit(1.0) / nd), 6)).as("hhi_norm")): _*)
   }
 
   /** Lin's concordance correlation coefficient (Lin 1989) — CONTINUOUS
@@ -4574,8 +4494,7 @@ object Sketches {
   def concordanceCcc(
       df: DataFrame,
       xCol: String,
-      yCol: String,
-      dp: Int = 6): DataFrame = {
+      yCol: String): DataFrame = {
     val x = col(xCol).cast("double")
     val y = col(yCol).cast("double")
     def q(c: Column): Column = sum(floor(c * 1e6 + 0.5).cast("long"))
@@ -4593,10 +4512,10 @@ object Sketches {
     a.select(
       col("n"),
       when(vxN > 0 && vyN > 0,
-        round(covN / sqrt(vxN * vyN), dp)).as("pearson_r"),
+        round(covN / sqrt(vxN * vyN), 6)).as("pearson_r"),
       when(denom =!= 0.0,
-        round(lit(2.0) * covN / denom, dp)).as("ccc"),
-      round(dMean, dp).as("location_shift"))
+        round(lit(2.0) * covN / denom, 6)).as("ccc"),
+      round(dMean, 6).as("location_shift"))
   }
 
   /** CUPED variance reduction (Deng, Xu, Kohavi & Walker 2013) — the

@@ -201,31 +201,37 @@ object Temporal {
   }
 
   /** Fill calendar gaps per key (resample-to-regular-grid): build each key's
-    * month spine `sequence(min, max)` — a narrow generate off one aggregate
+    * spine `sequence(min, max, step)` — a narrow generate off one aggregate
     * row per key, never a global calendar cross-join — left-join the actual
     * per-period rows back on (key, period), and zero-fill the holes. The
     * spine agg and the join share the key columns, so with AQE both hash
     * exchanges co-partition; per-key spine width is bounded by the calendar
-    * span, not the data volume, so the fanout stays O(keys × months) at any
-    * scale. The declarative twin of the reference's "complete missing
-    * quarters with zeros" reporting step.
+    * span, not the data volume, so the fanout stays O(keys × periods) at any
+    * scale. With no key columns the whole frame is one series. The
+    * declarative twin of the reference's "complete missing quarters with
+    * zeros" reporting step.
     *
+    * @param step     the grid step: a positive whole number of months
+    *                 (`Period.ofMonths`) or of days (`Period.ofDays`)
     * @param defaults fill value per column for spine rows with no match
     */
   def fillGaps(
       df: DataFrame,
       keyCols: Seq[String],
       periodCol: String,
-      stepMonths: Int,
+      step: java.time.Period,
       defaults: Seq[(String, Column)]): DataFrame = {
-    require(stepMonths >= 1, s"stepMonths must be >= 1, got $stepMonths")
+    val (months, days) = (step.toTotalMonths, step.getDays)
+    require((months > 0 && days == 0) || (months == 0 && days > 0),
+      s"step must be a positive whole number of months or of days, got $step")
+    val interval = if (days > 0) s"$days DAY" else s"$months MONTH"
     val keys = keyCols.map(col)
     val spine = df
       .groupBy(keys: _*)
       .agg(min(col(periodCol)).as("__lo"), max(col(periodCol)).as("__hi"))
       .select(
         keys :+ explode(
-          sequence(col("__lo"), col("__hi"), expr(s"INTERVAL $stepMonths MONTH")))
+          sequence(col("__lo"), col("__hi"), expr(s"INTERVAL $interval")))
           .as(periodCol): _*)
     val joined = spine.join(df, keyCols :+ periodCol, "left")
     defaults.foldLeft(joined) { case (acc, (c, dflt)) =>
@@ -552,7 +558,7 @@ object Temporal {
     * as literals at plan-build time, numerator and denominator accumulate
     * in a FIXED left-to-right expression order (IEEE doubles are
     * deterministic given order), missing lags at a series head contribute
-    * to neither sum, and the ratio rounds at `dp`. An oracle replays the
+    * to neither sum, and the ratio rounds at 6 dp. An oracle replays the
     * identical literals in the identical order.
     *
     * Appends `ewma` to every input row. */
@@ -562,8 +568,7 @@ object Temporal {
       orderCols: Seq[String],
       valueCol: String,
       alpha: Double,
-      lookback: Int = 8,
-      dp: Int = 6): DataFrame = {
+      lookback: Int = 8): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
     require(lookback >= 1, s"lookback must be >= 1, got $lookback")
     val weights = (0 until lookback).map(j =>
@@ -580,7 +585,7 @@ object Temporal {
       val den = weights.zip(lags).map { case (wj, x) =>
         when(x.isNotNull, lit(wj)).otherwise(lit(0.0)) }.reduceLeft(_ + _)
       // all-null frame -> NULL, not a 0/0 NaN
-      frame.withColumn("ewma", when(den > 0, round(num / den, dp)))
+      frame.withColumn("ewma", when(den > 0, round(num / den, 6)))
     }
     if (lookback == 1) build(df, Window.partitionBy(keyCols.map(col): _*)
       .orderBy(orderCols.map(col): _*))
@@ -596,7 +601,7 @@ object Temporal {
     * r = (nΣxy−ΣxΣy)/√((nΣx²−(Σx)²)·(nΣy²−(Σy)²)) with the two exact
     * denominators cast to double BEFORE the product+sqrt (IEEE
     * multiplication and correctly-rounded sqrt — deterministic on any
-    * engine), rounded at `dp`. Degenerate frames (either series constant)
+    * engine), rounded at 6 dp. Degenerate frames (either series constant)
     * yield NULL. `orderCols` must be a total order per key for the frame —
     * and therefore the output — to be engine-deterministic.
     *
@@ -608,7 +613,6 @@ object Temporal {
       xCol: String,
       yCol: String,
       lookback: Int,
-      dp: Int = 6,
       numPartitions: Option[Int] = None): DataFrame = {
     require(lookback >= 2, s"lookback must be >= 2, got $lookback")
     // LONG sufficient statistics, not decimal: decimal window aggregation
@@ -632,7 +636,7 @@ object Temporal {
         "corr",
         when(denx > 0 && deny > 0,
           round(num.cast("double") /
-            sqrt(denx.cast("double") * deny.cast("double")), dp)))
+            sqrt(denx.cast("double") * deny.cast("double")), 6)))
     }
     // LOW-CARDINALITY KEY ESCAPE: the borrowed-tail sliding-frame
     // discipline, factored as [[Relational.slidingByKey]] — parallelism
@@ -782,14 +786,12 @@ object Temporal {
     * @param eventCol    boolean — true when the event was OBSERVED, false
     *                    when the subject was censored at that duration
     * @param keyCols     stratification keys (one curve per combination)
-    * @param dp          rounding applied to the survival estimate
     */
   def kaplanMeier(
       df: DataFrame,
       durationCol: String,
       eventCol: String,
-      keyCols: Seq[String] = Nil,
-      dp: Int = 6): DataFrame = {
+      keyCols: Seq[String] = Nil): DataFrame = {
     val keys = keyCols.map(col)
     val grouped = df
       .groupBy(keys :+ col(durationCol).cast("long").as("duration"): _*)
@@ -813,13 +815,13 @@ object Temporal {
           when(col("d_events") > 0,
             log(greatest(lit(1e-300),
               lit(1.0) - col("d_events").cast("double") / col("n_risk"))))
-            .otherwise(lit(0.0))).over(wCum)), dp))
+            .otherwise(lit(0.0))).over(wCum)), 6))
       // Nelson–Aalen cumulative hazard H(t) = Σ d_i/n_i — the companion
       // estimator off the same at-risk scaffolding (Aalen 1978); the
       // ordered window accumulates the per-step exact divisions in
       // duration order, the same sequential chain any engine replays
       .withColumn("cum_hazard",
-        round(sum(col("d_events").cast("double") / col("n_risk")).over(wCum), dp))
+        round(sum(col("d_events").cast("double") / col("n_risk")).over(wCum), 6))
       .drop("__at_t")
   }
 
@@ -842,8 +844,7 @@ object Temporal {
       df: DataFrame,
       durationCol: String,
       eventCol: String,
-      keyCols: Seq[String] = Nil,
-      dp: Int = 6): DataFrame = {
+      keyCols: Seq[String] = Nil): DataFrame = {
     val keys = keyCols.map(col)
     val grouped = df
       .groupBy(keys :+ col(durationCol).cast("long").as("duration"): _*)
@@ -872,12 +873,12 @@ object Temporal {
     stepped.select(
       keys ++ Seq(
         col("duration"), col("d_events"), col("n_risk"),
-        round(sUn, dp).as("survival"),
-        when(col("__dead") === 0, round(seUn, dp)).as("se"),
+        round(sUn, 6).as("survival"),
+        when(col("__dead") === 0, round(seUn, 6)).as("se"),
         when(col("__dead") === 0,
-          round(greatest(lit(0.0), sUn - lit(1.959964) * seUn), dp)).as("ci_lo"),
+          round(greatest(lit(0.0), sUn - lit(1.959964) * seUn), 6)).as("ci_lo"),
         when(col("__dead") === 0,
-          round(least(lit(1.0), sUn + lit(1.959964) * seUn), dp)).as("ci_hi")): _*)
+          round(least(lit(1.0), sUn + lit(1.959964) * seUn), 6)).as("ci_hi")): _*)
   }
 
   /** Seasonal-naive backtest with MASE (Hyndman & Koehler 2006) — the
@@ -902,8 +903,7 @@ object Temporal {
       orderCol: String,
       valueCol: String,
       period: Int,
-      holdout: Int,
-      dp: Int = 6): DataFrame = {
+      holdout: Int): DataFrame = {
     require(period >= 1, s"period must be >= 1, got $period")
     require(holdout >= 1, s"holdout must be >= 1, got $holdout")
     val keys = keyCols.map(col)
@@ -929,12 +929,12 @@ object Temporal {
     val naiveMae = col("__san").cast("double") / col("__nn").cast("double")
     agg.select(keys ++ Seq(
       col("n_test"),
-      when(col("n_test") > 0, round(mae, dp)).as("mae"),
+      when(col("n_test") > 0, round(mae, 6)).as("mae"),
       when(col("n_test") > 0,
-        round(sqrt(col("__sse").cast("double") / col("n_test").cast("double")), dp))
+        round(sqrt(col("__sse").cast("double") / col("n_test").cast("double")), 6))
         .as("rmse"),
       when(col("n_test") > 0 && col("__nn") > 0 && col("__san") > 0,
-        round(mae / naiveMae, dp)).as("mase")): _*)
+        round(mae / naiveMae, 6)).as("mase")): _*)
   }
 
   /** Restricted mean survival time (Irwin 1949; Royston–Parmar 2013) —
@@ -955,11 +955,10 @@ object Temporal {
       durationCol: String,
       eventCol: String,
       horizon: Long,
-      keyCols: Seq[String] = Nil,
-      dp: Int = 6): DataFrame = {
+      keyCols: Seq[String] = Nil): DataFrame = {
     require(horizon > 0, s"horizon must be > 0, got $horizon")
     val keys = keyCols.map(col)
-    val km = kaplanMeier(df, durationCol, eventCol, keyCols, dp)
+    val km = kaplanMeier(df, durationCol, eventCol, keyCols)
     val w = Window.partitionBy(keys: _*).orderBy(col("duration"))
     val wAll = Window.partitionBy(keys: _*)
     val h = lit(horizon)
@@ -977,7 +976,7 @@ object Temporal {
         count(lit(1)).as("n_times"))
       .select(keys ++ Seq(
         lit(horizon).as("horizon"),
-        round(col("__h0").cast("double") + col("__sq").cast("double") / 1e6, dp)
+        round(col("__h0").cast("double") + col("__sq").cast("double") / 1e6, 6)
           .as("rmst"),
         col("n_times")): _*)
   }
@@ -1268,8 +1267,7 @@ object Temporal {
       df: DataFrame,
       durationCol: String,
       causeCol: String,
-      keyCols: Seq[String] = Nil,
-      dp: Int = 6): DataFrame = {
+      keyCols: Seq[String] = Nil): DataFrame = {
     val keys = keyCols.map(col)
     val grouped = df
       .groupBy(keys :+ col(durationCol).cast("long").as("duration"): _*)
@@ -1291,13 +1289,13 @@ object Temporal {
       .otherwise(lit(0.0))
     def cif(d: Column): Column =
       round(sum(col("__sprev") * d.cast("double") / col("n_risk").cast("double"))
-        .over(wCum), dp)
+        .over(wCum), 6)
     grouped
       .withColumn("n_risk", nRisk)
       .withColumn("__sprev", exp(coalesce(sum(logTerm).over(wPrev), lit(0.0))))
       .withColumn("cif1", cif(col("d1")))
       .withColumn("cif2", cif(col("d2")))
-      .withColumn("survival", round(exp(sum(logTerm).over(wCum)), dp))
+      .withColumn("survival", round(exp(sum(logTerm).over(wCum)), 6))
       .drop("__at_t", "__sprev")
   }
 
@@ -1335,8 +1333,7 @@ object Temporal {
       eventCol: String,
       groupCol: String,
       groupA: String,
-      groupB: String,
-      dp: Int = 6): DataFrame = {
+      groupB: String): DataFrame = {
     val isA = col(groupCol) === lit(groupA)
     val grouped = df
       .filter(col(groupCol).isin(groupA, groupB))
@@ -1377,9 +1374,9 @@ object Temporal {
       lit(groupA).as("group_a"),
       lit(groupB).as("group_b"),
       oA.as("observed_a"),
-      round(eA, dp).as("expected_a"),
-      round(vA, dp).as("variance_a"),
-      round((oA.cast("double") - eA) * (oA.cast("double") - eA) / vA, dp)
+      round(eA, 6).as("expected_a"),
+      round(vA, 6).as("variance_a"),
+      round((oA.cast("double") - eA) * (oA.cast("double") - eA) / vA, 6)
         .as("chi2"))
   }
 
@@ -1466,8 +1463,7 @@ object Temporal {
       orderCol: String,
       valueCol: String,
       phaseCol: String,
-      period: Int,
-      dp: Int = 6): DataFrame = {
+      period: Int): DataFrame = {
     val dec = seasonalDecompose(series, orderCol, valueCol, phaseCol, period)
       .filter(col("remainder").isNotNull)
     def q(c: Column) = floor(c * 1e6 + 0.5).cast("long")
@@ -1490,11 +1486,11 @@ object Temporal {
       col("n"),
       when(vs =!= 0,
         round(greatest(lit(0.0),
-          lit(1.0) - vr.cast("double") / vs.cast("double")), dp))
+          lit(1.0) - vr.cast("double") / vs.cast("double")), 6))
         .as("seasonal_strength"),
       when(vt =!= 0,
         round(greatest(lit(0.0),
-          lit(1.0) - vr.cast("double") / vt.cast("double")), dp))
+          lit(1.0) - vr.cast("double") / vt.cast("double")), 6))
         .as("trend_strength"))
   }
 
@@ -2088,8 +2084,7 @@ object Temporal {
       df: DataFrame,
       keyCols: Seq[String],
       orderCol: String,
-      valueCol: String,
-      dp: Int = 6): DataFrame = {
+      valueCol: String): DataFrame = {
     val k = keyCols.map(col)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(k: _*).orderBy(col(orderCol))
@@ -2128,7 +2123,7 @@ object Temporal {
         k ++ Seq(
           col("n"),
           when(col("__den") =!= 0,
-            round(col("__num").cast("double") / col("__den").cast("double"), dp))
+            round(col("__num").cast("double") / col("__den").cast("double"), 6))
             .as("dw")): _*)
   }
 

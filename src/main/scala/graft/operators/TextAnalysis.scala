@@ -560,24 +560,6 @@ object TextAnalysis {
       k = topPerDoc)
   }
 
-  /** BM25 ranked retrieval (Robertson–Spärck Jones; the Lucene/Elasticsearch
-    * scoring function) as a pure relational pipeline — full-text top-k
-    * search over the corpus without an external index. For each (query,
-    * document) pair, `score = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))`
-    * with the Lucene idf `ln((N - df + 0.5)/(df + 0.5) + 1)`.
-    *
-    * Scale shape: the corpus side explodes to tokens but filters to the
-    * QUERY vocabulary before the only corpus shuffle, so the aggregate
-    * carries (doc, term) pairs for matched terms only; document frequency
-    * and corpus stats are vocabulary-bounded broadcasts; the final top-k
-    * runs on the native [[graft.plans.TopKPerKeyPlan]] bounded heaps — no
-    * Window, no full sort, no driver action.
-    *
-    * Determinism: each term's contribution quantizes to micro-units
-    * (`floor(x·1e6 + 0.5)` as long) BEFORE the per-(query,doc) sum, so the
-    * aggregation is exact long arithmetic — partition-order-independent and
-    * engine-portable; ranking ties break by document id. Tokenization is
-    * the portable lowercase space-split used corpus-wide. */
   /** Inverted-index build — the materialized retrieval artifact BEHIND
     * [[bm25TopK]]'s scoring (ship the index, not the corpus): one row per
     * term carrying document frequency and the top-`maxPostings` postings
@@ -613,6 +595,24 @@ object TextAnalysis {
           .as("postings"))
   }
 
+  /** BM25 ranked retrieval (Robertson–Spärck Jones; the Lucene/Elasticsearch
+    * scoring function) as a pure relational pipeline — full-text top-k
+    * search over the corpus without an external index. For each (query,
+    * document) pair, `score = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))`
+    * with the Lucene idf `ln((N - df + 0.5)/(df + 0.5) + 1)`.
+    *
+    * Scale shape: the corpus side explodes to tokens but filters to the
+    * QUERY vocabulary before the only corpus shuffle, so the aggregate
+    * carries (doc, term) pairs for matched terms only; document frequency
+    * and corpus stats are vocabulary-bounded broadcasts; the final top-k
+    * runs on the native [[graft.plans.TopKPerKeyPlan]] bounded heaps — no
+    * Window, no full sort, no driver action.
+    *
+    * Determinism: each term's contribution quantizes to micro-units
+    * (`floor(x·1e6 + 0.5)` as long) BEFORE the per-(query,doc) sum, so the
+    * aggregation is exact long arithmetic — partition-order-independent and
+    * engine-portable; ranking ties break by document id. Tokenization is
+    * the portable lowercase space-split used corpus-wide. */
   def bm25TopK(
       df: DataFrame,
       idCol: String,
@@ -681,8 +681,7 @@ object TextAnalysis {
       df: DataFrame,
       sourceCol: String,
       textCol: String,
-      topWords: Int = 30,
-      dp: Int = 6): DataFrame = {
+      topWords: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(
       col(sourceCol).as("__s"),
@@ -721,7 +720,7 @@ object TextAnalysis {
         count(lit(1)).as("m_words"),
         round(sum(floor(abs(col("__z") - col("__z2")) * 1e9 + 0.5)
           .cast("long")).cast("double") / lit(1e9) /
-          count(lit(1)).cast("double"), dp).as("delta"))
+          count(lit(1)).cast("double"), 6).as("delta"))
       .select(col("__s").as("source_a"), col("__s2").as("source_b"),
         col("m_words"), col("delta"))
   }
@@ -1347,22 +1346,6 @@ object TextAnalysis {
       .orderBy(idCol)
   }
 
-  /** Corpus-level boilerplate-line removal (the CCNet/C4 "common line"
-    * filter): a line occurring in at least `minDocs` DISTINCT documents is
-    * boilerplate (headers, footers, cookie banners, nav chrome) and is
-    * stripped from every document it appears in. Three scalable pieces:
-    * (1) the line→document frequency is two partial hash aggregates —
-    * (line, doc) dedup then a line count — so shuffles carry distinct keys
-    * only; (2) the boilerplate set (lines crossing the threshold) is small
-    * by construction and joins back as a broadcast left-anti; (3) documents
-    * reassemble with ONE groupBy(id) using the deterministic
-    * `sort_array(collect_list(struct(pos, line)))` ordered-agg form (see
-    * [[graft.operators.Sampling.packText]]). Documents whose every line was
-    * boilerplate survive with empty text via the final right-semi-style
-    * join against the original ids.
-    *
-    * Returns (id, text_clean, n_lines_kept, n_lines_removed).
-    */
   /** Vocabulary truncation / UNK rewrite — the preprocessing step in front
     * of any fixed-vocabulary tokenizer or count featurizer (and the
     * classic neural-LM input prep): whitespace tokens outside the kept
@@ -1406,6 +1389,22 @@ object TextAnalysis {
         sum(when(col("__in").isNull, 1L).otherwise(0L)).as("n_oov"))
   }
 
+  /** Corpus-level boilerplate-line removal (the CCNet/C4 "common line"
+    * filter): a line occurring in at least `minDocs` DISTINCT documents is
+    * boilerplate (headers, footers, cookie banners, nav chrome) and is
+    * stripped from every document it appears in. Three scalable pieces:
+    * (1) the line→document frequency is two partial hash aggregates —
+    * (line, doc) dedup then a line count — so shuffles carry distinct keys
+    * only; (2) the boilerplate set (lines crossing the threshold) is small
+    * by construction and joins back as a broadcast left-anti; (3) documents
+    * reassemble with ONE groupBy(id) using the deterministic
+    * `sort_array(collect_list(struct(pos, line)))` ordered-agg form (see
+    * [[graft.operators.Sampling.packText]]). Documents whose every line was
+    * boilerplate survive with empty text via the final right-semi-style
+    * join against the original ids.
+    *
+    * Returns (id, text_clean, n_lines_kept, n_lines_removed).
+    */
   def removeBoilerplate(
       df: DataFrame,
       idCol: String,

@@ -11,8 +11,7 @@ import org.apache.spark.sql.types.StructType
   * JSON mappings (extract_naomi_data.py:137) and CSV/Excel sheets
   * (extract_chu_data.py:36). graft exposes the same surface as thin wrappers
   * over Spark's vectorized readers so predicate pushdown / column pruning /
-  * partition pruning all apply (Excel is out of scope in this container; its
-  * role — grids of typed cells — is covered by the csv reader).
+  * partition pruning all apply. Excel workbooks are read by [[Xlsx.grid]].
   *
   * Parquet schemas are cached per `SparkSession`. Inferring a parquet
   * schema starts a Spark job that reads a file footer; a declared schema

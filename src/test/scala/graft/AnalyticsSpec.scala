@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import java.time.Period
+
 import graft.operators.{Funnel, Graph, Models, Relational, Sketches, Skew, Temporal, TextAnalysis}
 
 /** Round-5 analytics operators: boilerplate removal, gap fill, profiler,
@@ -64,7 +66,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("k", "month", "n")
       .withColumn("month", col("month").cast("date"))
     val out = Temporal.fillGaps(
-      df, Seq("k"), "month", stepMonths = 1, defaults = Seq("n" -> lit(0L)))
+      df, Seq("k"), "month", Period.ofMonths(1), defaults = Seq("n" -> lit(0L)))
       .orderBy("k", "month")
       .select(col("k"), col("month").cast("string"), col("n"))
       .as[(Long, String, Long)]
@@ -75,6 +77,33 @@ class AnalyticsSpec extends SparkSpec {
       (1L, "2024-03-01", 0L),
       (1L, "2024-04-01", 7L),
       (2L, "2024-02-01", 1L)))
+  }
+
+  test("fillGaps at day grain: gap days 0, keyless form, single-day key, empty input") {
+    val df = Seq(
+      (1L, "2024-01-30", 5L),
+      (1L, "2024-02-02", 7L),
+      (2L, "2024-01-31", 1L))
+      .toDF("k", "day", "n")
+      .withColumn("day", col("day").cast("timestamp"))
+    val fill = (in: DataFrame, keys: Seq[String]) => Temporal.fillGaps(
+      in, keys, "day", Period.ofDays(1), defaults = Seq("n" -> lit(0L)))
+    def rows(out: DataFrame) =
+      out.select(col("day").cast("date").cast("string"), col("n"))
+        .orderBy("day").as[(String, Long)].collect()
+    assert(rows(fill(df.filter(col("k") === 1L), Seq("k"))) === Array(
+      ("2024-01-30", 5L), ("2024-01-31", 0L), ("2024-02-01", 0L), ("2024-02-02", 7L)))
+    assert(fill(df, Seq("k")).filter(col("k") === 2L).count() === 1L)
+    // keyless: one series over the whole frame, the two keys' rows at their own day
+    val keyless = df.groupBy("day").agg(sum("n").as("n"))
+    assert(rows(fill(keyless, Nil)) === Array(
+      ("2024-01-30", 5L), ("2024-01-31", 1L), ("2024-02-01", 0L), ("2024-02-02", 7L)))
+    assert(fill(df.filter(lit(false)), Seq("k")).count() === 0L)
+    Seq(Period.ofDays(0), Period.ofMonths(-1), Period.ofDays(-2)).foreach { p =>
+      intercept[IllegalArgumentException] {
+        Temporal.fillGaps(df, Seq("k"), "day", p, defaults = Nil)
+      }
+    }
   }
 
   test("profile reports per-column null/distinct/min/max in one pass") {
