@@ -529,8 +529,49 @@ object Relational {
     * `when(col.is_not_null().any()).then(sum).otherwise(None)`
     * (extract_pec_data.py:141-152). Kept as a named operator so intent is
     * explicit at call sites; compiles to a partial (map-side) aggregate.
+    * Sum a decimal of precision up to 18 with the exact long form below.
     */
   def sumIfAnyNotNull(c: Column): Column = sum(c)
+
+  /** Low bits of an unscaled value summed apart from the high bits by the
+    * decimal [[sumIfAnyNotNull]]: 2^40 rows of values below 2^23 sum below
+    * 2^63. */
+  private val SumLowBits = 23
+
+  /** [[sumIfAnyNotNull]] of `c` cast to `decimal(precision, scale)` (doubles
+    * round HALF_UP, as the cast does), returning what Spark's `sum` of that
+    * cast returns: the type `decimal(precision + 10, scale)`, the same value,
+    * NULL for a group whose inputs are all NULL and for empty input without
+    * grouping keys.
+    *
+    * Not Spark's `sum`: that keeps a `decimal(28, s)` buffer, and every
+    * update turns a BigInteger into bytes and back (Spark's own
+    * `DecimalAggregates` rewrite to a long sum stops at precision 8). This
+    * sums each unscaled long `u` as two longs, the high bits `u >> 23` and
+    * the low bits `u & (2^23 - 1)`, which is exact for negative `u` too, and
+    * rebuilds the decimal from `hi * 2^23 + lo` once per group. One long
+    * would overflow on 11 rows of 9e15 at scale 2 (9e17 unscaled each).
+    *
+    * Bound: exact for a group of at most 2^40 rows whose absolute unscaled
+    * values sum below 2^85 (about 3.9e25), against decimal(28, s)'s own
+    * 10^28. Past it a long sum overflows, which ANSI mode (on in graft's
+    * sessions) raises as ARITHMETIC_OVERFLOW rather than answering.
+    *
+    * One `Column`, so it serves as the `agg` and the `extraAggs` of
+    * [[Reshape.pivotConditionalWide]].
+    */
+  def sumIfAnyNotNull(c: Column, precision: Int, scale: Int): Column = {
+    require(precision <= 18, s"sumIfAnyNotNull sums unscaled longs: precision $precision > 18")
+    import java.math.BigDecimal
+    import org.apache.spark.sql.GraftSql
+    import org.apache.spark.sql.catalyst.expressions.UnscaledValue
+    import org.apache.spark.sql.types.DecimalType
+    val u = GraftSql.column(UnscaledValue(GraftSql.expression(c.cast(DecimalType(precision, scale)))))
+    val hi = sum(shiftright(u, SumLowBits)).cast(DecimalType(20, 0))
+    val lo = sum(u.bitwiseAND(lit((1L << SumLowBits) - 1)))
+    ((hi * lit(new BigDecimal(1L << SumLowBits)) + lo) * lit(BigDecimal.ONE.movePointLeft(scale)))
+      .cast(DecimalType(precision + 10, scale))
+  }
 
   /** Native top-k rows per key via graft's custom physical operator
     * ([[graft.plans.TopKPerKeyPlan]]): bounded per-key heaps shrink every

@@ -36,7 +36,10 @@ object Reshape {
     * a single partial hash aggregate with one shuffle — no intermediate
     * grain, no second aggregation, no join. This is also what Spark's
     * `pivot(knownKeys)` compiles to internally; the explicit form exists so
-    * non-pivoted aggregates can share the pass. */
+    * non-pivoted aggregates can share the pass. `agg` sums by default; to
+    * sum a decimal of precision up to 18 pass the exact long-accumulator
+    * `Relational.sumIfAnyNotNull(_, precision, scale)`, which casts the
+    * value itself. */
   def pivotConditionalWide(
       df: DataFrame,
       idCols: Seq[String],

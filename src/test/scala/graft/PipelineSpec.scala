@@ -1,6 +1,28 @@
 package graft
 
-class PipelineSpec extends SparkSpec {
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
+import org.scalatest.BeforeAndAfterAll
+
+import graft.sources.Tables
+
+class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private lazy val recorder = new JobRecorder(spark)
+  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(recorder)
+  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(recorder)
+
+  /** A copy of `sf` under a temp directory whose lineitem table is `edit`
+    * of the original; the tables the report joins are copied unchanged. */
+  private def withLineitem(edit: DataFrame => DataFrame): String = {
+    val dir = SparkEntry.tempDir("graft-pipeline-")
+    Seq("orders", "customer", "nation", "region").foreach { t =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(sf, s"$t.parquet"), dir.toPath.resolve(s"$t.parquet"))
+    }
+    edit(Tables.lineitem(spark, sf)).write.parquet(s"$dir/lineitem.parquet")
+    dir.toString
+  }
 
   test("integrationReport produces a validated wide report at sf0.001") {
     val out = Pipeline.integrationReport(spark, sf)
@@ -20,5 +42,29 @@ class PipelineSpec extends SparkSpec {
         case _ => ()
       }
     }
+  }
+
+  test("integrationReport runs 6 jobs per call") {
+    Pipeline.integrationReport(spark, sf).collect()
+    recorder.flush()
+    recorder.clear()
+    Pipeline.integrationReport(spark, sf).collect()
+    recorder.flush()
+    assert(recorder.jobs.size == 6, recorder.jobs)
+  }
+
+  test("integrationReport over an empty lineitem gives an empty report with the same columns") {
+    val out = Pipeline.integrationReport(spark, withLineitem(_.limit(0)))
+    assert(out.collect().isEmpty)
+    assert(out.schema == Pipeline.integrationReport(spark, sf).schema)
+  }
+
+  test("integrationReport over all-null quantities and taxes gives NULL measures") {
+    val out = Pipeline.integrationReport(spark, withLineitem(
+      _.withColumn("l_quantity", lit(null).cast("double"))
+        .withColumn("l_tax", lit(null).cast("double"))))
+    val rows = out.collect()
+    assert(rows.nonEmpty)
+    assert(rows.forall(r => (3 until 8).forall(r.isNullAt)), rows.take(3).mkString)
   }
 }

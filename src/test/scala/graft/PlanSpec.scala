@@ -2,9 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.DateFormatClass
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.types.DecimalType
 
 import graft.sources.Tables
 
@@ -16,6 +21,12 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** The physical plan as planned, inside AQE's wrapper. */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
 
   test("r9 additions keep their scale shapes: broadcasts, bounded heaps, no cartesians") {
     // G-test / chi-square windows run on the CELL table, not the corpus
@@ -140,11 +151,27 @@ class PlanSpec extends SparkSpec {
     assert(aggs == 2, s"expected 1 fused aggregate (2 nodes), got $aggs:\n$p")
   }
 
-  test("pipeline e2e: tags are computed at dimension and order grain, never above the lineitem join") {
-    val root = Pipeline.integrationReport(spark, sf).queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
+  test("pipeline e2e: the partial aggregate sums on longs, with no decimal buffer") {
+    val root = physical(Pipeline.integrationReport(spark, sf))
+    val partials = root.collect {
+      case a: HashAggregateExec
+          if a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial) => a
     }
+    assert(partials.size == 1, root)
+    val buffers = partials.head.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes)
+    assert(buffers.nonEmpty && !buffers.exists(_.dataType.isInstanceOf[DecimalType]), buffers)
+  }
+
+  test("pipeline e2e: the report-grain tail sorts in one task, with no range shuffle") {
+    val root = physical(Pipeline.integrationReport(spark, sf))
+    val ranges = root.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.isEmpty, root)
+  }
+
+  test("pipeline e2e: tags are computed at dimension and order grain, never above the lineitem join") {
+    val root = physical(Pipeline.integrationReport(spark, sf))
     def tags(p: SparkPlan): Seq[String] = p.expressions.flatMap(_.collect {
       case i: StaticInvoke if i.functionName == "normalize" => "normalize"
       case _: DateFormatClass => "date_format"

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,6 +30,60 @@ class RelationalSpec extends SparkSpec {
       .collect()
     assert(out(0).getDouble(1) == 1.0)
     assert(out(1).isNullAt(1))
+  }
+
+  /** The decimal `sumIfAnyNotNull` against Spark's `sum` of the same cast,
+    * per group of `g`: same type, same values. */
+  private def assertSparkSum(df: DataFrame, precision: Int, scale: Int): Unit = {
+    val ours = df.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), precision, scale).as("s"))
+    val theirs = df.groupBy("g").agg(sum(col("v").cast(DecimalType(precision, scale))).as("s"))
+    assert(ours.schema("s").dataType == DecimalType(precision + 10, scale))
+    assert(ours.schema == theirs.schema)
+    assert(ours.orderBy("g").collect().toSeq == theirs.orderBy("g").collect().toSeq)
+  }
+
+  test("decimal sumIfAnyNotNull equals Spark's decimal sum over seeded, negative, tie and null values") {
+    val rnd = new scala.util.Random(11)
+    val seeded = (1 to 2000).map { i =>
+      val v = i % 7 match {
+        case 0 => None
+        case 1 => Some(rnd.nextGaussian() * 1e5)
+        case 2 => Some(-rnd.nextDouble() * 1e4)
+        case _ => Some(math.round(rnd.nextDouble() * 2e5 - 1e5) / 1000.0)
+      }
+      (s"g${i % 13}", v)
+    }
+    val ties = Seq(1.005, 2.675, -1.005, -2.675, 0.125, -0.125, 1.0005, -2.6755)
+      .map(v => ("ties", Option(v)))
+    val df = (seeded ++ ties :+ (("nulls", None: Option[Double]))).toDF("g", "v")
+    Seq((18, 2), (18, 4), (12, 3), (8, 2), (18, 0)).foreach { case (p, s) =>
+      assertSparkSum(df, p, s)
+    }
+  }
+
+  test("decimal sumIfAnyNotNull stays exact where one long would overflow") {
+    val big = (Seq.fill(100)(("pos", 9e15)) ++ Seq.fill(100)(("neg", -9e15)) ++
+      Seq.fill(50)(("mix", 9e15)) ++ Seq.fill(50)(("mix", -8.99e15))).toDF("g", "v")
+    // 100 x 9e15 at scale 2 is 9e19 unscaled, past Long.MaxValue
+    val total = new java.math.BigDecimal("9e15").setScale(2).multiply(new java.math.BigDecimal(100))
+    assert(total.unscaledValue.compareTo(java.math.BigInteger.valueOf(Long.MaxValue)) > 0)
+    assertSparkSum(big, 18, 2)
+    val pos = big.filter(col("g") === "pos")
+      .agg(Relational.sumIfAnyNotNull(col("v"), 18, 2).as("s")).head.getDecimal(0)
+    assert(pos.compareTo(total) == 0, pos)
+  }
+
+  test("decimal sumIfAnyNotNull: all-null group, empty input, one row, precision past 18") {
+    val df = Seq(("a", Some(1.25)), ("b", None), ("b", None)).toDF("g", "v")
+    val out = df.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), 18, 2).as("s"))
+      .orderBy("g").collect()
+    assert(out(0).getDecimal(1).compareTo(new java.math.BigDecimal("1.25")) == 0)
+    assert(out(1).isNullAt(1))
+    val empty = df.limit(0)
+    assert(empty.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), 18, 2)).collect().isEmpty)
+    val global = empty.agg(Relational.sumIfAnyNotNull(col("v"), 18, 2)).collect()
+    assert(global.length == 1 && global(0).isNullAt(0))
+    intercept[IllegalArgumentException](Relational.sumIfAnyNotNull(col("v"), 19, 2))
   }
 
   test("alignToSchema adds typed null columns in canonical order") {
