@@ -95,8 +95,8 @@ object Pipeline {
       keyCol = "indicator",
       valueCol = col("l_quantity"),
       knownKeys = Seq("A_F", "N_F", "N_O", "R_F"),
-      extraAggs = Seq(Relational.sumIfAnyNotNull(col("l_tax"), 18, 4) -> "tax_total"),
-      agg = Relational.sumIfAnyNotNull(_, 18, 2))
+      extraAggs = Seq(Relational.sumIfAnyNotNull(col("l_tax"), 4) -> "tax_total"),
+      agg = Relational.sumIfAnyNotNull(_, 2))
 
     // 6. rule-matrix validation, keep the consistent rows
     val rules = Seq(

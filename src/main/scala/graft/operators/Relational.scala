@@ -529,7 +529,7 @@ object Relational {
     * `when(col.is_not_null().any()).then(sum).otherwise(None)`
     * (extract_pec_data.py:141-152). Kept as a named operator so intent is
     * explicit at call sites; compiles to a partial (map-side) aggregate.
-    * Sum a decimal of precision up to 18 with the exact long form below.
+    * Sum a decimal(18, s) with the exact long form below.
     */
   def sumIfAnyNotNull(c: Column): Column = sum(c)
 
@@ -538,11 +538,10 @@ object Relational {
     * 2^63. */
   private val SumLowBits = 23
 
-  /** [[sumIfAnyNotNull]] of `c` cast to `decimal(precision, scale)` (doubles
-    * round HALF_UP, as the cast does), returning what Spark's `sum` of that
-    * cast returns: the type `decimal(precision + 10, scale)`, the same value,
-    * NULL for a group whose inputs are all NULL and for empty input without
-    * grouping keys.
+  /** [[sumIfAnyNotNull]] of `c` cast to `decimal(18, scale)` (doubles round
+    * HALF_UP, as the cast does), returning what Spark's `sum` of that cast
+    * returns: the type `decimal(28, scale)`, the same value, NULL for a group
+    * whose inputs are all NULL and for empty input without grouping keys.
     *
     * Not Spark's `sum`: that keeps a `decimal(28, s)` buffer, and every
     * update turns a BigInteger into bytes and back (Spark's own
@@ -550,7 +549,10 @@ object Relational {
     * sums each unscaled long `u` as two longs, the high bits `u >> 23` and
     * the low bits `u & (2^23 - 1)`, which is exact for negative `u` too, and
     * rebuilds the decimal from `hi * 2^23 + lo` once per group. One long
-    * would overflow on 11 rows of 9e15 at scale 2 (9e17 unscaled each).
+    * would overflow on 11 rows of 9e15 at scale 2 (9e17 unscaled each). The
+    * rebuild reads each long sum as unscaled at `scale` (decimal(19, scale))
+    * before multiplying, so no intermediate passes 28 digits and no scale is
+    * cut for any `scale` up to 18.
     *
     * Bound: exact for a group of at most 2^40 rows whose absolute unscaled
     * values sum below 2^85 (about 3.9e25), against decimal(28, s)'s own
@@ -560,17 +562,16 @@ object Relational {
     * One `Column`, so it serves as the `agg` and the `extraAggs` of
     * [[Reshape.pivotConditionalWide]].
     */
-  def sumIfAnyNotNull(c: Column, precision: Int, scale: Int): Column = {
-    require(precision <= 18, s"sumIfAnyNotNull sums unscaled longs: precision $precision > 18")
+  def sumIfAnyNotNull(c: Column, scale: Int): Column = {
     import java.math.BigDecimal
     import org.apache.spark.sql.GraftSql
-    import org.apache.spark.sql.catalyst.expressions.UnscaledValue
+    import org.apache.spark.sql.catalyst.expressions.{MakeDecimal, UnscaledValue}
     import org.apache.spark.sql.types.DecimalType
-    val u = GraftSql.column(UnscaledValue(GraftSql.expression(c.cast(DecimalType(precision, scale)))))
-    val hi = sum(shiftright(u, SumLowBits)).cast(DecimalType(20, 0))
-    val lo = sum(u.bitwiseAND(lit((1L << SumLowBits) - 1)))
-    ((hi * lit(new BigDecimal(1L << SumLowBits)) + lo) * lit(BigDecimal.ONE.movePointLeft(scale)))
-      .cast(DecimalType(precision + 10, scale))
+    val u = GraftSql.column(UnscaledValue(GraftSql.expression(c.cast(DecimalType(18, scale)))))
+    def unscaled(l: Column) = GraftSql.column(MakeDecimal(GraftSql.expression(l), 19, scale))
+    val hi = unscaled(sum(shiftright(u, SumLowBits)))
+    val lo = unscaled(sum(u.bitwiseAND(lit((1L << SumLowBits) - 1))))
+    (hi * lit(new BigDecimal(1L << SumLowBits)) + lo).cast(DecimalType(28, scale))
   }
 
   /** Native top-k rows per key via graft's custom physical operator

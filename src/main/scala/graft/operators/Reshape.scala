@@ -37,9 +37,8 @@ object Reshape {
     * grain, no second aggregation, no join. This is also what Spark's
     * `pivot(knownKeys)` compiles to internally; the explicit form exists so
     * non-pivoted aggregates can share the pass. `agg` sums by default; to
-    * sum a decimal of precision up to 18 pass the exact long-accumulator
-    * `Relational.sumIfAnyNotNull(_, precision, scale)`, which casts the
-    * value itself. */
+    * sum a decimal(18, s) pass the exact long-accumulator
+    * `Relational.sumIfAnyNotNull(_, s)`, which casts the value itself. */
   def pivotConditionalWide(
       df: DataFrame,
       idCols: Seq[String],

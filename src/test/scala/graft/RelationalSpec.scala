@@ -34,10 +34,10 @@ class RelationalSpec extends SparkSpec {
 
   /** The decimal `sumIfAnyNotNull` against Spark's `sum` of the same cast,
     * per group of `g`: same type, same values. */
-  private def assertSparkSum(df: DataFrame, precision: Int, scale: Int): Unit = {
-    val ours = df.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), precision, scale).as("s"))
-    val theirs = df.groupBy("g").agg(sum(col("v").cast(DecimalType(precision, scale))).as("s"))
-    assert(ours.schema("s").dataType == DecimalType(precision + 10, scale))
+  private def assertSparkSum(df: DataFrame, scale: Int): Unit = {
+    val ours = df.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), scale).as("s"))
+    val theirs = df.groupBy("g").agg(sum(col("v").cast(DecimalType(18, scale))).as("s"))
+    assert(ours.schema("s").dataType == DecimalType(28, scale))
     assert(ours.schema == theirs.schema)
     assert(ours.orderBy("g").collect().toSeq == theirs.orderBy("g").collect().toSeq)
   }
@@ -56,9 +56,17 @@ class RelationalSpec extends SparkSpec {
     val ties = Seq(1.005, 2.675, -1.005, -2.675, 0.125, -0.125, 1.0005, -2.6755)
       .map(v => ("ties", Option(v)))
     val df = (seeded ++ ties :+ (("nulls", None: Option[Double]))).toDF("g", "v")
-    Seq((18, 2), (18, 4), (12, 3), (8, 2), (18, 0)).foreach { case (p, s) =>
-      assertSparkSum(df, p, s)
-    }
+    Seq(0, 2, 4).foreach(assertSparkSum(df, _))
+  }
+
+  test("decimal sumIfAnyNotNull keeps every digit of a scale past 8") {
+    // a rebuild typed past 38 digits would cut these sums to 8 decimals
+    val tiny = Seq(("a", 1e-10), ("b", -3e-10), ("b", 7e-10), ("c", 1.23456789012e-4),
+      ("d", 5e-18), ("d", -2e-18)).toDF("g", "v")
+    Seq(10, 12, 18).foreach(assertSparkSum(tiny, _))
+    val a = tiny.filter(col("g") === "a")
+      .agg(Relational.sumIfAnyNotNull(col("v"), 10).as("s")).head.getDecimal(0)
+    assert(a.compareTo(new java.math.BigDecimal("1e-10")) == 0, a)
   }
 
   test("decimal sumIfAnyNotNull stays exact where one long would overflow") {
@@ -67,23 +75,22 @@ class RelationalSpec extends SparkSpec {
     // 100 x 9e15 at scale 2 is 9e19 unscaled, past Long.MaxValue
     val total = new java.math.BigDecimal("9e15").setScale(2).multiply(new java.math.BigDecimal(100))
     assert(total.unscaledValue.compareTo(java.math.BigInteger.valueOf(Long.MaxValue)) > 0)
-    assertSparkSum(big, 18, 2)
+    assertSparkSum(big, 2)
     val pos = big.filter(col("g") === "pos")
-      .agg(Relational.sumIfAnyNotNull(col("v"), 18, 2).as("s")).head.getDecimal(0)
+      .agg(Relational.sumIfAnyNotNull(col("v"), 2).as("s")).head.getDecimal(0)
     assert(pos.compareTo(total) == 0, pos)
   }
 
-  test("decimal sumIfAnyNotNull: all-null group, empty input, one row, precision past 18") {
+  test("decimal sumIfAnyNotNull: all-null group, empty input, one row") {
     val df = Seq(("a", Some(1.25)), ("b", None), ("b", None)).toDF("g", "v")
-    val out = df.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), 18, 2).as("s"))
+    val out = df.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), 2).as("s"))
       .orderBy("g").collect()
     assert(out(0).getDecimal(1).compareTo(new java.math.BigDecimal("1.25")) == 0)
     assert(out(1).isNullAt(1))
     val empty = df.limit(0)
-    assert(empty.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), 18, 2)).collect().isEmpty)
-    val global = empty.agg(Relational.sumIfAnyNotNull(col("v"), 18, 2)).collect()
+    assert(empty.groupBy("g").agg(Relational.sumIfAnyNotNull(col("v"), 2)).collect().isEmpty)
+    val global = empty.agg(Relational.sumIfAnyNotNull(col("v"), 2)).collect()
     assert(global.length == 1 && global(0).isNullAt(0))
-    intercept[IllegalArgumentException](Relational.sumIfAnyNotNull(col("v"), 19, 2))
   }
 
   test("alignToSchema adds typed null columns in canonical order") {
